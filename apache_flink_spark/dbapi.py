@@ -11,7 +11,11 @@ wire consumer shaped to Python's DB-API instead of JDBC:
 - ``connect(url)`` speaks the REST protocol of
   :class:`~apache_flink_spark.sql_gateway.SqlGatewayRestEndpoint` (a pure
   HTTP client — usable against any live endpoint, same as
-  ``jdbc:flink://host:port``);
+  ``jdbc:flink://host:port``). Each connection keeps one HTTP/1.1
+  connection alive. Results are long-polled, not status-polled: after the
+  submit, the first result fetch waits at the gateway until the statement
+  ends, so a short statement costs a submit, two page fetches and the
+  close of its drained operation;
 - ``connect(service=svc)`` binds an in-process
   :class:`~apache_flink_spark.sql_gateway.SqlGatewayService` (the embedded
   mode the SQL client also offers) — identical cursor semantics without a
@@ -27,6 +31,9 @@ DB-API mapping decisions:
 - ``Connection.commit()`` is a no-op and ``rollback()`` raises
   :class:`NotSupportedError` — exactly the JDBC driver's autocommit-only
   contract (``FlinkConnection.rollback`` throws ``SQLFeatureNotSupported``).
+- A cursor closes its gateway operation once the result is drained, or
+  at the next ``execute`` or ``close``, so a long-lived connection holds
+  at most one open operation per cursor.
 - Result values arriving over REST are JSON-safe (decimals/timestamps as
   strings, binary as base64 — see ``sql_gateway._json_safe``); the cursor
   re-types them from the declared column ``logicalType`` so both transports
@@ -38,10 +45,11 @@ from __future__ import annotations
 import base64
 import datetime
 import decimal
+import http.client
 import json
 import re
-import time as _time
-import urllib.request
+import select
+import urllib.parse
 from typing import Any, Iterator, Optional, Sequence
 
 __all__ = [
@@ -261,6 +269,7 @@ class _LocalTransport:
         self.session = service.open_session(session_properties or {})
 
     def run(self, statement: str, fetch_size: int):
+        """Run ``statement``; returns (operation, columns, rows)."""
         from apache_flink_spark.sql_gateway import (
             GatewayError,
             OperationStatus,
@@ -272,6 +281,7 @@ class _LocalTransport:
             status = svc.await_operation(sess, oh)
             if status is not OperationStatus.FINISHED:
                 info = svc.get_operation_info(sess, oh)
+                svc.close_operation(sess, oh)
                 raise ProgrammingError(
                     f"statement {status.value}: {info.get('exception')}"
                 )
@@ -291,7 +301,15 @@ class _LocalTransport:
                     return
                 token = rs.next_token
 
-        return columns, rows()
+        return oh, columns, rows()
+
+    def close_operation(self, oh) -> None:
+        from apache_flink_spark.sql_gateway import GatewayError
+
+        try:
+            self.service.close_operation(self.session, oh)
+        except GatewayError as ex:
+            raise OperationalError(str(ex)) from ex
 
     def close(self) -> None:
         from apache_flink_spark.sql_gateway import GatewayError
@@ -302,58 +320,90 @@ class _LocalTransport:
             pass
 
 
+def _dropped(conn: http.client.HTTPConnection) -> bool:
+    """True when the peer has closed an idle kept-alive connection: its
+    socket is readable (EOF) before any request was sent on it."""
+    return conn.sock is not None and bool(
+        select.select([conn.sock], [], [], 0)[0]
+    )
+
+
 class _RestTransport:
     """Wire mode: pure HTTP consumer of the gateway REST endpoint — the
-    shape the reference JDBC driver has (no in-process object sharing)."""
+    shape the reference JDBC driver has (no in-process object sharing).
+
+    Every request goes through :meth:`_http` on one kept-alive HTTP/1.1
+    connection. A GET or DELETE that fails on a broken connection is sent
+    once more on a fresh one (the gateway's replay window makes a repeated
+    page fetch safe); a POST never is, because a re-sent ``INSERT`` would
+    run twice.
+    """
 
     def __init__(self, url: str, session_properties: Optional[dict]):
-        self.url = url.rstrip("/")
+        parts = urllib.parse.urlsplit(url)
+        conn_cls = (
+            http.client.HTTPSConnection
+            if parts.scheme == "https"
+            else http.client.HTTPConnection
+        )
+        self._conn = conn_cls(parts.hostname, parts.port)
+        self._base = parts.path.rstrip("/")
         self.session = self._http(
             "POST", "/v2/sessions", {"properties": session_properties or {}}
         )["sessionHandle"]
 
     def _http(self, method: str, path: str, body=None):
         data = json.dumps(body).encode() if body is not None else None
-        req = urllib.request.Request(
-            self.url + path, data=data, method=method
-        )
-        if data:
-            req.add_header("Content-Type", "application/json")
-        try:
-            with urllib.request.urlopen(req) as resp:
-                return json.loads(resp.read())
-        except urllib.error.HTTPError as ex:
+        headers = {"Content-Type": "application/json"} if data else {}
+        attempts = 1 if method == "POST" else 2
+        for attempt in range(attempts):
+            if _dropped(self._conn):
+                self._conn.close()
             try:
-                detail = json.loads(ex.read()).get("errors")
-            except Exception:
-                detail = None
-            raise OperationalError(
-                f"gateway HTTP {ex.code} on {method} {path}: {detail}"
-            ) from ex
-        except urllib.error.URLError as ex:
-            raise OperationalError(f"gateway unreachable: {ex}") from ex
+                self._conn.request(method, self._base + path, data, headers)
+                resp = self._conn.getresponse()
+                raw = resp.read()
+                break
+            except (http.client.HTTPException, OSError) as ex:
+                self._conn.close()
+                if attempt + 1 == attempts:
+                    raise OperationalError(
+                        f"gateway unreachable on {method} {path}: {ex!r}"
+                    ) from ex
+        if resp.status < 400:
+            return json.loads(raw)
+        try:
+            detail = json.loads(raw)
+        except ValueError:
+            detail = {}
+        if detail.get("status"):
+            # the operation ended without a result: failed, canceled,
+            # timed out or closed
+            raise ProgrammingError(
+                f"statement {detail['status']}: {detail.get('exception')}"
+            )
+        raise OperationalError(
+            f"gateway HTTP {resp.status} on {method} {path}: "
+            f"{detail.get('errors')}"
+        )
 
     def run(self, statement: str, fetch_size: int):
+        """Run ``statement``; returns (operation, columns, rows)."""
         oh = self._http(
             "POST",
             f"/v2/sessions/{self.session}/statements",
             {"statement": statement},
         )["operationHandle"]
-        while True:
-            st = self._http(
-                "GET",
-                f"/v2/sessions/{self.session}/operations/{oh}/status",
-            )
-            if st["status"] in ("FINISHED", "ERROR", "CANCELED", "TIMEOUT"):
-                break
-            _time.sleep(0.02)
-        if st["status"] != "FINISHED":
-            raise ProgrammingError(
-                f"statement {st['status']}: {st.get('exception')}"
-            )
-        first = self._http(
-            "GET", f"/v2/sessions/{self.session}/operations/{oh}/result/0"
-        )
+        first_uri = f"/v2/sessions/{self.session}/operations/{oh}/result/0"
+        try:
+            # Long poll: the gateway holds the fetch until the statement
+            # ends, or answers NOT_READY after its wait bound.
+            first = self._http("GET", first_uri)
+            while first["resultType"] == "NOT_READY":
+                first = self._http("GET", first_uri)
+        except ProgrammingError:
+            self.close_operation(oh)
+            raise
         columns = [
             (c["name"], c["logicalType"])
             for c in first["results"]["columns"]
@@ -371,13 +421,20 @@ class _RestTransport:
                     return
                 page = self._http("GET", nxt)
 
-        return columns, rows()
+        return oh, columns, rows()
+
+    def close_operation(self, oh) -> None:
+        self._http(
+            "DELETE", f"/v2/sessions/{self.session}/operations/{oh}/close"
+        )
 
     def close(self) -> None:
         try:
             self._http("DELETE", f"/v2/sessions/{self.session}")
         except Error:
             pass
+        finally:
+            self._conn.close()
 
 
 # -- connection / cursor ------------------------------------------------------
@@ -392,11 +449,19 @@ class Cursor:
         self.rowcount = -1
         self._rows: Optional[Iterator[tuple]] = None
         self._converters: list = []
+        self._op = None  # the gateway operation behind self._rows
 
     # -- lifecycle
     def close(self) -> None:
+        if not self._closed and not self._conn._closed:
+            self._close_operation()
         self._closed = True
         self._rows = None
+
+    def _close_operation(self) -> None:
+        op, self._op = self._op, None
+        if op is not None:
+            self._conn._transport.close_operation(op)
 
     def _check(self) -> None:
         if self._closed:
@@ -410,7 +475,9 @@ class Cursor:
         self._check()
         if parameters:
             operation = _substitute(operation, parameters)
-        columns, rows = self._conn._transport.run(
+        self._close_operation()
+        self._rows = None
+        self._op, columns, rows = self._conn._transport.run(
             operation, max(1, int(self.arraysize))
         )
         self.description = [
@@ -444,6 +511,7 @@ class Cursor:
         try:
             return self._convert(next(self._rows))
         except StopIteration:
+            self._close_operation()
             return None
 
     def fetchmany(self, size: Optional[int] = None) -> list[tuple]:
@@ -463,7 +531,9 @@ class Cursor:
         self._check()
         if self._rows is None:
             raise ProgrammingError("no result set: call execute() first")
-        return [self._convert(r) for r in self._rows]
+        rows = [self._convert(r) for r in self._rows]
+        self._close_operation()
+        return rows
 
     def __iter__(self) -> Iterator[tuple]:
         while True:

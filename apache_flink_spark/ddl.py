@@ -1039,6 +1039,8 @@ _INSERT_RE = re.compile(
     re.I | re.S,
 )
 
+_VALUES_RE = re.compile(r"VALUES\b", re.I)
+
 
 def execute_flink_insert(spark: SparkSession, sql: str):
     """``INSERT INTO|OVERWRITE <ddl table> SELECT ...`` — the reference's
@@ -1129,6 +1131,11 @@ def execute_flink_insert(spark: SparkSession, sql: str):
     for k, v in static.items():
         out = out.withColumn(k, F.lit(v).cast(by_name[k]))
     out = out.select(*[F.col(n).cast(t).alias(n) for n, t in declared])
+    if _VALUES_RE.match(m.group("select")):
+        # A VALUES list is spread over every core; unmerged, a 3-row
+        # insert writes one small file per core, and every later scan
+        # of the table pays for each of them.
+        out = out.coalesce(1)
     mode = "overwrite" if m.group("mode").upper() == "OVERWRITE" else "append"
     writer, _fmt, path = fs_writer(out, name)
     writer.mode(mode).save(path)

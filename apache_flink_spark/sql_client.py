@@ -16,10 +16,8 @@ a 100 TB result costs one page, not a collect.
 
 from __future__ import annotations
 
-import json
 import re
 import sys
-import urllib.request
 from typing import Iterator, Optional
 
 _STMT_SET_OPEN_RE = re.compile(
@@ -75,67 +73,27 @@ class GatewayClient:
 
 
 class RestGatewayClient:
-    """Gateway mode: same contract as GatewayClient over the REST routes."""
+    """Gateway mode: same contract as GatewayClient over the REST routes,
+    through the DB-API driver's transport (kept-alive connection, long-
+    polled results)."""
 
     def __init__(self, url: str, session_properties: Optional[dict] = None):
-        self.url = url.rstrip("/")
-        self.session = self._http(
-            "POST", "/v2/sessions", {"properties": session_properties or {}}
-        )["sessionHandle"]
+        from apache_flink_spark.dbapi import _RestTransport
 
-    def _http(self, method: str, path: str, body=None):
-        data = json.dumps(body).encode() if body is not None else None
-        req = urllib.request.Request(
-            self.url + path, data=data, method=method
-        )
-        if data:
-            req.add_header("Content-Type", "application/json")
-        with urllib.request.urlopen(req) as resp:
-            return json.loads(resp.read())
+        self._transport = _RestTransport(url, session_properties)
+        self.session = self._transport.session
 
     def execute(self, statement: str, max_rows: int = 1000):
-        import time as _time
+        oh, columns, rows = self._transport.run(statement, max_rows)
 
-        oh = self._http(
-            "POST",
-            f"/v2/sessions/{self.session}/statements",
-            {"statement": statement},
-        )["operationHandle"]
-        while True:
-            st = self._http(
-                "GET", f"/v2/sessions/{self.session}/operations/{oh}/status"
-            )
-            if st["status"] in ("FINISHED", "ERROR", "CANCELED", "TIMEOUT"):
-                break
-            _time.sleep(0.05)
-        if st["status"] != "FINISHED":
-            raise RuntimeError(
-                f"statement {st['status']}: {st.get('exception')}"
-            )
-        first = self._http(
-            "GET", f"/v2/sessions/{self.session}/operations/{oh}/result/0"
-        )
-        columns = [
-            (c["name"], c["logicalType"])
-            for c in first["results"]["columns"]
-        ]
+        def drained() -> Iterator[tuple]:
+            yield from rows
+            self._transport.close_operation(oh)
 
-        def rows() -> Iterator[tuple]:
-            page = first
-            while True:
-                for d in page["results"]["data"]:
-                    yield tuple(d["fields"])
-                if page["resultType"] == "EOS":
-                    return
-                nxt = page.get("nextResultUri")
-                if not nxt:
-                    return
-                page = self._http("GET", nxt)
-
-        return columns, rows()
+        return columns, drained()
 
     def close(self):
-        self._http("DELETE", f"/v2/sessions/{self.session}")
+        self._transport.close()
 
 
 def render_tableau(columns, rows, max_rows: int = 100) -> str:

@@ -14,11 +14,18 @@ Spark-first design decisions (not a port):
   shared SparkContext/executors) — plus the engine's
   :class:`~apache_flink_spark.environment.TableEnvironment` for Flink-SQL
   dialect statements (SET/RESET quoting, group windows, MATCH_RECOGNIZE).
-- **Fetch is driver-memory-bounded**: results stream through
-  ``DataFrame.toLocalIterator()`` so the driver holds one page (+ one
-  partition buffer) regardless of result size — a gateway in front of a
-  100 TB query must page, never materialize. Only the last served page is
-  cached (the token protocol's replay window).
+- **Fetch is driver-memory-bounded**: the worker collects the first
+  ``DEFAULT_MAX_ROWS + 1`` rows in one Spark job. When they fit in one
+  page they are the whole result; only a result that overflows the first
+  page is run again through ``DataFrame.toLocalIterator()``, so the
+  driver holds one page (+ one partition buffer) regardless of result
+  size — a gateway in front of a 100 TB query must page, never
+  materialize. Only the last served page is cached (the token protocol's
+  replay window).
+- **Results are long-polled**: a fetch on an unfinished operation waits
+  up to ``RESULT_WAIT_S`` for it to end before answering ``NOT_READY``,
+  so a client needs no status polling. The REST endpoint speaks HTTP/1.1
+  and keeps connections alive until ``IDLE_CONNECTION_S`` pass idle.
 - Operations run on a thread pool (Spark is thread-safe per job group);
   cancellation uses ``SparkContext.cancelJobGroup`` via ``InheritableThread``
   semantics: each operation tags its jobs with the operation handle.
@@ -29,6 +36,7 @@ from __future__ import annotations
 import itertools
 import json
 import re
+import socket
 import threading
 import time
 import uuid
@@ -46,15 +54,31 @@ __all__ = [
     "SqlGatewayService",
     "SqlGatewayRestEndpoint",
     "GatewayError",
+    "OperationEndedError",
 ]
 
 GATEWAY_VERSION = "apache_flink_spark-gateway/1.0"
 API_VERSIONS = ["V2", "V3"]
 DEFAULT_MAX_ROWS = 1000
+# How long a result fetch on an unfinished operation waits for it to end
+# before answering NOT_READY (the long poll a REST client makes).
+RESULT_WAIT_S = 10.0
+# Seconds a kept-alive REST connection may sit idle before it is closed.
+IDLE_CONNECTION_S = 60.0
 
 
 class GatewayError(RuntimeError):
     """Loud, typed failure for any gateway-protocol violation."""
+
+
+class OperationEndedError(GatewayError):
+    """A fetch on an operation that ended without a result (failed,
+    canceled, timed out or closed); carries its status and error."""
+
+    def __init__(self, message: str, status: "OperationStatus", error):
+        super().__init__(message)
+        self.status = status
+        self.error = error
 
 
 @dataclass(frozen=True)
@@ -184,7 +208,15 @@ class _Operation:
     def __init__(self, handle: OperationHandle, timeout_ms: int):
         self.handle = handle
         self.timeout_ms = timeout_ms
+        # Monotonic timings: submitted, started (a worker picked it up),
+        # planned (the statement's DataFrame exists; an eager statement
+        # such as DDL or INSERT has run by then), first page ready and
+        # finished (first terminal status).
         self.submitted_at = time.monotonic()
+        self.started_at: Optional[float] = None
+        self.planned_at: Optional[float] = None
+        self.first_page_at: Optional[float] = None
+        self.finished_at: Optional[float] = None
         self.status = OperationStatus.INITIALIZED
         self.error: Optional[BaseException] = None
         self.columns: list[tuple[str, str]] = []
@@ -205,7 +237,18 @@ class _Operation:
                 )
             self.status = to
             if to.is_terminal:
+                if self.finished_at is None:
+                    self.finished_at = time.monotonic()
                 self.done.set()
+
+    def timings(self) -> dict:
+        return {
+            "submitted": self.submitted_at,
+            "started": self.started_at,
+            "planned": self.planned_at,
+            "firstPageReady": self.first_page_at,
+            "finished": self.finished_at,
+        }
 
     # -- result paging ----------------------------------------------------
     def attach_result(self, columns, row_iter) -> None:
@@ -220,13 +263,15 @@ class _Operation:
                 OperationStatus.CLOSED,
                 OperationStatus.TIMEOUT,
             ):
-                raise GatewayError(
+                raise OperationEndedError(
                     f"operation {self.handle.identifier} is "
-                    f"{self.status.value}; results are gone"
+                    f"{self.status.value}; results are gone",
+                    self.status, None,
                 )
             if self.status is OperationStatus.ERROR:
-                raise GatewayError(
-                    f"operation failed: {self.error}"
+                raise OperationEndedError(
+                    f"operation failed: {self.error}",
+                    self.status, self.error,
                 ) from self.error
             # Replay window: re-fetching the PREVIOUS token returns the
             # cached page (fault-tolerant HTTP clients re-GET after a lost
@@ -398,6 +443,7 @@ class SqlGatewayService:
         return op.handle
 
     def _run_operation(self, sess, op, statement, executor=None) -> None:
+        op.started_at = time.monotonic()
         try:
             if op.cancel_requested.is_set():
                 op.transition(OperationStatus.CANCELED)
@@ -411,6 +457,7 @@ class SqlGatewayService:
                 interruptOnCancel=True,
             )
             df = executor() if executor is not None else sess.tenv.sql(statement)
+            op.planned_at = time.monotonic()
             if df is None:
                 op.attach_result([("result", "string")], iter([("OK",)]))
             else:
@@ -422,16 +469,13 @@ class SqlGatewayService:
                 ) * 1000 > op.timeout_ms:
                     op.transition(OperationStatus.TIMEOUT)
                     return
-                # Driver-bounded streaming: one partition in memory at a
-                # time. toLocalIterator is LAZY, so force the first page
-                # HERE — in the job-group-tagged worker thread — so that
-                # (a) FINISHED means "first page ready to fetch" (the
-                # reference's contract) and (b) the heavy leading jobs are
-                # cancellable via cancelJobGroup, not hidden in a later
-                # fetch caller's thread.
-                it = df.toLocalIterator()
-                head = list(itertools.islice(it, DEFAULT_MAX_ROWS))
-                op.attach_result(cols, itertools.chain(head, it))
+                # The first page is computed HERE — in the job-group-tagged
+                # worker thread — so that (a) FINISHED means "first page
+                # ready to fetch" (the reference's contract) and (b) the
+                # heavy leading jobs are cancellable via cancelJobGroup,
+                # not hidden in a later fetch caller's thread.
+                op.attach_result(cols, _result_rows(df))
+            op.first_page_at = time.monotonic()
             # cancel_operation may have transitioned the op concurrently —
             # take the lock and re-check so a clean cancellation never
             # records a bogus illegal-transition error (review r6 #9)
@@ -491,7 +535,8 @@ class SqlGatewayService:
         op = self._operation(self._session(handle), op_handle)
         return {
             "status": op.status.value,
-            "exception": repr(op.error) if op.error is not None else None,
+            "exception": _describe(op.error),
+            "timings": op.timings(),
         }
 
     def get_operation_result_schema(
@@ -511,9 +556,19 @@ class SqlGatewayService:
         op_handle: OperationHandle,
         token: int,
         max_rows: int = DEFAULT_MAX_ROWS,
+        wait_s: float = 0.0,
     ) -> ResultSet:
+        """Fetch page ``token``. ``wait_s`` > 0 makes this a long poll:
+        on an unfinished operation, wait up to that long (and no longer
+        than its execution timeout) for it to end before answering
+        ``NOT_READY``."""
         sess = self._session(handle)
         op = self._operation(sess, op_handle)
+        if wait_s > 0:
+            if op.timeout_ms:
+                left = op.timeout_ms / 1000 - (time.monotonic() - op.submitted_at)
+                wait_s = min(wait_s, max(0.0, left))
+            op.done.wait(wait_s)
         if op.timeout_ms and not op.done.is_set() and (
             time.monotonic() - op.submitted_at
         ) * 1000 > op.timeout_ms:
@@ -650,6 +705,29 @@ class SqlGatewayService:
         return op
 
 
+def _describe(error: Optional[BaseException]) -> Optional[str]:
+    """An operation's error as its type and message (a Spark exception's
+    repr() drops the message)."""
+    return None if error is None else f"{type(error).__name__}: {error}"
+
+
+def _result_rows(df) -> Iterator:
+    """The rows of ``df``, the first page already computed.
+
+    A result that fits in one page costs one ``collect`` job and is the
+    whole result. A larger one is dropped after that probe and streamed
+    from one ``toLocalIterator()``, so every page comes from one execution
+    and the driver holds at most one page (+ one partition buffer).
+    """
+    head = df.limit(DEFAULT_MAX_ROWS + 1).collect()
+    if len(head) <= DEFAULT_MAX_ROWS:
+        return iter(head)
+    del head
+    it = df.toLocalIterator()
+    head = list(itertools.islice(it, DEFAULT_MAX_ROWS))
+    return itertools.chain(head, it)
+
+
 _SQL_KEYWORDS = [
     "SELECT", "FROM", "WHERE", "GROUP", "BY", "ORDER", "HAVING", "JOIN",
     "LEFT", "RIGHT", "FULL", "INNER", "OUTER", "CROSS", "ON", "UNION",
@@ -752,9 +830,10 @@ class SqlGatewayRestEndpoint:
 
     Routes mirror the reference's v2/v3 endpoint; bodies are JSON. Start
     with :meth:`start` (binds an ephemeral port on 127.0.0.1 by default),
-    stop with :meth:`stop`. Thread-per-request via ``ThreadingHTTPServer``
-    — fine for a driver-side gateway; horizontal scale comes from Spark,
-    not from the HTTP layer.
+    stop with :meth:`stop`. Thread-per-connection via
+    ``ThreadingHTTPServer``; connections are HTTP/1.1 kept-alive, closed
+    after ``IDLE_CONNECTION_S`` idle — fine for a driver-side gateway;
+    horizontal scale comes from Spark, not from the HTTP layer.
     """
 
     def __init__(self, service: SqlGatewayService, host="127.0.0.1", port=0):
@@ -763,6 +842,8 @@ class SqlGatewayRestEndpoint:
         self._port = port
         self._httpd = None
         self._thread = None
+        self._conns: set = set()  # open client sockets, shut at stop()
+        self._conns_lock = threading.Lock()
 
     @property
     def url(self) -> str:
@@ -777,36 +858,62 @@ class SqlGatewayRestEndpoint:
         endpoint = self
 
         class Handler(BaseHTTPRequestHandler):
+            protocol_version = "HTTP/1.1"
+            # Headers and body go out in separate sends; with Nagle on,
+            # the body would wait for the client's delayed ACK.
+            disable_nagle_algorithm = True
+            timeout = IDLE_CONNECTION_S
+
+            def setup(self):
+                super().setup()
+                with endpoint._conns_lock:
+                    endpoint._conns.add(self.connection)
+
+            def finish(self):
+                with endpoint._conns_lock:
+                    endpoint._conns.discard(self.connection)
+                super().finish()
+
             def log_message(self, fmt, *args):  # quiet
                 pass
 
             def _dispatch(self, method):
+                # Read the whole body first: on a kept-alive connection,
+                # unread bytes would be parsed as the next request.
+                try:
+                    clen = int(self.headers.get("Content-Length") or 0)
+                except ValueError:
+                    self.close_connection = True
+                    return self._send(400, {
+                        "errors": ["malformed Content-Length"]
+                    })
+                raw = self.rfile.read(clen) if clen > 0 else b""
+                path = self.path.split("?")[0]
                 for m, rx, name in _ROUTES:
-                    if m != method:
-                        continue
-                    match = rx.match(self.path.split("?")[0])
+                    match = rx.match(path) if m == method else None
                     if match:
-                        body = {}
-                        clen = int(self.headers.get("Content-Length") or 0)
-                        if clen:
-                            try:
-                                body = json.loads(self.rfile.read(clen))
-                            except json.JSONDecodeError:
-                                return self._send(400, {
-                                    "errors": ["malformed JSON body"]
-                                })
-                        try:
-                            code, payload = getattr(endpoint, name)(
-                                match.groupdict(), body
-                            )
-                        except GatewayError as ex:
-                            code, payload = 404 if "unknown" in str(
-                                ex
-                            ) else 400, {"errors": [str(ex)]}
-                        except Exception as ex:  # loud 500, never silent
-                            code, payload = 500, {"errors": [repr(ex)]}
-                        return self._send(code, payload)
-                self._send(404, {"errors": [f"no route {method} {self.path}"]})
+                        break
+                else:
+                    return self._send(
+                        404, {"errors": [f"no route {method} {self.path}"]}
+                    )
+                try:
+                    body = json.loads(raw) if raw else {}
+                except json.JSONDecodeError:
+                    return self._send(400, {"errors": ["malformed JSON body"]})
+                try:
+                    code, payload = getattr(endpoint, name)(
+                        match.groupdict(), body
+                    )
+                except GatewayError as ex:
+                    code = 404 if "unknown" in str(ex) else 400
+                    payload = {"errors": [str(ex)]}
+                    if isinstance(ex, OperationEndedError):
+                        payload["status"] = ex.status.value
+                        payload["exception"] = _describe(ex.error)
+                except Exception as ex:  # loud 500, never silent
+                    code, payload = 500, {"errors": [repr(ex)]}
+                self._send(code, payload)
 
             def _send(self, code, payload):
                 data = json.dumps(payload).encode()
@@ -838,6 +945,16 @@ class SqlGatewayRestEndpoint:
             self._httpd.shutdown()
             self._httpd.server_close()
             self._httpd = None
+            # End kept-alive connections: shutting the read side lets a
+            # request in flight still send its response, then the handler
+            # reads EOF and its thread exits.
+            with self._conns_lock:
+                conns = list(self._conns)
+            for conn in conns:
+                try:
+                    conn.shutdown(socket.SHUT_RD)
+                except OSError:
+                    pass
 
     # -- route handlers: (code, json) ---------------------------------------
     def _r_info(self, params, body):
@@ -912,7 +1029,8 @@ class SqlGatewayRestEndpoint:
     def _r_fetch(self, params, body):
         sh, oh = params["sh"], params["oh"]
         rs = self.service.fetch_results(
-            SessionHandle(sh), OperationHandle(oh), int(params["token"])
+            SessionHandle(sh), OperationHandle(oh), int(params["token"]),
+            wait_s=RESULT_WAIT_S,
         )
         next_uri = (
             f"/v2/sessions/{sh}/operations/{oh}/result/{rs.next_token}"

@@ -98,6 +98,8 @@ extents) — each errors loudly with a batch-path pointer.
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Iterator
 
 import pandas as pd
@@ -858,7 +860,8 @@ def streaming_match_recognize(
     # ignore edge — callers only consult it when one exists).
     elem_bits = [[(v, var_bit[v]) for v in e[0]] for e in pat]
     elem_mask = [
-        int(sum(b for _, b in bits)) for bits in elem_bits
+        functools.reduce(operator.or_, (b for _, b in bits), 0)
+        for bits in elem_bits
     ]
     ign_mask = [var_bit[e[3]] if e[3] is not None else 0 for e in pat]
     meas = list(measures)
@@ -1013,6 +1016,10 @@ def streaming_match_recognize(
                 return bool(vm[j] & elem_mask[pi])
 
             def ign_ok(pi: int, j: int) -> bool:
+                # A zero mask means the element has no ignore edge; a
+                # caller must check ``ign is not None`` first, because
+                # a zero mask would read as "never ignorable".
+                assert ign_mask[pi], "ign_ok on an element with no ignore edge"
                 return bool(vm[j] & ign_mask[pi])
 
             def label(pi: int, j: int) -> str:

@@ -209,3 +209,166 @@ def test_ddl_through_cursor(conn):
     )
     cur.execute("SELECT x FROM dbapi_v")
     assert cur.fetchall() == [(42,)]
+
+
+# ---------------------------------------------------------------------------
+# REST fast path: one job for a small first page, long-polled results,
+# kept-alive connections, drained operations closed
+# ---------------------------------------------------------------------------
+
+
+def _count_http(monkeypatch):
+    """Record (method, path, resultType, rows) of every REST request."""
+    calls = []
+    http = dbapi._RestTransport._http
+
+    def counted(self, method, path, body=None):
+        out = http(self, method, path, body)
+        rows = len(out["results"]["data"]) if "results" in out else None
+        calls.append((method, path, out.get("resultType"), rows))
+        return out
+
+    monkeypatch.setattr(dbapi._RestTransport, "_http", counted)
+    return calls
+
+
+@pytest.mark.parametrize("n", [999, 1000, 1001])
+def test_rest_paging_at_first_page_edge(endpoint, spark, monkeypatch, n):
+    DataFrame = type(spark.range(1))
+    streamed = []
+    to_local = DataFrame.toLocalIterator
+
+    def spy(self, *a, **kw):
+        streamed.append(1)
+        return to_local(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrame, "toLocalIterator", spy)
+    sql = f"SELECT id, id * 3 AS x FROM range({n}) ORDER BY id"
+    with dbapi.connect(url=endpoint.url) as conn:
+        calls = _count_http(monkeypatch)
+        got = conn.cursor().execute(sql).fetchall()
+    assert got == [tuple(r) for r in spark.sql(sql).collect()]
+    pages = [(c[2], c[3]) for c in calls if "/result/" in c[1]]
+    # full pages of DEFAULT_MAX_ROWS, the rest, then EOS
+    want = [("PAYLOAD", min(1000, n - k)) for k in range(0, n, 1000)]
+    assert pages == want + [("EOS", 0)]
+    assert not any(c[1].endswith("/status") for c in calls)
+    # only a result past the first page is streamed through the iterator
+    assert len(streamed) == (1 if n > 1000 else 0)
+
+
+def test_rest_statement_makes_no_status_request(endpoint, monkeypatch):
+    with dbapi.connect(url=endpoint.url) as conn:
+        calls = _count_http(monkeypatch)
+        cur = conn.cursor()
+        assert cur.execute("SELECT 1 AS a").fetchall() == [(1,)]
+    assert [c[0] for c in calls[:4]] == ["POST", "GET", "GET", "DELETE"]
+    assert calls[1][1].endswith("/result/0") and calls[3][1].endswith("/close")
+    assert not any(c[1].endswith("/status") for c in calls)
+
+
+def test_rest_long_poll_answers_not_ready_and_client_waits(
+    endpoint, monkeypatch
+):
+    from apache_flink_spark import sql_gateway
+
+    monkeypatch.setattr(sql_gateway, "RESULT_WAIT_S", 0.05)
+    with dbapi.connect(url=endpoint.url) as conn:
+        calls = _count_http(monkeypatch)
+        cur = conn.cursor()
+        cur.execute(
+            "SELECT java_method('java.lang.Thread', 'sleep', 1500L) AS s, "
+            "7 AS v"
+        )
+        assert [r[1] for r in cur.fetchall()] == [7]
+    first = [c[2] for c in calls if c[1].endswith("/result/0")]
+    assert first[0] == "NOT_READY" and first[-1] == "PAYLOAD"
+    assert not any(c[1].endswith("/status") for c in calls)
+
+
+def test_rest_bad_statement_raises_programming_error(endpoint, service):
+    with dbapi.connect(url=endpoint.url) as conn:
+        cur = conn.cursor()
+        with pytest.raises(dbapi.ProgrammingError) as ei:
+            cur.execute("SELECT * FROM no_such_table_xyz")
+        msg = str(ei.value)
+        assert "statement ERROR" in msg and "no_such_table_xyz" in msg
+        # the failed operation is closed, not left in the session
+        sess = service._sessions[conn._transport.session]
+        assert not sess.operations
+
+
+def test_rest_drained_operations_are_closed(endpoint, service):
+    with dbapi.connect(url=endpoint.url) as conn:
+        cur = conn.cursor()
+        sess = service._sessions[conn._transport.session]
+        for i in range(50):
+            cur.execute("SELECT ? AS i", [i])
+            if i % 2 == 0:  # drained: closed at once
+                assert cur.fetchall() == [(i,)]
+                assert not sess.operations
+            # undrained: closed by the next execute
+            assert len(sess.operations) <= 1
+        assert len(sess.operations) == 1
+        cur.close()
+        assert not sess.operations
+
+
+def test_rest_concurrent_sessions_on_kept_alive_connections(endpoint):
+    import threading
+
+    errors, done = [], []
+
+    def worker(i):
+        try:
+            with dbapi.connect(url=endpoint.url) as conn:
+                sock = conn._transport._conn.sock
+                cur = conn.cursor()
+                cur.execute(
+                    f"CREATE OR REPLACE TEMPORARY VIEW ka_v AS SELECT {i} AS x"
+                )
+                for j in range(8):
+                    cur.execute("SELECT x + ? AS y FROM ka_v", [j])
+                    assert cur.fetchall() == [(i + j,)], (i, j)
+                    cur.execute(
+                        "SELECT count(*) FROM nation WHERE n_regionkey = ?",
+                        [i % 5],
+                    )
+                    assert cur.fetchall() == [(5,)]
+                # every request went over the one kept-alive socket
+                assert conn._transport._conn.sock is sock
+            done.append(i)
+        except Exception as ex:  # surfaced after join
+            errors.append((i, repr(ex)))
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert sorted(done) == [0, 1, 2]
+
+
+def test_rest_reconnects_after_idle_close(service, monkeypatch):
+    """The endpoint closes a connection idle past IDLE_CONNECTION_S; the
+    next statement, a POST, goes out on a fresh connection instead of
+    failing on the closed one."""
+    import time
+
+    from apache_flink_spark import sql_gateway
+
+    monkeypatch.setattr(sql_gateway, "IDLE_CONNECTION_S", 0.2)
+    ep = SqlGatewayRestEndpoint(service).start()
+    try:
+        with dbapi.connect(url=ep.url) as conn:
+            cur = conn.cursor()
+            assert cur.execute("SELECT 1 AS a").fetchall() == [(1,)]
+            sock = conn._transport._conn.sock
+            time.sleep(1.0)
+            assert dbapi._dropped(conn._transport._conn)
+            assert cur.execute("SELECT 2 AS a").fetchall() == [(2,)]
+            assert conn._transport._conn.sock is not sock
+    finally:
+        ep.stop()

@@ -220,3 +220,57 @@ def test_insert_values_and_column_list(spark, tmp_path):
         te.sql("INSERT INTO iv_t (id, id) VALUES (1, 2)")
     with _pytest.raises(DdlError, match="query columns"):
         te.sql("INSERT INTO iv_t (id, v) VALUES (1)")
+
+
+def _data_files(root):
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, files in os.walk(root)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def test_values_insert_writes_one_file_per_partition(spark, tmp_path):
+    """A VALUES source is merged into one task before the write: one data
+    file per insert (per partition directory on a partitioned table),
+    not one per core."""
+    te = TableEnvironment(spark=spark)
+    te.sql(
+        f"""
+        CREATE TABLE vf_flat (k BIGINT, v STRING) WITH (
+            'connector' = 'filesystem',
+            'path' = '{tmp_path}/vf_flat',
+            'format' = 'parquet'
+        )
+        """
+    )
+    te.sql("INSERT INTO vf_flat VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    te.sql("INSERT INTO vf_flat VALUES (4, 'd'), (5, 'e'), (6, 'f')")
+    assert len(_data_files(f"{tmp_path}/vf_flat")) == 2
+    rows = te.sql("SELECT k, v FROM vf_flat ORDER BY k").collect()
+    assert [(r.k, r.v) for r in rows] == [
+        (1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e"), (6, "f")
+    ]
+
+    te.sql(
+        f"""
+        CREATE TABLE vf_part (k BIGINT, day STRING) PARTITIONED BY (day)
+        WITH ('connector' = 'filesystem', 'path' = '{tmp_path}/vf_part',
+              'format' = 'parquet')
+        """
+    )
+    te.sql(
+        "INSERT INTO vf_part VALUES (1, 'd1'), (2, 'd2'), (3, 'd1'), "
+        "(4, 'd2'), (5, 'd3')"
+    )
+    files = _data_files(f"{tmp_path}/vf_part")
+    assert sorted(f.split("/")[0] for f in files) == [
+        "day=d1", "day=d2", "day=d3"
+    ]
+    rows = te.sql("SELECT k, day FROM vf_part ORDER BY k").collect()
+    assert [(r.k, r.day) for r in rows] == [
+        (1, "d1"), (2, "d2"), (3, "d1"), (4, "d2"), (5, "d3")
+    ]

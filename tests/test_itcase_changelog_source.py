@@ -197,6 +197,20 @@ def tenv(spark):
     return TableEnvironment(spark=spark)
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _restore_shadowed_views(spark):
+    """``_register`` shadows views of the same names (``orders`` is a
+    fixture table); put the earlier ones back so later modules in this
+    process read the fixture tables, not this module's test data."""
+    names = ("users_base", "users", "rates", "orders")
+    saved = {n: spark.table(n) for n in names if spark.catalog.tableExists(n)}
+    yield
+    for n in names:
+        spark.catalog.dropTempView(n)
+    for n, df in saved.items():
+        df.createOrReplaceTempView(n)
+
+
 FINAL_USERS = [
     "user1,Tom,tom123@gmail.com,8.10,16.20",
     "user3,Bailey,bailey@qq.com,9.99,19.98",

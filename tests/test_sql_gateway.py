@@ -347,3 +347,84 @@ def test_pagination_property_random_page_sizes(service):
             assert rows == want and len(rows) == 500
     finally:
         service.close_session(h)
+
+
+def _keepalive(rest):
+    """One kept-alive HTTP/1.1 connection to the endpoint; returns a
+    request function (method, path, body) -> (status, json)."""
+    import http.client
+    import urllib.parse
+
+    u = urllib.parse.urlsplit(rest.url)
+    conn = http.client.HTTPConnection(u.hostname, u.port, timeout=60)
+
+    def req(method, path, body=None):
+        data = json.dumps(body).encode() if body is not None else None
+        conn.request(method, path, data,
+                     {"Content-Type": "application/json"} if data else {})
+        resp = conn.getresponse()
+        return resp.status, json.loads(resp.read())
+
+    return conn, req
+
+
+def test_rest_operation_timings_in_status(rest):
+    conn, req = _keepalive(rest)
+    try:
+        _, r = req("POST", "/v2/sessions", {})
+        sh = r["sessionHandle"]
+        # an unknown route with a body leaves the connection usable
+        code, _ = req("POST", "/v2/no/such/route", {"x": 1})
+        assert code == 404
+        _, r = req("POST", f"/v2/sessions/{sh}/statements",
+                   {"statement": "SELECT n_name FROM nation LIMIT 2"})
+        oh = r["operationHandle"]
+        code, page = req("GET", f"/v2/sessions/{sh}/operations/{oh}/result/0")
+        assert code == 200 and page["resultType"] == "PAYLOAD"
+        _, st = req("GET", f"/v2/sessions/{sh}/operations/{oh}/status")
+        assert st["status"] == "FINISHED"
+        t = st["timings"]
+        order = ["submitted", "started", "planned", "firstPageReady",
+                 "finished"]
+        assert all(t[k] is not None for k in order), t
+        assert [t[k] for k in order] == sorted(t[k] for k in order)
+        req("DELETE", f"/v2/sessions/{sh}")
+    finally:
+        conn.close()
+
+
+def test_rest_cancel_during_first_page(rest, service):
+    conn, req = _keepalive(rest)
+    try:
+        _, r = req("POST", "/v2/sessions", {})
+        sh = r["sessionHandle"]
+        _, r = req("POST", f"/v2/sessions/{sh}/statements", {
+            "statement": "SELECT java_method('java.lang.Thread', 'sleep', "
+            "60000L) AS s"
+        })
+        oh = r["operationHandle"]
+        ops = f"/v2/sessions/{sh}/operations/{oh}"
+        deadline = time.monotonic() + 60
+        while req("GET", f"{ops}/status")[1]["timings"]["planned"] is None:
+            assert time.monotonic() < deadline, "statement never planned"
+            time.sleep(0.05)
+        time.sleep(0.3)  # the first-page job is running
+        assert req("POST", f"{ops}/cancel", {})[0] == 200
+        _, st = req("GET", f"{ops}/status")
+        assert st["status"] == "CANCELED"
+        assert st["timings"]["firstPageReady"] is None
+        code, err = req("GET", f"{ops}/result/0")
+        assert code == 400 and err["status"] == "CANCELED"
+        # the first-page job itself was killed, not left sleeping
+        tracker = service._base_spark.sparkContext.statusTracker()
+        assert tracker.getJobIdsForGroup(oh)
+        while any(
+            (info := tracker.getJobInfo(j)) is not None
+            and info.status == "RUNNING"
+            for j in tracker.getJobIdsForGroup(oh)
+        ):
+            assert time.monotonic() < deadline, "first-page job not killed"
+            time.sleep(0.1)
+        req("DELETE", f"/v2/sessions/{sh}")
+    finally:
+        conn.close()
