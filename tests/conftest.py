@@ -159,6 +159,10 @@ def pytest_collection_modifyitems(config, items):
         env["TMPDIR"] = shard_tmp
         env["SPARK_LOCAL_DIRS"] = shard_tmp
         env["SPARK_GRAFT_WAREHOUSE_DIR"] = os.path.join(shard_tmp, "warehouse")
+        # n shard JVMs at the engine's 8g default heap outgrow a 16 GB
+        # host (the kernel OOM-kills one, failing the rest of its shard);
+        # the tests' tiny fixtures fit a 2g heap.
+        env.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
         argv = [sys.executable, "-m", "pytest", "-q", "-p", "no:cacheprovider"]
         if _fail_fast:
             argv.append("-x")
