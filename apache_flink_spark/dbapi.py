@@ -453,10 +453,12 @@ class Cursor:
 
     # -- lifecycle
     def close(self) -> None:
-        if not self._closed and not self._conn._closed:
-            self._close_operation()
-        self._closed = True
-        self._rows = None
+        try:
+            if not self._closed and not self._conn._closed:
+                self._close_operation()
+        finally:
+            self._closed = True
+            self._rows = None
 
     def _close_operation(self) -> None:
         op, self._op = self._op, None

@@ -28,7 +28,9 @@ Spark-first design decisions (not a port):
   and keeps connections alive until ``IDLE_CONNECTION_S`` pass idle.
 - Operations run on a thread pool (Spark is thread-safe per job group);
   cancellation uses ``SparkContext.cancelJobGroup`` via ``InheritableThread``
-  semantics: each operation tags its jobs with the operation handle.
+  semantics: each operation tags its jobs with the operation handle. A
+  cancel re-issues ``cancelJobGroup`` until the worker exits, so a job
+  submitted after the cancel landed is killed too.
 """
 
 from __future__ import annotations
@@ -227,6 +229,7 @@ class _Operation:
         self.lock = threading.RLock()
         self.done = threading.Event()
         self.cancel_requested = threading.Event()
+        self.worker_exited = threading.Event()
 
     def transition(self, to: OperationStatus) -> None:
         with self.lock:
@@ -393,6 +396,7 @@ class SqlGatewayService:
         for op in list(sess.operations.values()):
             if not op.status.is_terminal:
                 op.cancel_requested.set()
+                _kill_jobs(sess, op)
 
     def heartbeat(self, handle: SessionHandle) -> None:
         self._session(handle).touch()
@@ -499,6 +503,7 @@ class SqlGatewayService:
                 sess.tenv.spark.sparkContext.setJobGroup("", "")
             except Exception:
                 pass
+            op.worker_exited.set()
 
     # -- operation lifecycle -------------------------------------------------
     def cancel_operation(
@@ -507,10 +512,7 @@ class SqlGatewayService:
         sess = self._session(handle)
         op = self._operation(sess, op_handle)
         op.cancel_requested.set()
-        try:
-            sess.tenv.spark.sparkContext.cancelJobGroup(op.handle.identifier)
-        except Exception:
-            pass
+        _kill_jobs(sess, op)
         with op.lock:
             if not op.status.is_terminal:
                 op.transition(OperationStatus.CANCELED)
@@ -524,6 +526,7 @@ class SqlGatewayService:
             if op.status is not OperationStatus.CLOSED:
                 if not op.status.is_terminal:
                     op.cancel_requested.set()
+                    _kill_jobs(sess, op)
                     op.transition(OperationStatus.CANCELED)
                 op.transition(OperationStatus.CLOSED)
         with self._lock:
@@ -556,19 +559,17 @@ class SqlGatewayService:
         op_handle: OperationHandle,
         token: int,
         max_rows: int = DEFAULT_MAX_ROWS,
-        wait_s: float = 0.0,
     ) -> ResultSet:
-        """Fetch page ``token``. ``wait_s`` > 0 makes this a long poll:
-        on an unfinished operation, wait up to that long (and no longer
-        than its execution timeout) for it to end before answering
-        ``NOT_READY``."""
+        """Fetch page ``token``, long-polled: on an unfinished operation,
+        wait up to ``RESULT_WAIT_S`` (and no longer than its execution
+        timeout) for it to end before answering ``NOT_READY``."""
         sess = self._session(handle)
         op = self._operation(sess, op_handle)
-        if wait_s > 0:
-            if op.timeout_ms:
-                left = op.timeout_ms / 1000 - (time.monotonic() - op.submitted_at)
-                wait_s = min(wait_s, max(0.0, left))
-            op.done.wait(wait_s)
+        wait_s = RESULT_WAIT_S
+        if op.timeout_ms:
+            left = op.timeout_ms / 1000 - (time.monotonic() - op.submitted_at)
+            wait_s = min(wait_s, max(0.0, left))
+        op.done.wait(wait_s)
         if op.timeout_ms and not op.done.is_set() and (
             time.monotonic() - op.submitted_at
         ) * 1000 > op.timeout_ms:
@@ -709,6 +710,35 @@ def _describe(error: Optional[BaseException]) -> Optional[str]:
     """An operation's error as its type and message (a Spark exception's
     repr() drops the message)."""
     return None if error is None else f"{type(error).__name__}: {error}"
+
+
+def _kill_jobs(sess: _Session, op: _Operation) -> None:
+    """Cancel the Spark jobs of ``op`` (its ``cancel_requested`` already
+    set), also those its worker submits after this call: a cancel can land
+    before the first job starts, and ``cancelJobGroup`` kills only running
+    jobs. So while the worker runs, the group is cancelled again every
+    50 ms until it exits. A worker that has not started yet sees the flag
+    and never submits a job."""
+    sc = sess.tenv.spark.sparkContext
+
+    def cancel() -> bool:
+        try:
+            sc.cancelJobGroup(op.handle.identifier)
+            return True
+        except Exception:
+            return False
+
+    if not cancel() or op.started_at is None:
+        return
+
+    def keep_cancelling() -> None:
+        while not op.worker_exited.wait(0.05) and cancel():
+            pass
+
+    threading.Thread(
+        target=keep_cancelling, daemon=True,
+        name=f"sql-gateway-cancel-{op.handle.identifier}",
+    ).start()
 
 
 def _result_rows(df) -> Iterator:
@@ -1029,8 +1059,7 @@ class SqlGatewayRestEndpoint:
     def _r_fetch(self, params, body):
         sh, oh = params["sh"], params["oh"]
         rs = self.service.fetch_results(
-            SessionHandle(sh), OperationHandle(oh), int(params["token"]),
-            wait_s=RESULT_WAIT_S,
+            SessionHandle(sh), OperationHandle(oh), int(params["token"])
         )
         next_uri = (
             f"/v2/sessions/{sh}/operations/{oh}/result/{rs.next_token}"

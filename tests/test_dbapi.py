@@ -314,6 +314,22 @@ def test_rest_drained_operations_are_closed(endpoint, service):
         assert not sess.operations
 
 
+def test_cursor_closes_when_server_close_fails(endpoint, monkeypatch):
+    with dbapi.connect(url=endpoint.url) as conn:
+        cur = conn.cursor()
+        cur.execute("SELECT 1 AS a")  # not drained: its operation is open
+
+        def gone(oh):
+            raise dbapi.OperationalError("gateway gone")
+
+        monkeypatch.setattr(conn._transport, "close_operation", gone)
+        with pytest.raises(dbapi.OperationalError, match="gateway gone"):
+            cur.close()
+        with pytest.raises(dbapi.InterfaceError):
+            cur.fetchone()
+        cur.close()  # already closed: no second server call
+
+
 def test_rest_concurrent_sessions_on_kept_alive_connections(endpoint):
     import threading
 

@@ -159,6 +159,28 @@ def test_cancel_operation(service, session):
         service.fetch_results(session, oh, 0)
 
 
+def test_cancel_before_first_job_kills_later_jobs(service, session):
+    oh = service.execute_statement(
+        session, "SELECT java_method('java.lang.Thread', 'sleep', 8000L) AS s"
+    )
+    op = service._session(session).operations[oh.identifier]
+    deadline = time.monotonic() + 30
+    while op.started_at is None:  # a worker took it; no job submitted yet
+        assert time.monotonic() < deadline, "operation never started"
+        time.sleep(0.005)
+    service.cancel_operation(session, oh)
+    assert service.get_operation_info(session, oh)["status"] == "CANCELED"
+    # the job submitted after the cancel is killed, not left to sleep 8 s
+    assert op.worker_exited.wait(6), "canceled statement still running"
+    tracker = service._base_spark.sparkContext.statusTracker()
+    states = [
+        info.status
+        for j in tracker.getJobIdsForGroup(oh.identifier)
+        if (info := tracker.getJobInfo(j)) is not None
+    ]
+    assert "SUCCEEDED" not in states
+
+
 def test_unknown_handles(service, session):
     with pytest.raises(GatewayError, match="unknown session"):
         service.execute_statement(SessionHandle("nope"), "SELECT 1")
@@ -398,33 +420,39 @@ def test_rest_cancel_during_first_page(rest, service):
     try:
         _, r = req("POST", "/v2/sessions", {})
         sh = r["sessionHandle"]
+        # long enough to be cancelled mid-job, short enough that a missed
+        # cancel cannot hold a worker (and interpreter exit) for long
         _, r = req("POST", f"/v2/sessions/{sh}/statements", {
             "statement": "SELECT java_method('java.lang.Thread', 'sleep', "
-            "60000L) AS s"
+            "8000L) AS s"
         })
         oh = r["operationHandle"]
         ops = f"/v2/sessions/{sh}/operations/{oh}"
+        tracker = service._base_spark.sparkContext.statusTracker()
+
+        def job_states():
+            return [
+                info.status
+                for j in tracker.getJobIdsForGroup(oh)
+                if (info := tracker.getJobInfo(j)) is not None
+            ]
+
         deadline = time.monotonic() + 60
-        while req("GET", f"{ops}/status")[1]["timings"]["planned"] is None:
-            assert time.monotonic() < deadline, "statement never planned"
-            time.sleep(0.05)
-        time.sleep(0.3)  # the first-page job is running
+        while "RUNNING" not in job_states():  # the first-page job started
+            assert time.monotonic() < deadline, "first-page job never ran"
+            time.sleep(0.02)
         assert req("POST", f"{ops}/cancel", {})[0] == 200
         _, st = req("GET", f"{ops}/status")
         assert st["status"] == "CANCELED"
+        assert st["timings"]["planned"] is not None
         assert st["timings"]["firstPageReady"] is None
         code, err = req("GET", f"{ops}/result/0")
         assert code == 400 and err["status"] == "CANCELED"
         # the first-page job itself was killed, not left sleeping
-        tracker = service._base_spark.sparkContext.statusTracker()
-        assert tracker.getJobIdsForGroup(oh)
-        while any(
-            (info := tracker.getJobInfo(j)) is not None
-            and info.status == "RUNNING"
-            for j in tracker.getJobIdsForGroup(oh)
-        ):
+        while "RUNNING" in job_states():
             assert time.monotonic() < deadline, "first-page job not killed"
             time.sleep(0.1)
+        assert job_states() and "SUCCEEDED" not in job_states()
         req("DELETE", f"/v2/sessions/{sh}")
     finally:
         conn.close()
