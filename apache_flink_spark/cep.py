@@ -1096,7 +1096,6 @@ def _compile_body(
     order_by: str,
     measures: dict[str, str],
     skip: str = "SKIP TO NEXT ROW",
-    stream: bool = False,
 ) -> tuple[str, frozenset[str], frozenset[str]]:
     """Compile a Pattern to a MATCH_RECOGNIZE body. Returns
     ``(body, enum_vars, gap_vars)``:
@@ -1378,7 +1377,7 @@ def _compile_body(
                 ng = not_guard()
                 if ng is not None:
                     base = ng if base == "TRUE" else f"({base}) AND {ng}"
-                if greedy_exit is not None and not stream:
+                if greedy_exit is not None:
                     # r12/r13 — greedy() PROCEED guard (CEPITCase:1049;
                     # NFACompiler.updateWithGreedyCondition:1036 ANDs
                     # NOT(takeCondition) onto ALL of the sink state's
@@ -1394,9 +1393,6 @@ def _compile_body(
                     # the escape fires the rest of the gap is free; the
                     # r12 first-row form models that escape
                     # (GreedyITCase testGreedyUntil*:186/:225 pins).
-                    # Streaming applies its own rule natively in the
-                    # matcher — bind-aggregates in gap DEFINEs would
-                    # hit the cross-variable reject there.
                     if greedy_exit_until:
                         base = (
                             f"({base}) AND ((COUNT({gap}.{tcol}) > 1) "
@@ -1531,7 +1527,7 @@ def _compile_body(
                         f"({def_map[tv]}) AND "
                         f"(NOT COALESCE(({guards[i]}), FALSE))"
                     )
-                if greedy_exit is not None and not stream:
+                if greedy_exit is not None:
                     # r12/r13 — greedy PROCEED guard lands on the
                     # group's HEAD first take (the group's entry row);
                     # guarded regardless of gap rows before it (the
@@ -1615,7 +1611,7 @@ def _compile_body(
                 )
                 if lw != "TRUE":
                     cond = f"({cond}) AND {lw}"
-            if greedy_exit is not None and not stream:
+            if greedy_exit is not None:
                 # r12/r13 — greedy PROCEED guard on the next element's
                 # FIRST take (own-var COUNT is RUNNING: first take ==
                 # 1); later takes/repetitions happen at the sink's
@@ -2178,27 +2174,15 @@ def cep_select_stream(
     skip: str = "SKIP TO NEXT ROW",
 ) -> DataFrame:
     """CEP.pattern(DataStream, pattern).select(...) — run the pattern on
-    an UNBOUNDED stream (r8; the reference's primary CEP deployment mode,
-    CepOperator.java:82). Compiles the Pattern to a MATCH_RECOGNIZE body
-    and drives the keyed-state streaming NFA
-    (streaming/match_stream.py), inheriting its subset contract:
-    watermarked input, BIGINT keys/order, own-row or PREV/NEXT-nav
-    DEFINEs. followedBy chains, strict (``consecutive()``) loops,
-    bounded quantifiers, middle ``notFollowedBy`` — and, since r9, the
-    RELAXED loop default: the gap-interleaved compiled shape
-    ``A (G*? A)*`` is recognized as a flat loop with an ignore-row
-    predicate (the reference NFA's IGNORE self-transition, NFA.java:76),
-    with the reference's default multi-match prefix emission
-    (NFAITCase.java:1871 testSkipTillNextOneOrMore). r10: single-level
-    GroupPattern loops stream too — ``begin(inner)`` with any
-    quantifier (default multi-match, greedy()/reluctant() pins, exact
-    counts) compiles to a group-body loop element on the same engine
-    (GroupPattern.java:30). r11: followedByAny INSIDE a group body
-    (SKIP_TILL_ANY inner edges branch the body scan per gap extent)
-    and NESTED group loops (the anchor+repetition shape recurses —
-    a recursive body matcher on the same certified-prefix scan) stream
-    too. The default SKIP TO NEXT ROW is the reference
-    CEP's no-skip strategy, supported streaming since r8."""
+    an UNBOUNDED stream (the reference's primary CEP deployment mode,
+    CepOperator.java:82). The Pattern compiles to the same
+    MATCH_RECOGNIZE body as cep_select, greedy() PROCEED guards included
+    as DEFINE conjuncts, and runs on the keyed-state streaming driver
+    (streaming/match_stream.py), which calls the batch matcher. The
+    driver's subset applies: watermarked input, BIGINT keys and event
+    time, a within() horizon for unbounded loops, and the default SKIP
+    TO NEXT ROW for multi-match emission. A trailing notFollowedBy runs
+    as a timeout side output instead (two-element form)."""
     from apache_flink_spark.streaming.match_stream import (
         streaming_match_recognize,
     )
@@ -2283,17 +2267,10 @@ def cep_select_stream(
                 )
         return out.select(*cols)
     body, enum_vars, gap_vars = _compile_body(
-        pattern, partition_by, order_by, measures, skip, stream=True
-    )
-    # r12 — flat greedy()-pinned loops carry the PROCEED guard natively
-    # in the streaming matcher (batch compiles it as DEFINE conjuncts)
-    greedy_vars = frozenset(
-        e.name for e in pattern._elems
-        if e.group is None and e.name and e.greedy_flag and e.quant
+        pattern, partition_by, order_by, measures, skip
     )
     return streaming_match_recognize(
         stream, body, cep_enum_vars=enum_vars, cep_gap_vars=gap_vars,
-        cep_greedy_vars=greedy_vars,
     )
 
 

@@ -48,8 +48,10 @@ Execution strategy (Spark-first):
      JVM-side as boolean columns (Catalyst expressions, codegen, pushdown-
      friendly) — the Python matcher never evaluates SQL.
   2. Rows shuffle once on PARTITION BY; an Arrow-batched ``applyInPandas``
-     runs a linear-pattern NFA per key over the precomputed booleans (the
-     same keyed, time-ordered traversal CepOperator performs). Per-key rows
+     runs the matcher (MatchPlan — the one the streaming driver in
+     streaming/match_stream.py runs too) per key over the precomputed
+     booleans (the same keyed, time-ordered traversal CepOperator
+     performs). Per-key rows
      must fit in executor memory — identical to the reference's per-key NFA
      state assumption.
   3. The MATCH_RECOGNIZE subtree is replaced by a temp view so the OUTER
@@ -60,6 +62,7 @@ Execution strategy (Spark-first):
 from __future__ import annotations
 
 import ast
+import functools
 import itertools
 import operator as _op
 import re
@@ -1032,10 +1035,86 @@ def _parse_defines(
                 )
             return re.sub(rf"\b{var}\s*\.\s*(\w+)", r'__row("\1")', seg)
 
-        cross[var] = _sql_pred_to_python(
-            _outside_literals(pred, rewrite_binds), columns, var
-        )
+        try:
+            cross[var] = _sql_pred_to_python(
+                _outside_literals(pred, rewrite_binds), columns, var
+            )
+            _compile_3vl(cross[var], f"<mr-define-{var}>")
+        except (MatchRecognizeError, SyntaxError):
+            # own-row parts outside the Python subset (scalar functions,
+            # typed literals, ...) evaluate on the JVM instead, as
+            # precomputed columns: ("OWN", sql, 0) entries of ``nav``
+            own: dict[str, str] = {}
+            hoisted = _hoist_own_row(pred, var, variables, own, len(nav))
+            if not own:
+                raise
+            for alias, sql in own.items():
+                nav[alias] = ("OWN", sql, 0)
+            cross[var] = _sql_pred_to_python(
+                _outside_literals(hoisted, rewrite_binds), columns, var
+            )
     return out, nav, cross
+
+
+#: words that may precede a parenthesized sub-expression; any other word
+#: before "(" makes it a function call or an IN list
+_PAREN_KEYWORDS = {"NOT", "AND", "OR", "WHEN", "THEN", "ELSE"}
+
+
+def _hoist_own_row(pred, var, variables, own: dict, base: int) -> str:
+    """Replace each maximal parenthesized OWN-ROW sub-expression of the
+    cross-variable predicate ``pred`` (no other variable, no bind or bind
+    aggregate, no navigation) by a column alias ``__mr_own<k>``, adding
+    ``alias -> sql`` (own-variable prefix stripped) to ``own``."""
+    others = variables - {var}
+    out: list[str] = []
+    i = 0
+    while i < len(pred):
+        ch = pred[i]
+        if ch in "'\"":  # a literal: copy verbatim
+            j = pred.find(ch, i + 1) + 1 or len(pred)
+            out.append(pred[i:j])
+            i = j
+            continue
+        if ch != "(":
+            out.append(ch)
+            i += 1
+            continue
+        depth, j, quote = 0, i, None
+        while j < len(pred):
+            c = pred[j]
+            if quote:
+                quote = None if c == quote else quote
+            elif c in "'\"":
+                quote = c
+            elif c == "(":
+                depth += 1
+            elif c == ")":
+                depth -= 1
+                if depth == 0:
+                    break
+            j += 1
+        inner = pred[i + 1:j]
+        bare = "".join(re.split(r"(\"[^\"]*\"|'[^']*')", inner)[0::2])
+        word = re.search(r"(\w+)\s*$", pred[:i])
+        if word and word.group(1).upper() not in _PAREN_KEYWORDS:
+            out.append(pred[i:j + 1])  # function arguments / IN list
+        elif not (
+            _BIND_RE.search(bare) or _BIND_AGG_RE.search(bare)
+            or _UBIND_RE.search(bare) or "__mr_" in bare
+            or any(re.search(rf"\b{o}\s*\.", bare) for o in others)
+        ):
+            alias = f"__mr_own{base + len(own)}"
+            own[alias] = _outside_literals(
+                inner, lambda seg: re.sub(rf"\b{var}\s*\.\s*(\w+)", r"\1", seg)
+            )
+            out.append(alias)
+        else:
+            out.append(
+                "(" + _hoist_own_row(inner, var, variables, own, base) + ")"
+            )
+        i = j + 1
+    return "".join(out)
 
 
 def _emit_measures(
@@ -1155,6 +1234,539 @@ def _normalize_quoted_vars(body: str) -> str:
     return body
 
 
+# ---------------------------------------------------------------- the
+# matcher. The batch compiler (run_partition below) and the streaming
+# driver (streaming/match_stream.py) both run it — the reference runs one
+# NFA (cep/nfa/NFA.java:76) behind StreamExecMatch and BatchExecMatch.
+# A pattern compiles once to a MatchPlan; MatchPlan.matcher binds it to
+# one buffer of rows. Every matcher scans [start, limit) and reports
+# whether it wanted row ``limit`` itself: when ``limit`` is the stream's
+# certified frontier, such a scan is undecided — the row it needs has not
+# been certified yet.
+
+
+def _sql_value(x):
+    return _NULL if x is None or x != x else x  # None/NaN -> SQL NULL
+
+
+def _row_evaluator(sat, cross_fns: dict, value):
+    """The 3VL row evaluator: ``ok(v, j, binds)`` — does row j satisfy
+    variable v's DEFINE, given the in-flight match's binds (var -> row
+    indices)? Own-row variables read the precomputed ``sat[v][j]``;
+    cross-variable ones (LAST/FIRST binds, bind aggregates, universal
+    navigation — and PREV/NEXT on the stream) evaluate their compiled
+    3VL code, reading columns through ``value(col, j)``. The reference
+    evaluates the same view of its shared buffer (NFA.java:76)."""
+    # one reusable eval-globals dict: rebuilding {**_3VL_GLOBALS, ...}
+    # per candidate row was measurable on bind-heavy patterns
+    eval_g = dict(_3VL_GLOBALS)
+
+    def ok(v: str, j: int, binds: dict) -> bool:
+        code = cross_fns.get(v)
+        if code is None:
+            return bool(sat[v][j])
+
+        def __row(col):
+            return _sql_value(value(col, j))
+
+        def __bind(bv, col, fn, off):
+            idxs = binds.get(bv, ())
+            if bv == v:
+                idxs = list(idxs) + [j]  # RUNNING: current row is in v
+            k = (len(idxs) - 1 - off) if fn == "LAST" else off
+            if k < 0 or k >= len(idxs):
+                return _NULL  # unmatched variable / offset: SQL NULL
+            return _sql_value(value(col, idxs[k]))
+
+        def __bagg(bv, col, fn, incl=0):
+            # aggregate over the variable's binds (the reference's
+            # IterativeCondition reductions over ctx.getEventsForPattern;
+            # RUNNING: the own variable includes the current candidate
+            # row; _INCL marks a gap variable evaluating the take
+            # condition as-if-taken; _EXCL (-1) marks an until()
+            # aggregate — accepted events only, never the candidate)
+            idxs = binds.get(bv, ())
+            if incl > 0 or (incl == 0 and bv == v):
+                idxs = list(idxs) + [j]
+            vals = [
+                x for x in (value(col, i) for i in idxs)
+                if x is not None and x == x
+            ]
+            if fn == "COUNT":
+                return len(vals)
+            if not vals:
+                return _NULL
+            if fn == "SUM":
+                return sum(vals)
+            if fn == "MIN":
+                return min(vals)
+            if fn == "MAX":
+                return max(vals)
+            return sum(vals) / len(vals)  # AVG
+
+        def __ubind(col, fn, off):
+            # UNIVERSAL variable navigation: the match's rows so far in
+            # stream order, candidate last; offsets out of range are NULL
+            rows = sorted(i for ix in binds.values() for i in ix)
+            rows.append(j)
+            k = (len(rows) - 1 - off) if fn == "LAST" else off
+            if k < 0 or k >= len(rows):
+                return _NULL
+            return _sql_value(value(col, rows[k]))
+
+        eval_g["__row"], eval_g["__bind"] = __row, __bind
+        eval_g["__bagg"], eval_g["__ubind"] = __bagg, __ubind
+        try:
+            res = eval(code, eval_g)  # noqa: S307 - validated subset
+        except (TypeError, ZeroDivisionError):
+            # untransformed NULL use / div-by-zero -> not TRUE (SQL)
+            return False
+        # Kleene: the row matches only when the predicate is TRUE;
+        # UNKNOWN and NULL coerce to false (SQL WHERE semantics).
+        return res is not _UNKNOWN and res is not _NULL and bool(res)
+
+    return ok
+
+
+def _label(sat, alts, j: int) -> str:
+    """The leftmost alternative row j satisfies (the reference's branch
+    preference)."""
+    for v in alts:
+        if sat[v][j]:
+            return v
+    raise AssertionError("unlabelable matched row")
+
+
+def _match_flat(pat, elem_ok, sat, start: int, limit: int):
+    """Leftmost match of a flat own-row pattern from ``start``; returns
+    ``((var -> sorted rows, end_exclusive) | None, wanted_limit)``.
+    Greedy elements try the longest extension first, reluctant ones the
+    shortest (the reference's greedy vs lazy transitions); backtracking
+    only re-picks repetition counts — own-row predicates need no other
+    backtracking. A reluctant element reads a row only to try a longer
+    take."""
+    edge = False
+
+    def takes(ok, ri, lo, hi):
+        nonlocal edge
+        n = 0
+        while True:
+            if n >= lo:
+                yield n
+            if hi is not None and n >= hi:
+                return
+            if ri + n >= limit:
+                edge = True
+                return
+            if not ok[ri + n]:
+                return
+            n += 1
+
+    def rec(pi: int, ri: int):
+        nonlocal edge
+        if pi == len(pat):
+            return {}, ri
+        alts, (lo, hi), greedy = pat[pi]
+        ok = elem_ok[pi]
+        if greedy:
+            n = 0
+            while hi is None or n < hi:
+                if ri + n >= limit:
+                    edge = True
+                    break
+                if not ok[ri + n]:
+                    break
+                n += 1
+            order = range(n, lo - 1, -1)
+        else:
+            order = takes(ok, ri, lo, hi)
+        for take in order:
+            res = rec(pi + 1, ri + take)
+            if res is not None:
+                assign, end = res
+                if take:
+                    assign = dict(assign)
+                    for j in range(ri, ri + take):
+                        v = _label(sat, alts, j)
+                        assign[v] = [j] + assign.get(v, [])
+                return assign, end
+        return None
+
+    res = rec(0, start)
+    if res is None or res[1] == start:
+        return None, edge  # no match / zero-width — never emitted
+    # rec prepends per element right-to-left; restore row order
+    assign, end = res
+    return ({v: sorted(ix) for v, ix in assign.items()}, end), edge
+
+
+def _match_binds(pat, ok, start: int, limit: int):
+    """Bind-tracking variant of _match_flat for cross-variable DEFINEs:
+    forward DFS carrying var -> [row indices]. Labels and extension
+    validity are evaluated under the binds accumulated so far, so
+    LAST(A.x)/FIRST(A.x) see exactly the reference NFA's shared-buffer
+    view. Backtracking re-picks repetition counts only — label choices
+    for a shorter take are prefixes of the longer scan (row k's
+    evaluation only ever saw rows < k)."""
+    edge = False
+
+    def rec(pi: int, ri: int, binds: dict):
+        if pi == len(pat):
+            return binds, ri
+        alts, (lo, hi), greedy = pat[pi]
+        cur = {v: list(x) for v, x in binds.items()}
+        labels: list[str] = []
+
+        def takes():
+            nonlocal edge
+            while True:
+                n = len(labels)
+                if n >= lo:
+                    yield n
+                if hi is not None and n >= hi:
+                    return
+                j = ri + n
+                if j >= limit:
+                    edge = True
+                    return
+                v_hit = next((v for v in alts if ok(v, j, cur)), None)
+                if v_hit is None:
+                    return
+                labels.append(v_hit)
+                cur.setdefault(v_hit, []).append(j)
+
+        order = takes()
+        for take in list(order)[::-1] if greedy else order:
+            nb = {v: list(x) for v, x in binds.items()}
+            for t in range(take):
+                nb.setdefault(labels[t], []).append(ri + t)
+            res = rec(pi + 1, ri + take, nb)
+            if res is not None:
+                return res
+        return None
+
+    res = rec(0, start, {})
+    if res is None or res[1] == start:
+        return None, edge
+    binds, end = res
+    return ({v: sorted(i) for v, i in binds.items() if i}, end), edge
+
+
+def _match_vm(prog, nregs: int, ok, start: int, limit: int):
+    """Backtracking VM for patterns with nested sequence groups
+    (PATTERN (A (G*? A)* B), quantified GroupPattern groups, alternation
+    of sequences). Explicit-stack regex backtracking: state is (pc, row
+    index, bind-trail length, loop registers); labels take the leftmost
+    satisfying alternative with no backtrack over label choice (same
+    preference as the flat matchers); the empty-loop guard (chkreg)
+    kills a loop iteration that consumed no rows."""
+    binds: dict[str, list[int]] = {}
+    trail: list[str] = []
+    bstack: list[tuple] = []
+    regs = [-1] * nregs
+    pc, ri = 0, start
+    edge = False
+
+    def _backtrack() -> bool:
+        nonlocal pc, ri, regs
+        if not bstack:
+            return False
+        pc, ri, tl, regs = bstack.pop()
+        while len(trail) > tl:
+            binds[trail.pop()].pop()
+        return True
+
+    while True:
+        op = prog[pc]
+        o = op[0]
+        if o == "row":
+            hit = None
+            if ri >= limit:
+                edge = True
+            else:
+                hit = next((a for a in op[1] if ok(a, ri, binds)), None)
+            if hit is None:
+                if not _backtrack():
+                    return None, edge
+                continue
+            binds.setdefault(hit, []).append(ri)
+            trail.append(hit)
+            ri += 1
+            pc += 1
+        elif o == "split":
+            bstack.append((op[2], ri, len(trail), regs[:]))
+            pc = op[1]
+        elif o == "jmp":
+            pc = op[1]
+        elif o == "setreg":
+            regs[op[1]] = ri
+            pc += 1
+        elif o == "chkreg":
+            if regs[op[1]] == ri:
+                if not _backtrack():
+                    return None, edge
+            else:
+                pc += 1
+        else:  # match
+            if ri > start:
+                return (
+                    {v: list(ix) for v, ix in binds.items() if ix}, ri
+                ), edge
+            if not _backtrack():
+                return None, edge
+
+
+def _match_vm_all(prog, nregs: int, ok, gaps, start: int, limit: int):
+    """The reference CEP's default emission (NFAITCase.java:1848-1900):
+    ALL matches beginning at ``start``, as a list. Enum-flagged splits
+    (loop counts, optional branches, SKIP_TILL_ANY gap extents) explore
+    BOTH branches, each completed path a separate match; normal splits
+    keep first-success backtracking (a greedy()/reluctant() pin, or a
+    deterministic SKIP_TILL_NEXT ignore gap whose take/skip branches are
+    mutually exclusive). Matches dedup on positive-variable binds —
+    IGNOREd gap rows (``gaps``) are not part of a match's identity.
+
+    Explicit-frame DFS (no Python recursion: depth is bounded by heap,
+    not the C stack). Each frame is one subtree [pc, ri, regs, consumed,
+    phase, split_op, r1]: phase RUN = running, NORM = awaiting the take
+    branch of a normal split (prune the skip branch on success), ENUM1/
+    ENUM2 = awaiting the branches of an enum-flagged split. ``ret``
+    carries the just-popped frame's "subtree completed >= 1 match"."""
+    out = []
+    seen: set[tuple] = set()
+    binds: dict[str, list[int]] = {}
+    edge = False
+    RUN, NORM, ENUM1, ENUM2 = 0, 1, 2, 3
+
+    def _emit(ri: int) -> bool:
+        if ri == start:
+            return False  # zero-width — never a match
+        a = {v: list(ix) for v, ix in binds.items() if ix and v not in gaps}
+        if not a:
+            return False  # gap-only consumption
+        key = tuple(sorted((v, tuple(ix)) for v, ix in a.items()))
+        if key not in seen:
+            seen.add(key)
+            out.append((a, ri))
+            if len(out) > 10_000:
+                raise MatchRecognizeError(
+                    "CEP multi-match emission exceeded 10000 matches for "
+                    "one start row — bound the pattern with within() or "
+                    "times(m,n), or pin greedy()/reluctant()"
+                )
+        return True
+
+    def _pop(f) -> None:
+        for v in f[3]:
+            binds[v].pop()
+        stack.pop()
+
+    stack = [[0, start, [-1] * nregs, [], RUN, None, False]]
+    ret = False
+    while stack:
+        f = stack[-1]
+        if f[4] == NORM:
+            if ret:  # take branch matched — prune skip branch
+                _pop(f)
+                continue  # ret stays True
+            f[0] = f[5][2]  # fall through to the skip branch
+            f[4] = RUN
+        elif f[4] == ENUM1:
+            f[6] = ret
+            f[4] = ENUM2
+            stack.append([f[5][2], f[1], f[2][:], [], RUN, None, False])
+            continue
+        elif f[4] == ENUM2:
+            ret = f[6] or ret
+            _pop(f)
+            continue
+        # RUN: execute linear ops until a split/frame exit
+        pc, ri, regs = f[0], f[1], f[2]
+        while True:
+            op = prog[pc]
+            o = op[0]
+            if o == "row":
+                hit = None
+                if ri >= limit:
+                    edge = True
+                else:
+                    hit = next((a for a in op[1] if ok(a, ri, binds)), None)
+                if hit is None:
+                    ret = False
+                    _pop(f)
+                    break
+                binds.setdefault(hit, []).append(ri)
+                f[3].append(hit)
+                ri += 1
+                pc += 1
+            elif o == "split":
+                f[0], f[1], f[4], f[5] = pc, ri, (ENUM1 if op[3] else NORM), op
+                stack.append([op[1], ri, regs[:], [], RUN, None, False])
+                break
+            elif o == "jmp":
+                pc = op[1]
+            elif o == "setreg":
+                regs[op[1]] = ri
+                pc += 1
+            elif o == "chkreg":
+                if regs[op[1]] == ri:
+                    ret = False
+                    _pop(f)
+                    break
+                pc += 1
+            else:  # match
+                ret = _emit(ri)
+                _pop(f)
+                break
+    return out, edge
+
+
+def _match_permute(order, sat, start: int, limit: int):
+    """PERMUTE(v1..vk): the k rows from ``start`` must satisfy some
+    permutation of the variables; permutations are tried in
+    lexicographic order of the listed variables (SQL standard
+    preference), first hit wins."""
+    k = len(order[0])
+    if start + k > limit:
+        return None, True
+    for perm in order:
+        if all(sat[v][start + j] for j, v in enumerate(perm)):
+            return ({v: [start + j] for j, v in enumerate(perm)}, start + k), False
+    return None, False
+
+
+def _permute_tree(pvars):
+    """PERMUTE(v1..vk) as an alternation of the k! variable sequences, in
+    lexicographic order of the listed variables (the SQL standard's
+    preference; the reference's parserImpls.ftl expands it the same)."""
+    return ("alt", [
+        ("seq", [("var", (v,), 1, 1, True) for v in perm])
+        for perm in itertools.permutations(pvars)
+    ])
+
+
+def _cross_columns(codes) -> set[str]:
+    """The input columns the 3VL predicates ``codes`` read."""
+    return {
+        c for code in codes
+        for c in re.findall(r'__(?:row|bind|bagg)\("(?:\w+", ")?(\w+)"', code)
+        + re.findall(r'__ubind\("(\w+)"', code)
+    }
+
+
+def _skip_target(skip: tuple[str, str], match_start: int, assign) -> int:
+    """AFTER MATCH SKIP TO FIRST/LAST <var>: the resume row (reference
+    SkipToFirst/SkipToLast). A target that cannot advance past the match
+    start raises — the reference's infinite-loop guard."""
+    which, var = skip
+    idxs = assign.get(var)
+    if not idxs:
+        raise MatchRecognizeError(
+            f"AFTER MATCH SKIP TO {which.upper()} {var}: variable "
+            "did not participate in the match"
+        )
+    r = idxs[0] if which == "first" else idxs[-1]
+    if r <= match_start:
+        raise MatchRecognizeError(
+            f"AFTER MATCH SKIP TO {which.upper()} {var} cannot "
+            "advance past the match start (infinite loop)"
+        )
+    return r
+
+
+class MatchPlan:
+    """One pattern, compiled for matching from a start row.
+
+    The matcher is picked once: a standalone PERMUTE over own-row
+    variables searches permutations; CEP multi-match emission (enum
+    variables) runs the all-matches VM; other nested structure — and
+    PERMUTE with cross-variable binds — runs the backtracking VM; a flat
+    pattern runs the bind-tracking DFS when some DEFINE is
+    cross-variable, else the own-row DFS. ``cross_codes`` maps variables
+    to their 3VL Python predicates (_parse_defines)."""
+
+    def __init__(
+        self, tree, cross_codes: dict,
+        enum_vars: frozenset = frozenset(),
+        gap_vars: frozenset = frozenset(),
+        permute_vars: list | None = None,
+    ):
+        self.cross_fns = {
+            v: _compile_3vl(code, f"<mr-define-{v}>")
+            for v, code in cross_codes.items()
+        }
+        self.gaps = frozenset(gap_vars)
+        self.pat = self.prog = self.anchor = self.order = None
+        self.nregs = 0
+        if permute_vars is not None and not cross_codes:
+            self.kind = "permute"
+            self.order = list(itertools.permutations(permute_vars))
+            return
+        if permute_vars is not None:
+            # the bind trail gives each permutation a stable bind order
+            if len(permute_vars) > 6:
+                raise MatchRecognizeError(
+                    "PERMUTE with cross-variable DEFINE binds supports at "
+                    "most 6 variables (the alternation expands k! branches)"
+                )
+            tree = _permute_tree(permute_vars)
+        # multi-match emission explores enum splits exhaustively — always
+        # the VM, even for flat patterns (a flat A+ still branches into
+        # every prefix, testStrictOneOrMore)
+        self.pat = None if enum_vars else _tree_flat(tree)
+        if self.pat is not None:
+            self.kind = "binds" if cross_codes else "flat"
+        else:
+            self.prog, self.nregs = _compile_vm(tree, frozenset(enum_vars))
+            self.anchor = _anchor_alts(tree)
+            self.kind = "all" if enum_vars else "vm"
+
+    def elem_ok(self, sat) -> list:
+        """Per flat element: a row can extend the repetition iff ANY
+        alternative holds (``sat`` values are numpy bool arrays)."""
+        out = []
+        for alts, _q, _g in self.pat or ():
+            ok = sat[alts[0]]
+            for v in alts[1:]:
+                ok = ok | sat[v]
+            out.append(ok)
+        return out
+
+    def matcher(self, sat, value):
+        """Bind the plan to one buffer of rows: ``sat`` maps each
+        variable to its own-row truth per row, ``value(col, j)`` reads a
+        column for cross-variable DEFINEs. Returns ``match(start, limit,
+        frontier=None) -> (matches, at_frontier)``: ``matches`` lists
+        ``(var -> rows, end_exclusive)`` — at most one unless the plan
+        enumerates — and ``at_frontier`` says a scan wanted row
+        ``limit`` while ``limit == frontier``."""
+        kind = self.kind
+        if kind == "permute":
+            run = functools.partial(_match_permute, self.order, sat)
+        elif kind == "flat":
+            run = functools.partial(
+                _match_flat, self.pat, self.elem_ok(sat), sat
+            )
+        else:
+            ok = _row_evaluator(sat, self.cross_fns, value)
+            if kind == "binds":
+                run = functools.partial(_match_binds, self.pat, ok)
+            elif kind == "vm":
+                run = functools.partial(_match_vm, self.prog, self.nregs, ok)
+            else:
+                run = functools.partial(
+                    _match_vm_all, self.prog, self.nregs, ok, self.gaps
+                )
+
+        def match(start: int, limit: int, frontier=None):
+            res, edge = run(start, limit)
+            if kind != "all":
+                res = [] if res is None else [res]
+            return res, edge and limit == frontier
+
+        return match
+
+
 def compile_match_recognize(
     spark: SparkSession, source: DataFrame, body: str,
     cep_enum_vars: frozenset | None = None,
@@ -1223,30 +1835,20 @@ def compile_match_recognize(
     order_cols = [c for c, _ in order_specs]
     cep_enum = frozenset(cep_enum_vars or ())
     cep_gaps = frozenset(cep_gap_vars or ())
-    vm_prog = vm_nregs = vm_anchor = None
+    tree = None
     if permute_vars is not None:
-        # downstream machinery sees k single-variable {1,1} elements;
-        # the matcher itself switches to the permutation search.
+        # the skip-target check below sees k single-variable {1,1}
+        # elements; MatchPlan switches to the permutation search.
         pattern = [((v,), (1, 1), True) for v in permute_vars]
-        variables = {v for alts, _, _ in pattern for v in alts}
+        variables = set(permute_vars)
         if cep_enum:
             raise MatchRecognizeError(
                 "PERMUTE with CEP multi-match emission is not supported"
             )
     else:
         tree = _parse_pattern_tree(m.group("pat"))
-        pattern = _tree_flat(tree)
+        pattern = None if cep_enum else _tree_flat(tree)
         variables = _tree_vars(tree)
-        if cep_enum:
-            # multi-match emission explores enum splits exhaustively —
-            # always the VM, even for flat patterns (a flat A+ still
-            # branches into every prefix, testStrictOneOrMore)
-            pattern = None
-        if pattern is None:
-            # nested structure (quantified sequence groups / alternation
-            # of sequences): the backtracking VM path
-            vm_prog, vm_nregs = _compile_vm(tree, cep_enum)
-            vm_anchor = _anchor_alts(tree)
     measures, post_fns = _parse_measures(m.group("meas"))
     # MATCH_ROWTIME() (r12 — Flink's rowtime-of-the-match function,
     # flink-table batch MatchRecognizeITCase
@@ -1398,6 +2000,9 @@ def compile_match_recognize(
 
         wspec = _W.partitionBy(*part_cols).orderBy(*order_exprs)
         for alias, (fn, col, n) in sorted(nav_cols.items()):
+            if fn == "OWN":
+                work = work.withColumn(alias, F.expr(col))
+                continue
             if col not in type_of:
                 raise MatchRecognizeError(
                     f"unknown column in PREV/NEXT navigation: {col!r}"
@@ -1452,46 +2057,13 @@ def compile_match_recognize(
             "horizon scans forward in event time)"
         )
 
-    pat = list(pattern) if pattern is not None else None
     meas = list(measures)
     parts = list(part_cols)
     meas_cols = sorted({c for _, _, c, _, _ in meas if c is not None})
     var_list = sorted(variables)
-    cross_codes = dict(cross_defs)
-    if permute_vars is not None and cross_codes:
-        # r9 (VERDICT r8 next-item #7): PERMUTE with cross-variable
-        # DEFINE binds compiles to an alternation of the k! variable
-        # sequences on the backtracking VM — the bind trail gives each
-        # permutation a stable bind order, and alternation branches are
-        # tried in lexicographic order of the listed variables (the SQL
-        # standard's PERMUTE preference, reference parserImpls.ftl
-        # expands PERMUTE the same way).
-        if len(permute_vars) > 6:
-            raise MatchRecognizeError(
-                "PERMUTE with cross-variable DEFINE binds supports at "
-                "most 6 variables (the alternation expands k! branches)"
-            )
-        branches = [
-            ("seq", [("var", (v,), 1, 1, True) for v in perm])
-            for perm in itertools.permutations(permute_vars)
-        ]
-        tree = ("alt", branches)
-        pattern = None
-        vm_prog, vm_nregs = _compile_vm(tree)
-        vm_anchor = _anchor_alts(tree)
-        permute_vars = None
-    permute_order = (
-        list(itertools.permutations(permute_vars))
-        if permute_vars is not None
-        else None
-    )
+    plan = MatchPlan(tree, cross_defs, cep_enum, cep_gaps, permute_vars)
     subset_map = dict(subsets)
-    cross_cols = sorted(
-        {c for code in cross_codes.values()
-         for c in re.findall(r'__(?:row|bind|bagg)\("(?:\w+", ")?(\w+)"', code)}
-        | {c for code in cross_codes.values()
-           for c in re.findall(r'__ubind\("(\w+)"', code)}
-    )
+    cross_cols = sorted(_cross_columns(cross_defs.values()))
 
     def run_partition(batches):
         """One call per PARTITION, not per key: the hash shuffle already
@@ -1508,9 +2080,6 @@ def compile_match_recognize(
         n = len(pdf)
         if n == 0:
             return
-        # (the all-matches engine below walks the VM with an explicit
-        # frame stack — no Python recursion, no recursionlimit games:
-        # depth is bounded by heap, not the C stack — r9 ADVICE)
         sat = {
             # astype("boolean") first: nav-null predicates arrive as object
             # dtype, and fillna on object warns about silent downcasting.
@@ -1520,156 +2089,9 @@ def compile_match_recognize(
             .to_numpy(dtype=bool)
             for v in var_list
         }
-        # Per pattern element: a row can extend the repetition iff ANY
-        # alternative matches it (own-row predicates make extension
-        # label-independent); the matched row is LABELED with the leftmost
-        # matching alternative (the reference's branch preference).
-        elem_ok = []
-        for alts, _q, _g in (pat or []):
-            ok = sat[alts[0]]
-            for v in alts[1:]:
-                ok = ok | sat[v]
-            elem_ok.append(ok)
-
-        def _label(alts, idx: int) -> str:
-            for v in alts:
-                if sat[v][idx]:
-                    return v
-            raise AssertionError("unlabelable matched row")
-
-        # Cross-variable DEFINE machinery (reference NFA.java:76
-        # sharedBuffer): predicates referencing LAST/FIRST of another
-        # variable evaluate per candidate row against the in-flight
-        # match's binds, so matching switches to the bind-tracking DFS
-        # below. Own-row variables still use their precomputed booleans.
-        cross_fns = {
-            v: _compile_3vl(code, f"<mr-define-{v}>")
-            for v, code in cross_codes.items()
-        }
+        elem_ok = plan.elem_ok(sat)
         pred_arr = {c: pdf[c].to_numpy() for c in cross_cols}
-        # one reusable eval-globals dict: rebuilding {**_3VL_GLOBALS, ...}
-        # per candidate row was measurable on bind-heavy patterns
-        eval_g = dict(_3VL_GLOBALS)
-
-        def ok_fn(v: str, j: int, binds: dict) -> bool:
-            if v not in cross_fns:
-                return bool(sat[v][j])
-
-            def __row(col):
-                x = pred_arr[col][j]
-                return _NULL if x is None or x != x else x  # None/NaN -> NULL
-
-            def __bind(bv, col, fn, off):
-                idxs = binds.get(bv, ())
-                if bv == v:
-                    idxs = list(idxs) + [j]  # RUNNING: current row is in v
-                k = (len(idxs) - 1 - off) if fn == "LAST" else off
-                if k < 0 or k >= len(idxs):
-                    return _NULL  # unmatched variable / offset: SQL NULL
-                x = pred_arr[col][idxs[k]]
-                return _NULL if x is None or x != x else x
-
-            def __bagg(bv, col, fn, incl=0):
-                # aggregate over the variable's binds (r10 —
-                # IterativeCondition reductions over
-                # ctx.getEventsForPattern; RUNNING: the own variable
-                # includes the current candidate row; _INCL marks a gap
-                # variable evaluating the take condition as-if-taken;
-                # _EXCL (-1, r11) marks an until() aggregate — accepted
-                # events only, never the candidate)
-                idxs = binds.get(bv, ())
-                if incl > 0 or (incl == 0 and bv == v):
-                    idxs = list(idxs) + [j]
-                vals = [
-                    x for x in (pred_arr[col][i] for i in idxs)
-                    if x is not None and x == x
-                ]
-                if fn == "COUNT":
-                    return len(vals)
-                if not vals:
-                    return _NULL
-                if fn == "SUM":
-                    return sum(vals)
-                if fn == "MIN":
-                    return min(vals)
-                if fn == "MAX":
-                    return max(vals)
-                return sum(vals) / len(vals)  # AVG
-
-            def __ubind(col, fn, off):
-                # UNIVERSAL variable navigation (r12): the match's rows
-                # so far in stream order, candidate last; offsets out of
-                # range yield SQL NULL
-                rows = sorted(i for ix in binds.values() for i in ix)
-                rows.append(j)
-                k = (len(rows) - 1 - off) if fn == "LAST" else off
-                if k < 0 or k >= len(rows):
-                    return _NULL
-                x = pred_arr[col][rows[k]]
-                return _NULL if x is None or x != x else x
-
-            eval_g["__row"], eval_g["__bind"] = __row, __bind
-            eval_g["__bagg"], eval_g["__ubind"] = __bagg, __ubind
-            try:
-                res = eval(  # noqa: S307 - compiled from the validated subset
-                    cross_fns[v], eval_g,
-                )
-            except (TypeError, ZeroDivisionError):
-                # untransformed NULL use / div-by-zero -> not TRUE (SQL)
-                return False
-            # Kleene: the row matches only when the predicate is TRUE;
-            # UNKNOWN and NULL coerce to false (SQL WHERE semantics).
-            return (
-                res is not _UNKNOWN and res is not _NULL and bool(res)
-            )
-
-        def try_match_binds(start: int, limit: int):
-            """Bind-tracking variant of try_match for cross-variable
-            DEFINEs: forward DFS carrying var -> [row indices]. Labels and
-            extension validity are evaluated under the binds accumulated
-            so far, so LAST(A.x)/FIRST(A.x) see exactly the reference
-            NFA's shared-buffer view. Backtracking re-picks repetition
-            counts only, like the vectorized path — label choices for a
-            shorter take are prefixes of the greedy scan (row k's
-            evaluation only ever saw rows < k)."""
-
-            def rec(pi: int, ri: int, binds: dict):
-                if pi == len(pat):
-                    return binds, ri
-                alts, (lo, hi), greedy = pat[pi]
-                cur = {v: list(x) for v, x in binds.items()}
-                labels = []
-                while (hi is None or len(labels) < hi) and ri + len(labels) < limit:
-                    j = ri + len(labels)
-                    v_hit = next(
-                        (v for v in alts if ok_fn(v, j, cur)), None
-                    )
-                    if v_hit is None:
-                        break
-                    labels.append(v_hit)
-                    cur.setdefault(v_hit, []).append(j)
-                take_max = len(labels)
-                order = (
-                    range(take_max, lo - 1, -1)
-                    if greedy
-                    else range(lo, take_max + 1)
-                )
-                for take in order:
-                    nb = {v: list(x) for v, x in binds.items()}
-                    for t in range(take):
-                        nb.setdefault(labels[t], []).append(ri + t)
-                    res = rec(pi + 1, ri + take, nb)
-                    if res is not None:
-                        return res
-                return None
-
-            res = rec(0, start, {})
-            if res is None:
-                return None
-            binds, end = res
-            if end == start:
-                return None
-            return {v: sorted(i) for v, i in binds.items() if i}, end
+        match = plan.matcher(sat, lambda col, j: pred_arr[col][j])
         # WITHIN horizon (reference CEP Pattern.within / MATCH_RECOGNIZE
         # WITHIN): rows at or later than match-start + interval are
         # OUTSIDE the match scope — the right window side is EXCLUSIVE
@@ -1695,265 +2117,6 @@ def compile_match_recognize(
         starts = np.flatnonzero(change)
         ends = np.append(starts[1:], n)
 
-        def try_match(start: int, limit: int):
-            """Leftmost match beginning at ``start`` within [start, limit);
-            returns (var -> sorted [row indices], end_exclusive) or None.
-            Greedy elements try the longest extension first, reluctant ones
-            the shortest (reference NFA greedy vs lazy transitions);
-            backtracking only re-picks repetition counts — own-row
-            predicates need no other backtracking."""
-
-            def rec(pi: int, ri: int):
-                if pi == len(pat):
-                    return {}, ri
-                alts, (lo, hi), greedy = pat[pi]
-                ok = elem_ok[pi]
-                take_max = 0
-                while (
-                    (hi is None or take_max < hi)
-                    and ri + take_max < limit
-                    and ok[ri + take_max]
-                ):
-                    take_max += 1
-                order = (
-                    range(take_max, lo - 1, -1)
-                    if greedy
-                    else range(lo, take_max + 1)
-                )
-                for take in order:
-                    res = rec(pi + 1, ri + take)
-                    if res is not None:
-                        assign, end = res
-                        if take:
-                            assign = dict(assign)
-                            for j in range(ri, ri + take):
-                                v = _label(alts, j)
-                                assign[v] = [j] + assign.get(v, [])
-                        return assign, end
-                return None
-
-            res = rec(0, start)
-            if res is None:
-                return None
-            assign, end = res
-            if end == start:
-                return None  # zero-width match — never emitted
-            # rec prepends per element right-to-left; restore row order.
-            assign = {v: sorted(idxs) for v, idxs in assign.items()}
-            return assign, end
-
-        def try_match_vm(start: int, limit: int):
-            """Backtracking VM for patterns with nested sequence groups
-            (r8 — PATTERN (A (G*? A)* B), quantified GroupPattern groups,
-            alternation of sequences). Explicit-stack regex backtracking:
-            state is (pc, row index, bind-trail length, loop registers);
-            labels take the leftmost satisfying alternative with no
-            backtrack over label choice (same preference as the flat
-            matchers); the empty-loop guard (chkreg) kills a loop
-            iteration that consumed no rows."""
-            binds: dict[str, list[int]] = {}
-            trail: list[str] = []
-            bstack: list[tuple] = []
-            regs = [-1] * vm_nregs
-            pc, ri = 0, start
-
-            def _backtrack():
-                nonlocal pc, ri, regs
-                if not bstack:
-                    return False
-                pc, ri, tl, regs = bstack.pop()
-                while len(trail) > tl:
-                    binds[trail.pop()].pop()
-                return True
-
-            while True:
-                op = vm_prog[pc]
-                o = op[0]
-                if o == "row":
-                    hit = None
-                    if ri < limit:
-                        for a in op[1]:
-                            if ok_fn(a, ri, binds):
-                                hit = a
-                                break
-                    if hit is None:
-                        if not _backtrack():
-                            return None
-                        continue
-                    binds.setdefault(hit, []).append(ri)
-                    trail.append(hit)
-                    ri += 1
-                    pc += 1
-                elif o == "split":
-                    bstack.append((op[2], ri, len(trail), regs[:]))
-                    pc = op[1]
-                elif o == "jmp":
-                    pc = op[1]
-                elif o == "setreg":
-                    regs[op[1]] = ri
-                    pc += 1
-                elif o == "chkreg":
-                    if regs[op[1]] == ri:
-                        if not _backtrack():
-                            return None
-                    else:
-                        pc += 1
-                else:  # match
-                    if ri > start:
-                        return (
-                            {v: list(ix) for v, ix in binds.items() if ix},
-                            ri,
-                        )
-                    if not _backtrack():
-                        return None
-
-        def try_match_vm_all(start: int, limit: int):
-            """r9 — reference CEP default emission (NFAITCase.java:1848-
-            1900): ALL matches beginning at ``start``. Enum-flagged
-            splits (loop counts, optional branches, SKIP_TILL_ANY gap
-            extents) explore BOTH branches, each completed path a
-            separate match; normal splits keep first-success
-            backtracking (a greedy()/reluctant() pin, or a deterministic
-            SKIP_TILL_NEXT ignore gap whose take/skip branches are
-            mutually exclusive). Matches dedup on positive-variable
-            binds — IGNOREd gap rows are not part of a match's identity,
-            so e.g. the zero-loop match of testBeginWithZeroOrMore is
-            emitted once however many starts reach it."""
-            out = []
-            seen_local: set[tuple] = set()
-            binds: dict[str, list[int]] = {}
-
-            # Explicit-frame DFS over the VM (r9 ADVICE: the recursive
-            # walk recursed once per loop iteration / gap row along a
-            # path and needed a recursionlimit bump; a dense within()
-            # horizon could still blow the C stack). Each frame is one
-            # "subtree" [pc, ri, regs, consumed, phase, r1]: phase ''
-            # = running, 'norm' = awaiting the take branch of a normal
-            # split (prune the skip branch on success), 'enum1'/'enum2'
-            # = awaiting the branches of an enum-flagged split (explore
-            # BOTH — every completed path is a separate match). `ret`
-            # carries the just-popped frame's "subtree completed >=1
-            # match" result; binds un-consume exactly as the recursive
-            # finally did.
-            RUN, NORM, ENUM1, ENUM2 = 0, 1, 2, 3
-
-            def _emit(ri: int) -> bool:
-                if ri == start:
-                    return False  # zero-width — never a match
-                a = {
-                    v: list(ix)
-                    for v, ix in binds.items()
-                    if ix and v not in cep_gaps
-                }
-                if not a:
-                    return False  # gap-only consumption
-                key = tuple(sorted(
-                    (v, tuple(ix)) for v, ix in a.items()
-                ))
-                if key not in seen_local:
-                    seen_local.add(key)
-                    out.append((a, ri, key))
-                    if len(out) > 10_000:
-                        raise MatchRecognizeError(
-                            "CEP multi-match emission exceeded 10000 "
-                            "matches for one start row — bound the "
-                            "pattern with within() or times(m,n), or "
-                            "pin greedy()/reluctant()"
-                        )
-                return True
-
-            # frame: [pc, ri, regs, consumed, phase, split_op, r1]
-            stack = [[0, start, [-1] * vm_nregs, [], RUN, None, False]]
-            ret = False
-            while stack:
-                f = stack[-1]
-                if f[4] == NORM:
-                    if ret:  # take branch matched — prune skip branch
-                        for v in f[3]:
-                            binds[v].pop()
-                        stack.pop()
-                        continue  # ret stays True
-                    f[0] = f[5][2]  # fall through to the skip branch
-                    f[4] = RUN
-                elif f[4] == ENUM1:
-                    f[6] = ret
-                    f[4] = ENUM2
-                    stack.append(
-                        [f[5][2], f[1], f[2][:], [], RUN, None, False]
-                    )
-                    continue
-                elif f[4] == ENUM2:
-                    ret = f[6] or ret
-                    for v in f[3]:
-                        binds[v].pop()
-                    stack.pop()
-                    continue
-                # RUN: execute linear ops until a split/frame exit
-                pc, ri, regs = f[0], f[1], f[2]
-                while True:
-                    op = vm_prog[pc]
-                    o = op[0]
-                    if o == "row":
-                        hit = None
-                        if ri < limit:
-                            for a_ in op[1]:
-                                if ok_fn(a_, ri, binds):
-                                    hit = a_
-                                    break
-                        if hit is None:
-                            ret = False
-                            for v in f[3]:
-                                binds[v].pop()
-                            stack.pop()
-                            break
-                        binds.setdefault(hit, []).append(ri)
-                        f[3].append(hit)
-                        ri += 1
-                        pc += 1
-                    elif o == "split":
-                        f[0], f[1], f[4], f[5] = pc, ri, (
-                            ENUM1 if op[3] else NORM
-                        ), op
-                        stack.append(
-                            [op[1], ri, regs[:], [], RUN, None, False]
-                        )
-                        break
-                    elif o == "jmp":
-                        pc = op[1]
-                    elif o == "setreg":
-                        regs[op[1]] = ri
-                        pc += 1
-                    elif o == "chkreg":
-                        if regs[op[1]] == ri:
-                            ret = False
-                            for v in f[3]:
-                                binds[v].pop()
-                            stack.pop()
-                            break
-                        pc += 1
-                    else:  # match
-                        ret = _emit(ri)
-                        for v in f[3]:
-                            binds[v].pop()
-                        stack.pop()
-                        break
-            return out
-
-        def try_match_permute(start: int, limit: int):
-            """PERMUTE(v1..vk): the k rows from ``start`` must satisfy some
-            permutation of the variables; permutations are tried in
-            lexicographic order of the listed variables (SQL standard
-            preference), first hit wins."""
-            if start + len(permute_order[0]) > limit:
-                return None
-            for perm in permute_order:
-                if all(sat[v][start + j] for j, v in enumerate(perm)):
-                    return (
-                        {v: [start + j] for j, v in enumerate(perm)},
-                        start + len(perm),
-                    )
-            return None
-
         # Candidate-start pruning: walk the pattern prefix to the first
         # SELECTIVE element reachable at a FIXED offset — trivial
         # (always-true) elements with an exact count {lo==hi} contribute a
@@ -1967,7 +2130,7 @@ def compile_match_recognize(
         # canonical V query). Falls back to the linear scan when a
         # variable-length element precedes every selective one.
         cand_idx = None
-        if vm_prog is not None and vm_anchor is not None:
+        if plan.anchor is not None:
             # VM path: a match must START with a row satisfying one of the
             # anchor alternatives (own-row precomputed booleans) — numpy
             # jump to candidates instead of a Python row-walk. Cross-
@@ -1975,16 +2138,13 @@ def compile_match_recognize(
             # match start, same as the matcher itself, so sat[] is exact
             # for starts only when the anchor variable is own-row; skip
             # pruning otherwise.
-            if all(v not in cross_codes for v in vm_anchor):
-                ok = sat[vm_anchor[0]]
-                for v in vm_anchor[1:]:
+            if all(v not in cross_defs for v in plan.anchor):
+                ok = sat[plan.anchor[0]]
+                for v in plan.anchor[1:]:
                     ok = ok | sat[v]
                 cand_idx = np.flatnonzero(ok)
         _off = 0
-        for _pi, (_alts, (_lo, _hi), _g) in enumerate(pat or []):
-            if permute_order is not None:
-                # any variable may come first — no fixed-offset anchor
-                break
+        for _pi, (_alts, (_lo, _hi), _g) in enumerate(plan.pat or []):
             _ok = elem_ok[_pi]
             if _lo >= 1 and not _ok.all():
                 cand_idx = np.flatnonzero(_ok) - _off
@@ -2002,20 +2162,7 @@ def compile_match_recognize(
                 return end
             if skip == "to_next":
                 return match_start + 1
-            which, var = skip
-            idxs = assign.get(var)
-            if not idxs:
-                raise MatchRecognizeError(
-                    f"AFTER MATCH SKIP TO {which.upper()} {var}: variable "
-                    "did not participate in the match"
-                )
-            r = idxs[0] if which == "first" else idxs[-1]
-            if r <= match_start:
-                raise MatchRecognizeError(
-                    f"AFTER MATCH SKIP TO {which.upper()} {var} cannot "
-                    "advance past the match start (infinite loop)"
-                )
-            return r
+            return _skip_target(skip, match_start, assign)
 
         src_arr = {c: pdf[c].to_numpy() for c in src_cols} if all_rows else None
 
@@ -2080,30 +2227,23 @@ def compile_match_recognize(
                 else:
                     cands = range(s, e)
                 for i in cands:
-                    for assign, _end, key in try_match_vm_all(
-                        i, _limit(i, e)
-                    ):
+                    for assign, _end in match(i, _limit(i, e))[0]:
+                        key = tuple(sorted(
+                            (v, tuple(ix)) for v, ix in assign.items()
+                        ))
                         if key not in seen_seg:
                             seen_seg.add(key)
                             _do_emit(assign)
                 continue
-            if permute_order is not None:
-                matcher = try_match_permute
-            elif vm_prog is not None:
-                matcher = try_match_vm
-            elif cross_fns:
-                matcher = try_match_binds
-            else:
-                matcher = try_match
             if cand_idx is not None:
                 p = int(np.searchsorted(cand_idx, s, "left"))
                 while p < len(cand_idx) and cand_idx[p] < e:
                     i = int(cand_idx[p])
-                    hit = matcher(i, _limit(i, e))
-                    if hit is None:
+                    hit = match(i, _limit(i, e))[0]
+                    if not hit:
                         p += 1
                         continue
-                    assign, end = hit
+                    assign, end = hit[0]
                     _do_emit(assign)
                     p = int(
                         np.searchsorted(cand_idx, _resume(i, assign, end), "left")
@@ -2111,11 +2251,11 @@ def compile_match_recognize(
                 continue
             i = s
             while i < e:
-                hit = matcher(i, _limit(i, e))
-                if hit is None:
+                hit = match(i, _limit(i, e))[0]
+                if not hit:
                     i += 1
                     continue
-                assign, end = hit
+                assign, end = hit[0]
                 _do_emit(assign)
                 i = _resume(i, assign, end)
         if rows:

@@ -521,9 +521,14 @@ def main() -> None:
     cpu_t1 = _cpu_stat()
     if cpu_t0 and cpu_t1:
         d = [b - a for a, b in zip(cpu_t0, cpu_t1)]
-        busy = sum(d) - d[3] - d[4]  # minus idle, iowait
-        if busy > 0 and len(d) > 7:
-            detail["cpu_steal_pct_of_busy"] = round(d[7] / busy * 100, 1)
+        if len(d) > 7:
+            # busy = every jiffy but idle and iowait; guest and guest_nice
+            # (fields 8, 9) are already counted inside user and nice
+            busy = sum(d) - d[3] - d[4] - sum(d[8:10])
+            if busy > 0:
+                detail["cpu_steal_pct_of_busy"] = round(
+                    d[7] / busy * 100, 1
+                )
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     # r14 (VERDICT r13 next-item #2): the working-tree BENCH_DETAIL.json

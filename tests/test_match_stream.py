@@ -517,10 +517,10 @@ def test_slicing_invariance_next_nav_skip_next(spark, tmp_path, seed):
 # multiset depends only on the rows and the final watermark.
 
 
-def _run_stream_cep(spark, tmp_path, rows, slices, tag):
-    """Like _run_stream but through the CEP Pattern compiler: kind=1
-    oneOrMore (relaxed default — prefix emission) followedBy kind=2,
-    within 30 minutes."""
+def _run_stream_cep(spark, tmp_path, rows, slices, tag, pattern=None):
+    """Like _run_stream but through the CEP Pattern compiler: by default
+    kind=1 oneOrMore (relaxed default — prefix emission) followedBy
+    kind=2, within 30 minutes."""
     import os
     import time
 
@@ -546,7 +546,7 @@ def _run_stream_cep(spark, tmp_path, rows, slices, tag):
         "user_id", "event_id", "kind",
         F.unix_micros("ts").alias("ep"), "ts",
     )
-    p = (
+    p = pattern or (
         Pattern.begin("A").where("kind = 1").one_or_more()
         .followed_by("B").where("kind = 2")
         .within(30, "minutes")
@@ -1865,3 +1865,138 @@ def test_extra_tiebreak_order(spark, tmp_path):
     finally:
         spark.conf.unset("spark.graft.stateful.keyGroups")
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+# A greedy bounded loop whose longer branch stops at the certified
+# frontier: a shorter take may already complete (row 2 is A and B), but
+# the longer take (A A A, then B at row 4) is preferred and still open
+# until row 4 certifies. The decision must wait for it.
+BODY_GREEDY_FRONTIER = """
+    PARTITION BY user_id
+    ORDER BY ep, event_id
+    MEASURES FIRST(A.event_id) AS a_id, B.event_id AS b_id,
+             LAST(B.ep) AS b_ts
+    ONE ROW PER MATCH
+    AFTER MATCH SKIP PAST LAST ROW
+    PATTERN (A{1,3} B)
+    DEFINE A AS A.kind IN (1, 3), B AS B.kind IN (2, 3)
+"""
+
+
+def test_greedy_branch_at_frontier_waits(spark, tmp_path):
+    """PATTERN (A{1,3} B) over rows A, A-and-B, A, B of one user. The
+    first file certifies rows 1-3 (a row of another user at minute 15
+    moves the watermark to minute 5); row 4 arrives in the second file.
+    Two files must give the one-file result, and both the batch
+    compiler's: one match from row 1 to row 4."""
+    from apache_flink_spark.match_recognize import compile_match_recognize
+
+    def row(uid, eid, kind, minute):
+        return {
+            "user_id": uid, "event_id": eid, "kind": kind, "v": 0,
+            "ts": f"2024-01-01 10:{minute:02d}:00",
+        }
+
+    first = [
+        row(1, 1, 1, 0), row(1, 2, 3, 1), row(1, 3, 1, 2),
+        row(2, 90, 0, 15),
+    ]
+    second = [row(1, 4, 2, 20), row(2, 91, 0, 59)]
+    spark.conf.set("spark.graft.stateful.keyGroups", "4")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        one = _run_stream(
+            spark, tmp_path, first + second, [first + second], "gf1",
+            body=BODY_GREEDY_FRONTIER,
+        )
+        two = _run_stream(
+            spark, tmp_path, first + second, [first, second], "gf2",
+            body=BODY_GREEDY_FRONTIER,
+        )
+        df = spark.createDataFrame(
+            [
+                (r["user_id"], r["event_id"], r["kind"], r["ts"])
+                for r in first + second
+            ],
+            "user_id long, event_id long, kind long, ts_str string",
+        ).select(
+            "user_id", "event_id", "kind",
+            F.unix_micros(F.to_timestamp("ts_str")).alias("ep"),
+        )
+        batch = sorted(
+            (r.user_id, r.a_id, r.b_id, r.b_ts)
+            for r in compile_match_recognize(
+                spark, df, BODY_GREEDY_FRONTIER
+            ).collect()
+        )
+    finally:
+        spark.conf.unset("spark.graft.stateful.keyGroups")
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert [t[:3] for t in batch] == [(1, 1, 4)], batch
+    assert one == batch, one
+    assert two == one, two
+
+
+@pytest.mark.parametrize("a_cond", ["kind = 1", "pmod(kind, 3) = 1"])
+def test_greedy_loop_stream_vs_batch(spark, tmp_path, a_cond):
+    """The flat one_or_more().greedy().followed_by(...) stream equals the
+    batch cep_select on the same rows. Its greedy() PROCEED guard is the
+    batch compiler's DEFINE conjunct on B, evaluated by the shared
+    matcher; with a scalar function in A's condition, that conjunct's
+    own-row part evaluates on the JVM. A row of another user two hours
+    later moves the final watermark past every start's horizon, so every
+    decision is final and the two results must be equal, not just
+    nested."""
+    from apache_flink_spark.cep import Pattern, cep_select
+
+    def pattern():
+        return (
+            Pattern.begin("A").where(a_cond).one_or_more().greedy()
+            .followed_by("B").where("kind = 2")
+            .within(30, "minutes")
+        )
+
+    rows = _mk_rows(41) + [{
+        "user_id": 99, "event_id": 9999, "kind": 0, "v": 0,
+        "ts": "2024-01-01 13:00:00",
+    }]
+    spark.conf.set("spark.graft.stateful.keyGroups", "4")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        streamed = _run_stream_cep(
+            spark, tmp_path, rows, [rows], "gvb", pattern=pattern()
+        )
+        rng = random.Random(43)
+        sliced = _run_stream_cep(
+            spark, tmp_path, rows, _random_slices(rows, rng), "gvbs",
+            pattern=pattern(),
+        )
+        df = spark.createDataFrame(
+            [(r["user_id"], r["event_id"], r["kind"], r["ts"]) for r in rows],
+            "user_id long, event_id long, kind long, ts string",
+        ).select(
+            "user_id", "event_id", "kind",
+            F.unix_micros(F.to_timestamp("ts")).alias("ep"),
+        )
+        batch = sorted(
+            (r.user_id, r.n_a, r.a_id, r.last_a, r.b_id)
+            for r in cep_select(
+                spark, df, pattern(), "user_id", "ep, event_id",
+                {
+                    "n_a": "COUNT(A.*)",
+                    "a_id": "FIRST(A.event_id)",
+                    "last_a": "LAST(A.event_id)",
+                    "b_id": "LAST(B.event_id)",
+                },
+            ).collect()
+        )
+    finally:
+        spark.conf.unset("spark.graft.stateful.keyGroups")
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert batch, "fixture produced no greedy matches"
+    # greedy() keeps one match per start: no start repeats
+    assert len({t[2] for t in batch}) == len(batch)
+    assert streamed == batch
+    assert sliced == batch
