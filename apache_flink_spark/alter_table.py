@@ -55,6 +55,7 @@ from apache_flink_spark.ddl import (
     fs_writer,
     refresh_table_view,
 )
+from apache_flink_spark.statement import split_top_level
 
 __all__ = ["try_handle_alter_statement", "show_create_table"]
 
@@ -227,9 +228,7 @@ def _parse_typed_cols(body: str) -> list[tuple[str, str, str | None]]:
     """``c TYPE [FIRST | AFTER other], ...`` -> [(name, spark_type, pos)]
     where pos is None | 'FIRST' | an existing column name."""
     out = []
-    from apache_flink_spark.match_recognize import _split_top_level
-
-    for part in _split_top_level(body):
+    for part in split_top_level(body):
         part = part.strip()
         if not part:
             continue

@@ -111,8 +111,8 @@ _DESC_FUNCTION_RE = re.compile(
 
 
 def record_view_statement(sql: str) -> None:
-    """Called by the facade before CREATE/DROP VIEW reach Spark, so
-    SHOW CREATE VIEW can replay the definition (SqlShowCreateView /
+    """Called by the facade once Spark ran a CREATE/DROP VIEW, so SHOW
+    CREATE VIEW can replay the definition (SqlShowCreateView /
     ShowCreateUtil.buildShowCreateViewRow)."""
     m = _CREATE_VIEW_RE.match(sql)
     if m:
@@ -122,10 +122,7 @@ def record_view_statement(sql: str) -> None:
     if m:
         _VIEW_DDL.pop(m.group("name").lower(), None)
 
-_SHOW_CATALOGS_RE = re.compile(r"^\s*SHOW\s+CATALOGS\s*$", re.I)
-_SHOW_CUR_CAT_RE = re.compile(r"^\s*SHOW\s+CURRENT\s+CATALOG\s*$", re.I)
-_USE_CATALOG_RE = re.compile(r"^\s*USE\s+CATALOG\s+`?(\w+)`?\s*$", re.I)
-_CREATE_CATALOG_RE = re.compile(r"^\s*CREATE\s+CATALOG\s+", re.I)
+
 _SHOW_DBS_RE = re.compile(r"^\s*SHOW\s+DATABASES\s*$", re.I)
 _SHOW_CUR_DB_RE = re.compile(r"^\s*SHOW\s+CURRENT\s+DATABASE\s*$", re.I)
 _SHOW_TABLES_RE = re.compile(

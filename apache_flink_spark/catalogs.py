@@ -34,6 +34,9 @@ import re
 
 from pyspark.sql import SparkSession
 
+from apache_flink_spark.ddl import _split_options
+from apache_flink_spark.statement import in_literal, literal_spans
+
 __all__ = [
     "try_handle_catalog_ddl",
     "rewrite_catalog_identifiers",
@@ -204,13 +207,6 @@ _CREATE_TABLE_NAME_RE = re.compile(
 )
 
 
-def _split_options(opts: str) -> dict[str, str]:
-    out = {}
-    for m in re.finditer(r"'([^']*)'\s*=\s*'([^']*)'", opts):
-        out[m.group(1).lower()] = m.group(2)
-    return out
-
-
 def _like(name: str, m: re.Match) -> bool:
     """Flink SHOW ... [NOT] (LIKE|ILIKE) — delegates to the one shared
     SQL-LIKE translation (catalog_sql._sql_like); ILIKE folds case."""
@@ -237,29 +233,6 @@ def _info(spark: SparkSession, rows: list[tuple[str, str | None]]):
 # -------------------------------------------------------------- resolve
 
 
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    spans, i, n = [], 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append((i, j))
-            i = j + 1
-        else:
-            i += 1
-    return spans
-
-
-def _in_literal(spans, pos: int) -> bool:
-    return any(a <= pos <= b for a, b in spans)
-
-
 def _closes_derived_table(sql: str, close_idx: int, spans) -> bool:
     """True when the ``)`` at ``close_idx`` closes a DERIVED TABLE —
     i.e. its matching open paren wraps a query (SELECT/VALUES/WITH/
@@ -269,7 +242,7 @@ def _closes_derived_table(sql: str, close_idx: int, spans) -> bool:
     depth = 0
     i = close_idx
     while i >= 0:
-        if _in_literal(spans, i):
+        if in_literal(spans, i):
             i -= 1
             continue
         ch = sql[i]
@@ -346,19 +319,19 @@ def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
             sql = cm.group("head") + view + cm.group("rest")
     if _REF_BUILTIN in sql:
         # the reference's built-in naming maps to plain Spark resolution
-        spans = _literal_spans(sql)
+        spans = literal_spans(sql)
         sql = re.sub(
             rf"\b{_REF_BUILTIN}\.{_REF_BUILTIN_DB}\.(\w+)\b",
-            lambda m: m.group(0) if _in_literal(spans, m.start())
+            lambda m: m.group(0) if in_literal(spans, m.start())
             else m.group(1),
             sql,
         )
     if not _CAT_TABLES and _CURRENT[0] is None and not _any_hive():
         return sql
-    spans = _literal_spans(sql)
+    spans = literal_spans(sql)
 
     def _sub_qualified(m: re.Match) -> str:
-        if _in_literal(spans, m.start()):
+        if in_literal(spans, m.start()):
             return m.group(0)
         key = (m.group(1), m.group(2), m.group(3))
         if _is_hive(key[0]):
@@ -379,7 +352,7 @@ def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
             if c == cat and d == db
         }
         if local:
-            spans = _literal_spans(out)
+            spans = literal_spans(out)
             # names bound INSIDE the statement shadow catalog tables: a
             # CTE (WITH name AS (...)) or an alias (... AS name) that
             # happens to share a registered table's name must not be
@@ -389,14 +362,14 @@ def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
                 for b in re.finditer(
                     r"(?i)\bWITH\s+(\w+)\s+AS\s*\(", out
                 )
-                if not _in_literal(spans, b.start())
+                if not in_literal(spans, b.start())
             }
             bound |= {
                 b.group(1)
                 for b in re.finditer(
                     r"(?i),\s*(\w+)\s+AS\s*\(", out
                 )
-                if not _in_literal(spans, b.start())
+                if not in_literal(spans, b.start())
             }
             # derived-table aliases only: `) AS name` where the matching
             # OPEN paren wraps a query (SELECT/VALUES/WITH/TABLE). A bare
@@ -407,7 +380,7 @@ def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
             bound |= {
                 b.group(1)
                 for b in re.finditer(r"(?i)\)\s*AS\s+(\w+)\b", out)
-                if not _in_literal(spans, b.start(1))
+                if not in_literal(spans, b.start(1))
                 and _closes_derived_table(out, b.start(), spans)
             }
             local = {t: v for t, v in local.items() if t not in bound}
@@ -418,7 +391,7 @@ def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
                 # only TABLE POSITIONS (after FROM/JOIN/INTO/TABLE/UPDATE/
                 # DELETE FROM/DESCRIBE): a column or alias that happens to
                 # share a registered table's name must survive (r7 review)
-                if _in_literal(spans, m.start(2)):
+                if in_literal(spans, m.start(2)):
                     return m.group(0)
                 e = m.end(2)
                 if e < len(out) and out[e] == ".":

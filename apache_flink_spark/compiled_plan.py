@@ -57,9 +57,7 @@ def compile_plan(tenv, path: str, statement: str, if_not_exists=False) -> None:
         )
     # Validate NOW: a plan that cannot be analyzed must fail at COMPILE
     # time, not at some 3am EXECUTE (reference compiles eagerly too).
-    tenv.explain_sql(statement) if not statement.lstrip().upper().startswith(
-        ("INSERT",)
-    ) else tenv.sql(f"EXPLAIN {statement}")
+    tenv.sql(f"EXPLAIN {statement}")
     confs = {}
     for k in _PLAN_CONFS:
         try:

@@ -52,6 +52,8 @@ import select
 import urllib.parse
 from typing import Any, Iterator, Optional, Sequence
 
+from apache_flink_spark.statement import in_literal, literal_spans
+
 __all__ = [
     "apilevel", "threadsafety", "paramstyle", "connect",
     "Connection", "Cursor",
@@ -182,42 +184,27 @@ def _render_literal(v: Any) -> str:
 
 def _substitute(operation: str, parameters: Sequence[Any]) -> str:
     """Replace ``?`` outside string literals with rendered parameters."""
-    out: list[str] = []
     params = list(parameters)
-    used = 0
-    in_str = False
-    i = 0
-    n = len(operation)
-    while i < n:
-        c = operation[i]
-        if in_str:
-            out.append(c)
-            if c == "'":
-                # doubled quote stays inside the literal
-                if i + 1 < n and operation[i + 1] == "'":
-                    out.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-            out.append(c)
-        elif c == "?":
-            if used >= len(params):
-                raise ProgrammingError(
-                    f"statement has more placeholders than the "
-                    f"{len(params)} parameters supplied"
-                )
-            out.append(_render_literal(params[used]))
-            used += 1
-        else:
-            out.append(c)
-        i += 1
-    if used != len(params):
+    spans = literal_spans(operation)
+    holes = [
+        m.start() for m in re.finditer(r"\?", operation)
+        if not in_literal(spans, m.start())
+    ]
+    if len(holes) > len(params):
         raise ProgrammingError(
-            f"{len(params)} parameters supplied but only {used} "
+            f"statement has more placeholders than the "
+            f"{len(params)} parameters supplied"
+        )
+    if len(holes) < len(params):
+        raise ProgrammingError(
+            f"{len(params)} parameters supplied but only {len(holes)} "
             "placeholders in statement"
         )
+    out, pos = [], 0
+    for i, value in zip(holes, params):
+        out += [operation[pos:i], _render_literal(value)]
+        pos = i + 1
+    out.append(operation[pos:])
     return "".join(out)
 
 

@@ -33,6 +33,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_flink_spark.statement import split_top_level
+
 
 class DdlError(ValueError):
     pass
@@ -322,25 +324,9 @@ def _split_options(opts: str) -> dict[str, str]:
 
 
 def _parse_columns(body: str):
-    def _split_top_level(s: str) -> list[str]:
-        # comma split aware of both () and the <> of MAP/ARRAY/ROW types
-        out, depth, start = [], 0, 0
-        for i, ch in enumerate(s):
-            if ch in "(<":
-                depth += 1
-            elif ch in ")>":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                out.append(s[start:i])
-                start = i + 1
-        out.append(s[start:])
-        return out
-
     cols, watermark = [], None
-    for part in _split_top_level(body):
-        part = part.strip()
-        if not part:
-            continue
+    # the <> of MAP/ARRAY/ROW types nest like parentheses
+    for part in split_top_level(body, "(<", ")>"):
         wm = _WATERMARK_RE.match(part)
         if wm:
             watermark = (wm.group("col"), f"{wm.group('n')} {wm.group('u').lower()}")
@@ -362,24 +348,9 @@ def _parse_columns(body: str):
 def _schema_ddl_cols(schema_ddl: str) -> list[tuple[str, str]]:
     """Parse ``"a BIGINT, b DECIMAL(10, 2)"`` into [(name, type)] —
     commas inside (), <> are type syntax, not separators."""
-    parts, cur, depth = [], [], 0
-    for ch in schema_ddl:
-        if ch in "(<":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")>":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        parts.append("".join(cur))
     out = []
-    for p in parts:
-        toks = p.strip().split(None, 1)
+    for p in split_top_level(schema_ddl, "(<", ")>"):
+        toks = p.split(None, 1)
         if len(toks) != 2:
             raise DdlError(f"bad schema column: {p.strip()!r}")
         out.append((toks[0].strip("`"), toks[1].strip()))
@@ -579,20 +550,6 @@ _REPLACE_AS_RE = re.compile(
 )
 
 
-def _split_top_commas(s: str) -> list[str]:
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return [p.strip() for p in parts if p.strip()]
-
-
 def _ctas_apply_column_list(out, cols_text: str):
     """FLINK-33061 CTAS column list (reference MergeTableAsUtil):
 
@@ -609,7 +566,7 @@ def _ctas_apply_column_list(out, cols_text: str):
     from pyspark.sql import functions as F
 
     entries = []  # (name, type_or_None, is_computed)
-    for ent in _split_top_commas(cols_text):
+    for ent in split_top_level(cols_text):
         cm = re.match(r"^`?(\w+)`?\s+AS\s+(.+)$", ent, re.I | re.S)
         if cm:
             entries.append((cm.group(1), None, True))

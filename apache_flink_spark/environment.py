@@ -10,96 +10,12 @@ DataFrame API and Catalyst plans/executes them.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_flink_spark import statement
 from apache_flink_spark.catalog import load_tables
 from apache_flink_spark.functions.registry import register_all
 from apache_flink_spark.session import get_spark
-
-
-# Flink SQL-client SET/RESET: quoted keys, e.g. SET 'table.local-time-zone'
-# = 'UTC'. Bare SET lists; RESET 'key' unsets; RESET resets all. The
-# grammar is per-op (SET requires the ='value'; RESET forbids it) so
-# malformed variants fall through to spark.sql and get Spark's parse
-# error instead of silently half-applying.
-_SHOW_PROCS_RE = re.compile(r"^\s*SHOW\s+PROCEDURES\s*$", re.I)
-_SHOW_JOBS_RE = re.compile(r"^\s*SHOW\s+JOBS\s*$", re.I)
-_DESCRIBE_JOB_RE = re.compile(
-    r"^\s*DESC(?:RIBE)?\s+JOB\s+'(?P<id>[^']+)'\s*$", re.I
-)
-
-#: streaming-query id -> first-seen wall clock. Spark's StreamingQuery
-#: does not expose its start instant, so the facade records the first
-#: time job introspection (or STOP JOB) observes the query — for jobs
-#: started and inspected through this facade that IS the start time.
-_JOB_SEEN: dict[str, "object"] = {}
-
-
-def _job_start_time(q):
-    from datetime import datetime
-
-    if q.id not in _JOB_SEEN:
-        _JOB_SEEN[q.id] = datetime.now()
-    return _JOB_SEEN[q.id]
-_STOP_JOB_RE = re.compile(
-    r"^\s*STOP\s+JOB\s+'(?P<id>[^']+)'"
-    r"(?P<sp>\s+WITH\s+SAVEPOINT)?(?:\s+WITH\s+DRAIN)?\s*$",
-    re.I,
-)
-_STMT_SET_RE = re.compile(
-    r"^\s*EXECUTE\s+STATEMENT\s+SET\s+BEGIN\s+(?P<body>.+?)\s*;?\s*END\s*;?\s*$",
-    re.I | re.S,
-)
-def _rewrite_lateral_table(query: str) -> str:
-    """Flink's UDTF call spelling ``[LEFT|CROSS] JOIN LATERAL
-    TABLE(fn(args))`` / ``, LATERAL TABLE(fn(args))`` (Calcite's LATERAL
-    TABLE operator — the reference's TableFunction invocation syntax) maps
-    onto Spark's native lateral table-function joins by dropping the
-    ``TABLE( ... )`` wrapper: ``LATERAL fn(args)``. Balanced-paren scan.
-    Matches inside single-quoted string literals are data, not syntax —
-    they are skipped (r7 advice: literal-span-safe like catalogs.py)."""
-    from apache_flink_spark.catalogs import _in_literal, _literal_spans
-
-    out = query
-    pat = re.compile(r"\bLATERAL\s+TABLE\s*\(", re.I)
-    pos = 0
-    while True:
-        m = pat.search(out, pos)
-        if not m:
-            return out
-        if _in_literal(_literal_spans(out), m.start()):
-            pos = m.end()
-            continue
-        depth, i = 1, m.end()
-        while i < len(out) and depth:
-            if out[i] == "(":
-                depth += 1
-            elif out[i] == ")":
-                depth -= 1
-            i += 1
-        inner = out[m.end(): i - 1].strip()
-        out = out[: m.start()] + "LATERAL " + inner + out[i:]
-
-
-_SET_RE = re.compile(
-    r"^\s*(?:"
-    r"(?P<set>SET)(?:\s+'(?P<key>[^']+)'\s*=\s*'(?P<val>[^']*)')?"
-    r"|(?P<reset>RESET)(?:\s+'(?P<rkey>[^']+)')?"
-    r")\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-# Flink SqlRichExplain grammar: EXPLAIN [detail[, detail]*] [PLAN FOR] stmt.
-_EXPLAIN_RE = re.compile(
-    r"""^\s*EXPLAIN\s+
-        (?P<details>(?:(?:ESTIMATED_COST|CHANGELOG_MODE|PLAN_ADVICE|
-                       JSON_EXECUTION_PLAN)\s*,?\s*)+)?
-        (?:PLAN\s+FOR\s+)?
-        (?P<stmt>(?:SELECT|INSERT|WITH|VALUES|TABLE)\b.*)$""",
-    re.IGNORECASE | re.DOTALL | re.VERBOSE,
-)
 
 
 class TableEnvironment:
@@ -145,384 +61,24 @@ class TableEnvironment:
         return load_tables(self.spark, sf_dir)
 
     def sql(self, query: str) -> DataFrame:
-        """Parse/plan/execute SQL — reference TableEnvironmentImpl.executeSql
-        (flink-table-api-java .../internal/TableEnvironmentImpl.java:727);
-        here Catalyst replaces the Calcite parse→validate→optimize chain
-        (SURVEY.md §3). Two Flink-SQL surfaces Spark lacks are compiled
-        first: window TVFs (TUMBLE/HOP/CUMULATE — window_tvf.py rewrite)
-        and MATCH_RECOGNIZE (match_recognize.py) — reference
-        StreamExecWindowAggregate / StreamExecMatch.java:61."""
-        up = query.upper()
-        if "PLAN" in up and ("COMPILE" in up or up.lstrip().startswith("EXECUTE")):
-            from apache_flink_spark.compiled_plan import (
-                try_handle_plan_statement,
-            )
+        """Parse/plan/execute one statement — reference
+        TableEnvironmentImpl.executeSql (flink-table-api-java
+        .../internal/TableEnvironmentImpl.java:727); Catalyst replaces the
+        Calcite parse->validate->optimize chain (SURVEY.md §3).
 
-            handled = try_handle_plan_statement(self, query)
-            if handled is not None:
-                return handled
-        if up.lstrip().startswith("CALL") or _SHOW_PROCS_RE.match(query):
-            from apache_flink_spark.procedures import (
-                try_handle_call_statement,
-            )
-
-            handled = try_handle_call_statement(self.spark, query)
-            if handled is not None:
-                return handled
-        if "MODEL" in up or "ML_PREDICT" in up:
-            from apache_flink_spark.models import try_handle_model_statement
-
-            handled = try_handle_model_statement(self, query)
-            if handled is not None:
-                return handled
-        if "MATERIALIZED" in up:
-            from apache_flink_spark.materialized_table import (
-                is_materialized_table_stmt,
-            )
-
-            if is_materialized_table_stmt(query):
-                return self.materialized_tables.execute(query)
-        m = _EXPLAIN_RE.match(query)
-        if m:
-            # Flink's ``EXPLAIN [details] [PLAN FOR] <stmt>`` (reference
-            # SqlRichExplain / TableEnvironment.explainSql). The detail
-            # flags (ESTIMATED_COST, CHANGELOG_MODE, PLAN_ADVICE,
-            # JSON_EXECUTION_PLAN) all render plan variants in the
-            # reference; Catalyst's parsed/analyzed/optimized/physical
-            # chain is the analog and is returned whenever any detail is
-            # requested. One row, column ``result`` — the reference's
-            # EXPLAIN result shape.
-            extended = bool(m.group("details"))
-            stmt = m.group("stmt")
-            if stmt.lstrip().upper().startswith("INSERT"):
-                # EXPLAIN must never EXECUTE: routing an INSERT through
-                # self.sql would run the write (and spark.sql runs
-                # non-DDL inserts eagerly). Plan only: for a DDL-declared
-                # sink, plan its SELECT; otherwise use Spark's native
-                # EXPLAIN, which plans without executing.
-                from apache_flink_spark.ddl import _INSERT_RE, _TABLES
-
-                im = _INSERT_RE.match(stmt)
-                if im and im.group("name") in _TABLES:
-                    plan = self.explain_sql(
-                        im.group("select"), extended=extended
-                    )
-                else:
-                    kw = "EXPLAIN EXTENDED " if extended else "EXPLAIN "
-                    plan = self.spark.sql(kw + stmt).collect()[0][0]
-                return self.spark.createDataFrame(
-                    [(plan,)], "result string"
-                )
-            plan = self.explain_sql(stmt, extended=extended)
-            return self.spark.createDataFrame([(plan,)], "result string")
-        sm = _SET_RE.match(query)
-        if sm:
-            # Flink SQL-client ``SET 'key' = 'value';`` / ``RESET 'key'``
-            # (reference SqlSet/SqlReset, sql-client SetOperation). Keys
-            # apply to the session conf — the same scope the reference's
-            # TableConfig gives them. Bare ``SET`` lists the conf like the
-            # client does; bare ``RESET`` resets everything.
-            if sm.group("reset"):
-                rkey = sm.group("rkey")
-                if rkey:
-                    self.spark.conf.unset(rkey)
-                    return self.spark.sql("SELECT 'OK' AS result")
-                return self.spark.sql("RESET")
-            key = sm.group("key")
-            if key is None:
-                return self.spark.sql("SET")
-            self.spark.conf.set(key, sm.group("val"))
-            return self.spark.sql("SELECT 'OK' AS result")
-        # Pure TEXT rewrites run before ANY route that executes an embedded
-        # SELECT (CTAS, STATEMENT SET, row-level DML, INSERT) — otherwise a
-        # hint / PTF call / window TVF / time-travel clause inside those
-        # statements is silently ignored or fails to resolve (r6 review).
-        from apache_flink_spark.catalogs import _CATALOGS
-
-        if _CATALOGS or "default_catalog" in query:
-            # secondary catalogs exist: map cat.db.tbl (and, in a secondary
-            # current catalog, unqualified) names onto their views
-            from apache_flink_spark.catalogs import (
-                rewrite_catalog_identifiers,
-            )
-
-            query = rewrite_catalog_identifiers(self.spark, query)
-            up = query.upper()
-        if "/*+" in query:
-            from apache_flink_spark.query_hints import rewrite_flink_hints
-
-            query = rewrite_flink_hints(self.spark, query)
-        if re.search(r"\bLATERAL\s+TABLE\s*\(", query, re.I):
-            # Flink UDTF invocation syntax -> Spark's native lateral TVF
-            query = _rewrite_lateral_table(query)
-            up = query.upper()
-        if "TABLE" in up and "(" in query:
-            # PTF calls with TABLE arguments (FLIP-440 — ptf.py); a no-op
-            # when no PTF is registered or none is referenced
-            from apache_flink_spark.ptf import _PTFS, rewrite_ptf_calls
-
-            if _PTFS:
-                query = rewrite_ptf_calls(self.spark, query)
-        if "TUMBLE" in up or "HOP" in up or "CUMULATE" in up or "SESSION" in up:
-            from apache_flink_spark.window_tvf import (
-                rewrite_group_windows,
-                rewrite_window_tvfs,
-            )
-
-            query = rewrite_group_windows(rewrite_window_tvfs(query))
-        if re.match(
-            r"^\s*(SELECT|WITH|\(|INSERT\b"
-            r"|CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?VIEW)",
-            query, re.I,
-        ):
-            # Flink aggregate-dialect typing (r13 — flink_dialect.py):
-            # AVG/VAR_POP argument-typed results, LISTAGG ',' default,
-            # COLLECT multisets, JSON_OBJECTAGG KEY VALUE syntax
-            from apache_flink_spark.flink_dialect import (
-                needs_rewrite,
-                rewrite_flink_aggregates,
-            )
-
-            if needs_rewrite(query):
-                query = rewrite_flink_aggregates(self.spark, query)
-            if re.search(r"\bUNNEST\s*\(", query, re.I):
-                from apache_flink_spark.flink_dialect import rewrite_unnest
-
-                query = rewrite_unnest(self.spark, query)
-            if re.search(r"\b(?:ARRAY|MAP)\s*\[", query, re.I):
-                from apache_flink_spark.flink_dialect import (
-                    rewrite_bracket_literals,
-                )
-
-                query = rewrite_bracket_literals(query)
-        if "SYSTEM_TIME" in query.upper():
-            from apache_flink_spark.temporal_sql import rewrite_system_time_joins
-
-            def _columns_of(name: str):
-                try:
-                    return self.spark.table(name).columns
-                except Exception:
-                    return None
-
-            query = rewrite_system_time_joins(
-                self._rewrite_time_travel(query), columns_of=_columns_of
-            )
-        up = query.upper()
-        if ("CREATE" in up or re.match(r"\s*REPLACE\s+TABLE\b", query, re.I)
-                ) and ("CONNECTOR" in up or re.search(
-            r"\bLIKE\s+\w+\s*(?:\([^()]*\))?\s*$", query, re.I
-        )):
-            from apache_flink_spark.ddl import execute_flink_ddl
-
-            if execute_flink_ddl(self.spark, query):
-                return self.spark.sql("SELECT 'OK' AS result")
-        if re.match(
-            r"^\s*(ALTER\s+TABLE|SHOW\s+CREATE\s+TABLE|SHOW\s+PARTITIONS"
-            r"|DESCRIBE|DESC\b|SHOW\s+COLUMNS)",
-            query,
-            re.I,
-        ):
-            # Flink SqlAlterTable* / SqlShowCreateTable on DDL-declared
-            # tables (alter_table.py); non-DDL names fall through to
-            # Spark's own ALTER TABLE / SHOW CREATE TABLE.
-            from apache_flink_spark.alter_table import (
-                try_handle_alter_statement,
-            )
-
-            handled = try_handle_alter_statement(self.spark, query)
-            if handled is not None:
-                return handled
-        if _SHOW_JOBS_RE.match(query):
-            # Flink SQL-client job management (SqlShowJobs; gateway
-            # OperationExecutor.callShowJobsOperation — columns "job id",
-            # "job name", "status", "start time"): the engine's jobs are
-            # Structured Streaming queries on this session.
-            rows = [
-                (
-                    q.id,
-                    q.name or "",
-                    "RUNNING" if q.isActive else "FINISHED",
-                    _job_start_time(q),
-                )
-                for q in self.spark.streams.active
-            ]
-            return self.spark.createDataFrame(
-                rows,
-                "`job id` string, `job name` string, status string, "
-                "`start time` timestamp",
-            )
-        dj = _DESCRIBE_JOB_RE.match(query)
-        if dj:
-            # SqlDescribeJob (gateway callDescribeJobOperation): one row,
-            # same shape as SHOW JOBS, for the given job id or name.
-            for q in self.spark.streams.active:
-                if q.id == dj.group("id") or (q.name or "") == dj.group("id"):
-                    return self.spark.createDataFrame(
-                        [(
-                            q.id,
-                            q.name or "",
-                            "RUNNING" if q.isActive else "FINISHED",
-                            _job_start_time(q),
-                        )],
-                        "`job id` string, `job name` string, "
-                        "status string, `start time` timestamp",
-                    )
-            raise ValueError(
-                f"Described job {dj.group('id')!r} does not exist in the "
-                "cluster."
-            )
-        sj = _STOP_JOB_RE.match(query)
-        if sj:
-            # SqlStopJob: graceful stop; WITH SAVEPOINT reports the
-            # query's checkpoint location — the savepoint analog (state
-            # is already durable there; a restart from it resumes).
-            target = None
-            for q in self.spark.streams.active:
-                if q.id == sj.group("id") or (q.name or "") == sj.group("id"):
-                    target = q
-                    break
-            if target is None:
-                raise ValueError(
-                    f"no running job {sj.group('id')!r} — SHOW JOBS lists "
-                    "active ones"
-                )
-            ckpt = ""
-            if sj.group("sp"):
-                # the savepoint analog: state is already durable in the
-                # query's checkpoint; report run + last committed batch
-                # as the restore coordinates
-                lp = target.lastProgress or {}
-                ckpt = f"runId={lp.get('runId', target.runId)};" \
-                       f"batchId={lp.get('batchId', -1)}"
-            target.stop()
-            return self.spark.createDataFrame(
-                [(sj.group("id"), "STOPPED", ckpt)],
-                "job_id string, status string, savepoint string",
-            )
-        if re.match(
-            r"^\s*(CREATE|DROP|ALTER)\s+(TEMPORARY\s+)?(SYSTEM\s+)?FUNCTION\b",
-            query,
-            re.I,
-        ):
-            # SqlCreateFunction / SqlDropFunction / SqlAlterFunction —
-            # function_ddl.py; unmatched forms fall through to Spark
-            from apache_flink_spark.function_ddl import (
-                try_handle_function_statement,
-            )
-
-            handled = try_handle_function_statement(self.spark, query)
-            if handled is not None:
-                return handled
-        if re.match(
-            r"^\s*(SHOW|USE\s|LOAD\s+MODULE|UNLOAD\s+MODULE|ANALYZE\s"
-            r"|(CREATE|DROP|ALTER)\s+(CATALOG|DATABASE)"
-            r"|DESC(RIBE)?\s+(CATALOG|DATABASE|FUNCTION)"
-            r"|ALTER\s+VIEW|REMOVE\s+JAR|DROP\s+TABLE)",
-            query,
-            re.I,
-        ):
-            # catalog/database/module introspection (SqlShowCatalogs,
-            # SqlShowTables, SqlUseModules, SqlAnalyzeTable, ... —
-            # catalog_sql.py); unmatched SHOW/USE fall through to Spark
-            from apache_flink_spark.catalog_sql import (
-                try_handle_catalog_statement,
-            )
-
-            handled = try_handle_catalog_statement(self.spark, query)
-            if handled is not None:
-                return handled
-        sm_set = _STMT_SET_RE.match(query)
-        if sm_set:
-            # EXECUTE STATEMENT SET BEGIN <insert>; ...; END (reference
-            # SqlStatementSet — parserImpls grammar; the SQL twin of
-            # create_statement_set). Each member must be an INSERT; they
-            # run as one unit and report per-target results.
-            from apache_flink_spark.sql_client import split_statements
-
-            inserts = split_statements(sm_set.group("body"))
-            if not inserts:
-                raise ValueError("empty STATEMENT SET")
-            rows = []
-            for i, ins in enumerate(inserts):
-                if not ins.lstrip().upper().startswith("INSERT"):
-                    raise ValueError(
-                        "STATEMENT SET members must be INSERT statements; "
-                        f"got: {ins.strip()[:60]!r}"
-                    )
-                self.sql(ins.strip())
-                tgt = re.match(
-                    r"\s*INSERT\s+(?:INTO|OVERWRITE)\s+(\S+)", ins, re.I
-                )
-                rows.append((i, tgt.group(1) if tgt else "?", "OK"))
-            return self.spark.createDataFrame(
-                rows, "stmt_index int, target string, result string"
-            )
-        if up.lstrip().startswith(("DELETE", "UPDATE", "TRUNCATE")):
-            from apache_flink_spark.row_level import (
-                try_handle_row_level_statement,
-            )
-
-            handled = try_handle_row_level_statement(self.spark, query)
-            if handled is not None:
-                return handled
-        if up.lstrip().startswith("INSERT"):
-            from apache_flink_spark.ddl import execute_flink_insert
-
-            handled = execute_flink_insert(self.spark, query)
-            if handled is not None:
-                return handled
-        if "MATCH_RECOGNIZE" in query.upper():
-            from apache_flink_spark.match_recognize import sql_with_match_recognize
-
-            return sql_with_match_recognize(self.spark, query)
-        if re.match(r"^\s*(CREATE|DROP)\b", query, re.I) and "VIEW" in up:
-            # record view DDL text for SHOW CREATE VIEW (catalog_sql.py)
-            # once Spark accepts it — Spark keeps no SQL for temp views
-            from apache_flink_spark.catalog_sql import record_view_statement
-
-            out = self.spark.sql(query)
-            record_view_statement(query)
-            return out
-        return self.spark.sql(query)
-
-    _TIME_TRAVEL_RE = re.compile(
-        r"\bFROM\s+(?P<name>[A-Za-z_][\w.]*)\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+"
-        r"TIMESTAMP\s+'(?P<ts>[^']+)'",
-        re.I,
-    )
-
-    def _rewrite_time_travel(self, query: str) -> str:
-        """FLIP-308 time travel: ``FROM mt FOR SYSTEM_TIME AS OF
-        TIMESTAMP '...'`` on a MATERIALIZED TABLE resolves to the
-        snapshot generation that was current at that wall-clock instant
-        (materialized_table.resolve_as_of — expired generations error
-        loudly, the SupportsTimeTravel contract). Non-materialized names
-        are left for the temporal-JOIN rewrite."""
-        if not hasattr(self, "_mt_manager"):
-            return query
-        from datetime import datetime
-
-        out, pos, n = [], 0, 0
-        for m in self._TIME_TRAVEL_RE.finditer(query):
-            try:
-                mt = self._mt_manager._get(m.group("name"))
-            except Exception:
-                continue  # not a materialized table — join rewrite's turn
-            epoch = datetime.fromisoformat(m.group("ts")).timestamp()
-            path = self._mt_manager.resolve_as_of(m.group("name"), epoch)
-            out.append(query[pos: m.start()])
-            if path == mt.current_path:
-                # the current generation IS the live view (and for an
-                # append-mode table its dir may not have materialized yet)
-                out.append(f"FROM {m.group('name')}")
-            else:
-                n += 1
-                view = f"__tt_{m.group('name').replace('.', '_')}_{n}"
-                self.spark.read.parquet(path).createOrReplaceTempView(view)
-                out.append(f"FROM {view}")
-            pos = m.end()
-        out.append(query[pos:])
-        return "".join(out)
+        Routing is decided in one place, the route table
+        :data:`apache_flink_spark.statement.ROUTES`: the statement's
+        leading keywords name its one route. A route that carries a query
+        has the Flink SQL surfaces Spark lacks (window TVFs,
+        MATCH_RECOGNIZE, ML_PREDICT, hints, ...) rewritten once by
+        :data:`apache_flink_spark.statement.REWRITES`; the route's handler
+        then runs it, and what no handler takes runs on ``spark.sql``."""
+        stmt = statement.classify(query)
+        if stmt.route in statement.REWRITTEN_ROUTES:
+            stmt = stmt._replace(sql=statement.rewrite(self, stmt))
+        handler = statement.HANDLERS.get(stmt.route)
+        out = handler(self, stmt) if handler is not None else None
+        return self.spark.sql(stmt.sql) if out is None else out
 
     def from_path(self, name: str) -> DataFrame:
         return self.spark.table(name)

@@ -36,6 +36,13 @@ from __future__ import annotations
 
 import re
 
+from apache_flink_spark.statement import (
+    closing_paren,
+    in_literal,
+    literal_spans,
+    split_top_level,
+)
+
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 _CALL_RE = re.compile(
@@ -49,57 +56,16 @@ _SCOPE_END = re.compile(
 )
 
 
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    spans, i, n = [], 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    break
-                j += 1
-            spans.append((i, j))
-            i = j + 1
-        else:
-            i += 1
-    return spans
-
-
-def _in_literal(spans, pos: int) -> bool:
-    return any(a <= pos <= b for a, b in spans)
-
-
-def _balanced(sql: str, open_pos: int) -> int:
-    """Index of the ')' matching the '(' at open_pos."""
-    depth, i, n = 0, open_pos, len(sql)
-    spans = _literal_spans(sql)
-    while i < n:
-        if _in_literal(spans, i):
-            i += 1
-            continue
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced parentheses")
-
-
 def _enclosing_from(sql: str, pos: int) -> str | None:
     """The FROM clause of the subquery containing position ``pos`` (the
     aggregate call site): scan FORWARD at the same paren depth — in a
     SELECT list the FROM always follows. Returns None when the query has
     no FROM at this depth (SELECT without FROM)."""
-    spans = _literal_spans(sql)
+    spans = literal_spans(sql)
     depth, i, n = 0, pos, len(sql)
     from_start = None
     while i < n:
-        if _in_literal(spans, i):
+        if in_literal(spans, i):
             i += 1
             continue
         c = sql[i]
@@ -122,7 +88,7 @@ def _enclosing_from(sql: str, pos: int) -> str | None:
     depth, j = 0, from_start
     out_end = n
     while j < n:
-        if _in_literal(spans, j):
+        if in_literal(spans, j):
             j += 1
             continue
         c = sql[j]
@@ -176,7 +142,7 @@ def _cte_prefix(sql: str) -> str:
         if not mm:
             break
         try:
-            close = _balanced(sql, i + mm.end() - 1)
+            close = closing_paren(sql, i + mm.end() - 1)
         except ValueError:
             return ""
         i = close + 1
@@ -196,7 +162,7 @@ def _over_suffix(sql: str, close: int) -> tuple[str, int]:
         return "", close + 1
     if m.group(1) == "(":
         oopen = close + 1 + m.end() - 1
-        oclose = _balanced(sql, oopen)
+        oclose = closing_paren(sql, oopen)
         return sql[close + 1: oclose + 1], oclose + 1
     end = close + 1 + m.end()
     return sql[close + 1: end], end
@@ -209,7 +175,7 @@ def _filter_suffix(sql: str, close: int) -> tuple[str, int]:
     if not m:
         return "", close + 1
     fopen = close + 1 + m.end() - 1
-    fclose = _balanced(sql, fopen)
+    fclose = closing_paren(sql, fopen)
     return sql[close + 1: fclose + 1], fclose + 1
 
 
@@ -218,24 +184,6 @@ def _split_distinct(arg: str) -> tuple[str, str]:
     if m:
         return "DISTINCT ", arg[m.end():].strip()
     return "", arg.strip()
-
-
-def _top_level_comma_split(arg: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    spans = _literal_spans(arg)
-    for i, c in enumerate(arg):
-        if not _in_literal(spans, i):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-                continue
-        cur.append(c)
-    parts.append("".join(cur))
-    return [p.strip() for p in parts]
 
 
 def rewrite_flink_aggregates(spark, sql: str) -> str:
@@ -267,15 +215,15 @@ def rewrite_flink_aggregates(spark, sql: str) -> str:
     out = re.sub(r"(?i)\bPROCTIME\s*\(\s*\)", "current_timestamp()", out)
     # repeat until no call rewrites (positions shift after each edit)
     for _ in range(64):
-        spans = _literal_spans(out)
+        spans = literal_spans(out)
         changed = False
         for m in _CALL_RE.finditer(out):
-            if _in_literal(spans, m.start()):
+            if in_literal(spans, m.start()):
                 continue
             fn = m.group("fn").upper()
             open_pos = m.end() - 1
             try:
-                close = _balanced(out, open_pos)
+                close = closing_paren(out, open_pos)
             except ValueError:
                 return out
             arg = out[open_pos + 1: close]
@@ -364,7 +312,7 @@ def rewrite_flink_aggregates(spark, sql: str) -> str:
             elif fn == "LISTAGG":
                 if "/*__flink_ws*/" in arg:
                     continue
-                parts = _top_level_comma_split(arg)
+                parts = split_top_level(arg)
                 over, oend = _over_suffix(out, close)
                 if over:
                     # Flink supports LISTAGG [DISTINCT] inside OVER
@@ -461,11 +409,11 @@ def rewrite_bracket_literals(sql: str) -> str:
 def _preceding_from(sql: str, pos: int) -> str | None:
     """The FROM-clause text between the nearest same-depth FROM keyword
     BEFORE ``pos`` and ``pos`` — the tables the UNNEST correlates to."""
-    spans = _literal_spans(sql)
+    spans = literal_spans(sql)
     depth = 0
     i = pos - 1
     while i >= 0:
-        if _in_literal(spans, i):
+        if in_literal(spans, i):
             i -= 1
             continue
         c = sql[i]
@@ -507,17 +455,17 @@ def rewrite_unnest(spark, sql: str) -> str:
     # ARRAY[...] / MAP[...] literal syntax first
     sql = rewrite_bracket_literals(sql)
     for _ in range(32):
-        spans = _literal_spans(sql)
+        spans = literal_spans(sql)
         m = None
         for cand in _UNNEST_RE.finditer(sql):
-            if not _in_literal(spans, cand.start()):
+            if not in_literal(spans, cand.start()):
                 m = cand
                 break
         if m is None:
             return sql
         open_pos = m.end() - 1
         try:
-            close = _balanced(sql, open_pos)
+            close = closing_paren(sql, open_pos)
         except ValueError:
             return sql
         expr = sql[open_pos + 1: close]
@@ -606,19 +554,3 @@ def rewrite_unnest(spark, sql: str) -> str:
             repl = f" LATERAL VIEW {outer}{gen} {alias}{col_sfx} "
         sql = sql[: m.start()] + repl + sql[end:]
     return sql
-
-
-def needs_rewrite(sql: str) -> bool:
-    up = sql.upper()
-    if any(
-        tok in up
-        for tok in (
-            "AVG", "VAR_POP", "LISTAGG", "COLLECT", "JSON_OBJECTAGG",
-            "JSON_ARRAYAGG",
-        )
-    ):
-        return True
-    if "VARCHAR" in up or "GROUPING_ID" in up or "PROCTIME" in up:
-        return True
-    # DISTINCT aggregates inside OVER windows (SUM/COUNT/MIN/MAX)
-    return "DISTINCT" in up and "OVER" in up

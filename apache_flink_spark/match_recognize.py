@@ -70,7 +70,17 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["sql_with_match_recognize", "compile_match_recognize"]
+from apache_flink_spark.statement import (
+    closing_paren,
+    in_literal,
+    literal_spans,
+    split_top_level,
+)
+
+__all__ = [
+    "sql_with_match_recognize", "rewrite_match_recognize",
+    "compile_match_recognize",
+]
 
 
 class MatchRecognizeError(ValueError):
@@ -156,30 +166,6 @@ def _parse_quant(q: str | None) -> tuple[int, int | None, bool]:
     if hi is not None and hi < lo:
         raise MatchRecognizeError(f"bad quantifier bounds {q!r}: max < min")
     return (lo, hi, greedy)
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas not nested inside parentheses or string literals."""
-    parts, depth, cur = [], 0, []
-    quote: str | None = None
-    for ch in s:
-        if quote:
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0 and quote is None:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur and "".join(cur).strip():
-        parts.append("".join(cur).strip())
-    return parts
 
 
 def _parse_pattern(
@@ -512,7 +498,7 @@ _MEASURE_KEYWORDS = {
 def _parse_measures(meas: str):
     out = []
     post_fns: dict[str, str] = {}
-    for part in _split_top_level(meas):
+    for part in split_top_level(meas):
         m = _MEASURE_RE.match(part.strip())
         if not m:
             fm = _FN_MEASURE_RE.match(part.strip())
@@ -895,9 +881,10 @@ def _sql_pred_to_python(expr: str, columns, var_msg: str) -> str:
             f"DEFINE {var_msg}: {name!r} is neither a column nor part of "
             "the supported cross-variable predicate subset (comparisons, "
             "AND/OR/NOT, arithmetic, ABS, COALESCE, LAST/FIRST binds). "
-            "Scalar UDFs run only in own-row DEFINEs (no bind "
-            "aggregates in the same predicate); aggregate UDFs are not "
-            "supported — express them via the builtin bind aggregates"
+            "A scalar UDF runs in an own-row part of a cross-variable "
+            "DEFINE, but not inside a bind-aggregate predicate; aggregate "
+            "UDFs are not supported — express them via the builtin bind "
+            "aggregates"
         )
 
     def convert(e: str) -> str:
@@ -942,7 +929,7 @@ def _parse_defines(
     out: dict[str, str] = {}
     nav: dict[str, tuple[str, str, int]] = {}
     cross: dict[str, str] = {}
-    for part in _split_top_level(defs):
+    for part in split_top_level(defs):
         m = re.match(r"^(\w+)\s+AS\s+(.+)$", part.strip(), re.I | re.S)
         if not m:
             raise MatchRecognizeError(f"unsupported DEFINE clause: {part!r}")
@@ -1080,20 +1067,10 @@ def _hoist_own_row(pred, var, variables, own: dict, base: int) -> str:
             out.append(ch)
             i += 1
             continue
-        depth, j, quote = 0, i, None
-        while j < len(pred):
-            c = pred[j]
-            if quote:
-                quote = None if c == quote else quote
-            elif c in "'\"":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
+        try:
+            j = closing_paren(pred, i)
+        except ValueError:
+            j = len(pred)
         inner = pred[i + 1:j]
         bare = "".join(re.split(r"(\"[^\"]*\"|'[^']*')", inner)[0::2])
         word = re.search(r"(\w+)\s*$", pred[:i])
@@ -1220,14 +1197,7 @@ def _normalize_quoted_vars(body: str) -> str:
     pm = re.search(r"\bPATTERN\s*\(", body, re.I)
     if pm is None:
         return body
-    depth, i = 1, pm.end()
-    while i < len(body) and depth:
-        if body[i] == "(":
-            depth += 1
-        elif body[i] == ")":
-            depth -= 1
-        i += 1
-    seg = body[pm.end(): i - 1]
+    seg = body[pm.end(): closing_paren(body, pm.end() - 1)]
     names = sorted(set(re.findall(r"`([^`]+)`", seg)))
     for k, n in enumerate(names):
         body = body.replace(f"`{n}`", f"__mrq{k}")
@@ -1910,7 +1880,7 @@ def compile_match_recognize(
     # _parse_defines (unknown variable) — loudly, per the module contract.
     subsets: dict[str, tuple[str, ...]] = {}
     if m.group("subset"):
-        for part in _split_top_level(m.group("subset")):
+        for part in split_top_level(m.group("subset")):
             sm = re.match(
                 r"^(\w+)\s*=\s*\(\s*([\w\s,]+)\s*\)$", part.strip()
             )
@@ -2285,29 +2255,33 @@ _MR_SITE_RE = re.compile(r"(\w+)\s+MATCH_RECOGNIZE\s*\(", re.I)
 _view_counter = itertools.count()
 
 
-def sql_with_match_recognize(spark: SparkSession, sql: str) -> DataFrame:
-    """Execute SQL, compiling any ``<table> MATCH_RECOGNIZE (...)`` subtree.
-
-    The subtree is compiled to a DataFrame, registered as a temp view, and
-    textually substituted so the remaining query (outer SELECT, WHERE,
-    ORDER BY, joins against the matches) still runs through ``spark.sql``.
-    """
+def rewrite_match_recognize(spark: SparkSession, sql: str) -> str:
+    """Compile every ``<table> MATCH_RECOGNIZE (...)`` subtree outside
+    literals to a DataFrame, register it as a temp view, and substitute the
+    view's name, so the statement around it (outer SELECT, joins against
+    the matches, INSERT, CREATE VIEW) runs unchanged."""
+    pos = 0
     while True:
-        m = _MR_SITE_RE.search(sql)
+        m = _MR_SITE_RE.search(sql, pos)
         if m is None:
-            return spark.sql(sql)
-        src_name = m.group(1)
-        # Find the matching close paren of MATCH_RECOGNIZE( ... ).
-        depth, i = 1, m.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            raise MatchRecognizeError("unbalanced parentheses in MATCH_RECOGNIZE")
-        body = sql[m.end(): i - 1]
+            return sql
+        if in_literal(literal_spans(sql), m.start(1)):
+            pos = m.end()
+            continue
+        try:
+            close = closing_paren(sql, m.end() - 1)
+        except ValueError:
+            raise MatchRecognizeError(
+                "unbalanced parentheses in MATCH_RECOGNIZE"
+            ) from None
+        body = sql[m.end(): close]
         view = f"__mr_matches_{next(_view_counter)}"
-        compile_match_recognize(spark, spark.table(src_name), body).createOrReplaceTempView(view)
-        sql = sql[: m.start()] + view + sql[i:]
+        compile_match_recognize(spark, spark.table(m.group(1)), body).createOrReplaceTempView(view)
+        sql = sql[: m.start()] + view + sql[close + 1:]
+        pos = m.start() + len(view)
+
+
+def sql_with_match_recognize(spark: SparkSession, sql: str) -> DataFrame:
+    """Execute SQL, compiling any ``<table> MATCH_RECOGNIZE (...)`` subtree
+    (:func:`rewrite_match_recognize`)."""
+    return spark.sql(rewrite_match_recognize(spark, sql))

@@ -89,16 +89,11 @@ _DROP_RE = re.compile(
     re.IGNORECASE,
 )
 
-# Anchored to the statement verbs: 'materialized table' inside a string
-# literal or comment of an ordinary query must NOT divert the dispatch
-# (review r6 finding #8).
-_MT_STMT_RE = re.compile(
-    r"^\s*(CREATE|ALTER|DROP)\s+MATERIALIZED\s+TABLE\b", re.IGNORECASE
+_TIME_TRAVEL_RE = re.compile(
+    r"\bFROM\s+(?P<name>[A-Za-z_][\w.]*)\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+"
+    r"TIMESTAMP\s+'(?P<ts>[^']+)'",
+    re.I,
 )
-
-
-def is_materialized_table_stmt(sql: str) -> bool:
-    return bool(_MT_STMT_RE.search(sql))
 
 
 @dataclass
@@ -355,6 +350,34 @@ class MaterializedTableManager:
             n = spark.table(t.name).count()
         t.last_refresh_mono = time.monotonic()
         return n
+
+    def rewrite_time_travel(self, sql: str) -> str:
+        """FLIP-308 time travel: ``FROM mt FOR SYSTEM_TIME AS OF TIMESTAMP
+        '...'`` on a materialized table reads the generation that was
+        current at that instant (:meth:`resolve_as_of`). Other names are
+        left for the temporal-join rewrite."""
+        from datetime import datetime
+
+        out, pos, n = [], 0, 0
+        for m in _TIME_TRAVEL_RE.finditer(sql):
+            name = m.group("name")
+            if name not in self.tables:
+                continue
+            epoch = datetime.fromisoformat(m.group("ts")).timestamp()
+            path = self.resolve_as_of(name, epoch)
+            out.append(sql[pos: m.start()])
+            if path == self.tables[name].current_path:
+                # the current generation IS the live view (and for an
+                # append-mode table its dir may not have materialized yet)
+                out.append(f"FROM {name}")
+            else:
+                n += 1
+                view = f"__tt_{name.replace('.', '_')}_{n}"
+                self.tenv.spark.read.parquet(path).createOrReplaceTempView(view)
+                out.append(f"FROM {view}")
+            pos = m.end()
+        out.append(sql[pos:])
+        return "".join(out)
 
     def resolve_as_of(self, name: str, epoch_s: float) -> str:
         """FLIP-308 time travel: the snapshot directory that was current

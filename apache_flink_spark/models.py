@@ -34,6 +34,8 @@ import re
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING, Callable, Optional
 
+from apache_flink_spark.statement import in_literal, literal_spans
+
 if TYPE_CHECKING:  # pandas loads lazily — sessions that never score a
     import pandas as pd  # model must not pay the import (r6 review)
 
@@ -43,6 +45,7 @@ __all__ = [
     "ModelError",
     "register_provider",
     "ml_predict",
+    "rewrite_ml_predict",
     "try_handle_model_statement",
 ]
 
@@ -297,7 +300,7 @@ def _parse_opts(body: Optional[str]) -> dict[str, str]:
 
 def try_handle_model_statement(tenv, sql: str):
     """Route one model statement; returns a DataFrame, or None when the
-    statement is not model DDL / ML_PREDICT (caller falls through)."""
+    statement is not model DDL (caller falls through)."""
     spark = tenv.spark
     cat: ModelCatalog = tenv.model_catalog
 
@@ -372,20 +375,29 @@ def try_handle_model_statement(tenv, sql: str):
         return spark.createDataFrame(
             rows, "name string, type string, kind string"
         )
+    return None
 
-    pm = _ML_PREDICT_RE.search(sql)
-    if pm:
-        model = cat.get(pm.group("model"))
+
+def rewrite_ml_predict(tenv, sql: str) -> str:
+    """Substitute each ``ML_PREDICT(TABLE t, MODEL m[, DESCRIPTOR(...)])``
+    call outside literals with a temp view of its scored rows, so the
+    statement around it (a SELECT, an INSERT INTO a DDL sink, a view)
+    runs on its route unchanged."""
+    pos = 0
+    while True:
+        pm = _ML_PREDICT_RE.search(sql, pos)
+        if pm is None:
+            return sql
+        if in_literal(literal_spans(sql), pm.start()):
+            pos = pm.end()
+            continue
+        model = tenv.model_catalog.get(pm.group("model"))
         desc = pm.group("desc")
         cols = (
             [c.strip().strip("`") for c in desc.split(",")] if desc else None
         )
-        scored = ml_predict(spark.table(pm.group("table")), model, cols)
+        scored = ml_predict(tenv.spark.table(pm.group("table")), model, cols)
         view = f"__ml_predict_{pm.group('model')}_{pm.group('table')}"
         scored.createOrReplaceTempView(view)
-        # re-dispatch the substituted statement through the FACADE, not
-        # bare spark.sql: an INSERT INTO <ddl sink> SELECT ... FROM
-        # ML_PREDICT(...) must still reach execute_flink_insert (r6
-        # review finding — spark.sql cannot insert into a temp view)
-        return tenv.sql(sql[:pm.start()] + view + sql[pm.end():])
-    return None
+        sql = sql[:pm.start()] + view + sql[pm.end():]
+        pos = pm.start() + len(view)

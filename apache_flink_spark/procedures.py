@@ -35,6 +35,8 @@ import shutil
 from dataclasses import dataclass
 from typing import Callable
 
+from apache_flink_spark.statement import split_top_level
+
 __all__ = [
     "ProcedureError",
     "ProcedureContext",
@@ -220,33 +222,9 @@ _SHOW_RE = re.compile(r"^\s*SHOW\s+PROCEDURES\s*$", re.I)
 
 def _parse_args(body: str) -> list:
     """Positional literal arguments: quoted strings, ints, floats,
-    TRUE/FALSE. Split on commas outside string literals."""
-    args, cur, in_str = [], [], False
-    i, n = 0, len(body)
-    while i < n:
-        c = body[i]
-        if in_str:
-            cur.append(c)
-            if c == "'":
-                if i + 1 < n and body[i + 1] == "'":
-                    cur.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-            cur.append(c)
-        elif c == ",":
-            args.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if cur and "".join(cur).strip():
-        args.append("".join(cur))
+    TRUE/FALSE, split on the commas outside literals."""
     out = []
-    for a in args:
-        a = a.strip()
+    for a in split_top_level(body):
         if a.startswith("'") and a.endswith("'"):
             out.append(a[1:-1].replace("''", "'"))
         elif a.upper() in ("TRUE", "FALSE"):

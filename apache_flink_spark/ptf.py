@@ -47,6 +47,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from apache_flink_spark.statement import in_literal, literal_spans
+
 
 class PtfError(ValueError):
     pass
@@ -165,25 +167,6 @@ _SCALAR_ARG_RE = re.compile(
 )
 
 
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    spans, i, n = [], 0, len(sql)
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append((i, j))
-            i = j + 1
-        else:
-            i += 1
-    return spans
-
-
 def _parse_scalars(rest: str, fn_name: str) -> dict:
     rest = rest or ""
     leftover = _SCALAR_ARG_RE.sub("", rest)
@@ -230,10 +213,10 @@ def rewrite_ptf_calls(spark: SparkSession, sql: str) -> str:
     counter = [0]
 
     while True:
-        lits = _literal_spans(sql)
+        lits = literal_spans(sql)
         m = None
         for cand in call_re.finditer(sql):
-            if not any(a <= cand.start() < b for a, b in lits):
+            if not in_literal(lits, cand.start()):
                 m = cand
                 break
         if m is None:

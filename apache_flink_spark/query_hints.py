@@ -37,6 +37,8 @@ from __future__ import annotations
 import re
 from typing import Optional
 
+from apache_flink_spark.statement import closing_paren, in_literal, literal_spans
+
 __all__ = ["rewrite_flink_hints", "HintError"]
 
 
@@ -59,27 +61,18 @@ _HINT_CALL_RE = re.compile(r"(?P<name>[A-Za-z_]\w*)\s*\(", re.S)
 
 def _find_hint_blocks(sql: str) -> list[tuple[int, int]]:
     """Spans of ``/*+ ... */`` blocks outside string literals."""
-    spans = []
-    i, n = 0, len(sql)
-    in_str = False
-    while i < n:
-        c = sql[i]
-        if in_str:
-            if c == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-        elif sql.startswith("/*+", i):
-            end = sql.find("*/", i + 3)
-            if end < 0:
-                raise HintError("unterminated hint block /*+ ...")
-            spans.append((i, end + 2))
-            i = end + 1
-        i += 1
-    return spans
+    spans, out = literal_spans(sql), []
+    i = sql.find("/*+")
+    while i >= 0:
+        if in_literal(spans, i):
+            i = sql.find("/*+", i + 1)
+            continue
+        end = sql.find("*/", i + 3)
+        if end < 0:
+            raise HintError("unterminated hint block /*+ ...")
+        out.append((i, end + 2))
+        i = sql.find("/*+", end + 2)
+    return out
 
 
 def _split_hint_calls(body: str) -> list[tuple[str, str]]:
@@ -94,25 +87,12 @@ def _split_hint_calls(body: str) -> list[tuple[str, str]]:
                 i += 1
                 continue
             raise HintError(f"unparseable hint text at: {body[i:i+40]!r}")
-        depth, j = 1, m.end()
-        in_str = False
-        while j < n and depth:
-            c = body[j]
-            if in_str:
-                if c == "'":
-                    if j + 1 < n and body[j + 1] == "'":
-                        j += 1
-                    else:
-                        in_str = False
-            elif c == "'":
-                in_str = True
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
-        if depth:
-            raise HintError(f"unbalanced parens in hint {m.group('name')}")
+        try:
+            j = closing_paren(body, m.end() - 1) + 1
+        except ValueError:
+            raise HintError(
+                f"unbalanced parens in hint {m.group('name')}"
+            ) from None
         out.append((m.group("name").upper(), body[m.end():j - 1]))
         i = j
     return out

@@ -28,6 +28,8 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from apache_flink_spark.statement import split_top_level
+
 __all__ = ["try_handle_row_level_statement", "RowLevelError"]
 
 
@@ -53,37 +55,8 @@ _TRUNCATE_RE = re.compile(
 def _split_assignments(sets: str) -> list[tuple[str, str]]:
     """Split ``a = expr, b = expr`` on top-level commas (string-literal-
     and paren-safe), then each on its first top-level ``=``."""
-    parts, cur, depth, in_str = [], [], 0, False
-    i, n = 0, len(sets)
-    while i < n:
-        c = sets[i]
-        if in_str:
-            cur.append(c)
-            if c == "'":
-                if i + 1 < n and sets[i + 1] == "'":
-                    cur.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif c == "'":
-            in_str = True
-            cur.append(c)
-        elif c == "(":
-            depth += 1
-            cur.append(c)
-        elif c == ")":
-            depth -= 1
-            cur.append(c)
-        elif c == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if "".join(cur).strip():
-        parts.append("".join(cur))
     out = []
-    for p in parts:
+    for p in split_top_level(sets):
         m = re.match(r"^\s*`?(\w+)`?\s*=\s*(.+?)\s*$", p, re.S)
         if not m:
             raise RowLevelError(f"unparseable SET assignment: {p.strip()!r}")

@@ -20,6 +20,8 @@ import re
 import sys
 from typing import Iterator, Optional
 
+from apache_flink_spark.statement import QUOTED
+
 _STMT_SET_OPEN_RE = re.compile(
     r"^\s*EXECUTE\s+STATEMENT\s+SET\s+BEGIN\b", re.I
 )
@@ -186,33 +188,22 @@ class SqlClient:
             self.run_statement(buf)
 
 
+# a literal or quoted identifier, a comment, or a statement terminator
+_SCRIPT_TOKEN_RE = re.compile(QUOTED + r"|--[^\n]*|/\*.*?(?:\*/|$)|;", re.S)
+
+
 def _split_terminated(text: str) -> tuple[list[str], str]:
-    """Split on ';' outside single-quoted literals and ``--`` comments;
-    returns (';'-terminated statements, unterminated tail)."""
-    stmts, cur, in_str, i = [], [], False, 0
-    while i < len(text):
-        ch = text[i]
-        if in_str:
-            cur.append(ch)
-            if ch == "'":
-                if i + 1 < len(text) and text[i + 1] == "'":
-                    cur.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-            cur.append(ch)
-        elif ch == "-" and text[i:i + 2] == "--":
-            j = text.find("\n", i)
-            i = len(text) if j < 0 else j
-            continue
-        elif ch == ";":
-            stmts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
+    """Split on ';' outside literals and comments, dropping ``--``
+    comments; returns (';'-terminated statements, unterminated tail)."""
+    stmts, cur, pos = [], [], 0
+    for m in _SCRIPT_TOKEN_RE.finditer(text):
+        if m.group() == ";" or m.group().startswith("--"):
+            cur.append(text[pos: m.start()])
+            pos = m.end()
+            if m.group() == ";":
+                stmts.append("".join(cur))
+                cur = []
+    cur.append(text[pos:])
     return [s for s in stmts if s.strip()], "".join(cur)
 
 
@@ -246,8 +237,8 @@ def _merge_statement_sets(
 
 
 def split_statements(text: str) -> list[str]:
-    """Split a script on ';' outside single-quoted literals and ``--``
-    line comments, keeping EXECUTE STATEMENT SET blocks intact."""
+    """Split a script on ';' outside literals and comments, keeping
+    EXECUTE STATEMENT SET blocks intact."""
     stmts, rest = _split_terminated(text)
     if rest.strip():
         stmts.append(rest)

@@ -334,11 +334,6 @@ class _Session:
         self.last_access = time.monotonic()
 
 
-_CONFIG_ONLY = re.compile(
-    r"^\s*(SET|RESET|CREATE|DROP|ALTER|USE|ADD|LOAD)\b", re.IGNORECASE
-)
-
-
 class SqlGatewayService:
     """In-process analog of the reference's ``SqlGatewayServiceImpl``.
 
@@ -410,8 +405,10 @@ class SqlGatewayService:
     ) -> None:
         """Synchronous DDL/SET/RESET/USE only — statements that return rows
         are rejected, as in the reference's ``configureSession``."""
+        from apache_flink_spark.statement import classify
+
         sess = self._session(handle)
-        if not _CONFIG_ONLY.match(statement):
+        if not classify(statement).configures:
             raise GatewayError(
                 "configure_session only accepts SET/RESET/DDL/USE "
                 f"statements, got: {statement.strip()[:60]!r}"

@@ -30,6 +30,8 @@ from __future__ import annotations
 import itertools
 import re
 
+from apache_flink_spark.statement import in_literal, literal_spans
+
 
 class WindowTvfError(ValueError):
     pass
@@ -172,30 +174,14 @@ def _rewrite_one(
     )
 
 
-def _literal_spans(sql: str) -> list[tuple[int, int]]:
-    """Spans of string literals ('' doubles as the escape) — rewrite
-    matches STARTING inside one are window-syntax-shaped text in data,
-    not syntax, and must be left alone (r6 review). Splitting on the
-    literals instead would break LEGIT calls, whose interval arguments
-    are themselves literals (``TUMBLE(ts, INTERVAL '1' HOUR)``)."""
-    return [
-        m.span()
-        for m in re.finditer(r"'(?:[^']|'')*'|\"[^\"]*\"", sql)
-    ]
-
-
-def _in_literal(spans: list[tuple[int, int]], pos: int) -> bool:
-    return any(a < pos < b for a, b in spans)
-
-
 def rewrite_window_tvfs(sql: str) -> str:
     """Replace every ``TABLE(TUMBLE|HOP|CUMULATE(...))`` site with an
     equivalent Spark SQL subquery; returns the SQL unchanged if none."""
     pos = 0
     while True:
-        spans = _literal_spans(sql)
+        spans = literal_spans(sql)
         m = _TVF_RE.search(sql, pos)
-        while m is not None and _in_literal(spans, m.start()):
+        while m is not None and in_literal(spans, m.start()):
             m = _TVF_RE.search(sql, m.end())
         if m is None:
             return sql
@@ -239,10 +225,10 @@ def rewrite_group_windows(sql: str) -> str:
     ``.start`` / ``.end`` field of the same grouping expression (Catalyst
     matches the repeated expression to the grouping column)."""
 
-    spans = _literal_spans(sql)
+    spans = literal_spans(sql)
 
     def sub(m: re.Match) -> str:
-        if _in_literal(spans, m.start()):
+        if in_literal(spans, m.start()):
             return m.group(0)  # window-shaped text inside a string literal
         expr = _gw_expr(m.group(1).upper(), m.group(3), m.group(4))
         suffix = (m.group(2) or "").upper()

@@ -44,6 +44,13 @@ def test_split_statements():
     # -- comments stripped to end-of-line
     assert split_statements("SELECT 1 -- trailing; not a split\n; SELECT 2") \
         == ["SELECT 1 \n", " SELECT 2"]
+    # nor inside a double-quoted literal or a block comment
+    assert split_statements('SELECT "a;b" AS x; SELECT 1;') == [
+        'SELECT "a;b" AS x', " SELECT 1",
+    ]
+    assert split_statements("SELECT 1 /* a;b */ AS x; SELECT 2") == [
+        "SELECT 1 /* a;b */ AS x", " SELECT 2",
+    ]
 
 
 def test_render_tableau():

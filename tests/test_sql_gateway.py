@@ -134,6 +134,15 @@ def test_configure_session_rejects_queries(service, session):
         service.configure_session(session, "SELECT 1")
 
 
+def test_configure_session_reads_past_a_leading_comment(service, session):
+    service.configure_session(session, "/* c */ SET 'gw.comment.key' = 'v'")
+    sess_spark = service._session(session).tenv.spark
+    assert sess_spark.conf.get("gw.comment.key") == "v"
+    for query in ("SELECT 1", "/* SET */ SELECT 1"):
+        with pytest.raises(GatewayError, match="configure_session only"):
+            service.configure_session(session, query)
+
+
 def test_configure_set_is_session_scoped(service, session, spark):
     service.configure_session(
         session, "SET 'spark.sql.shuffle.partitions' = '7'"
