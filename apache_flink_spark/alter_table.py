@@ -18,7 +18,8 @@ flink-table-planner) and ``SqlShowCreateTable`` /
   - ``SHOW CREATE TABLE t``
 
 Execution model. The reference mutates catalog metadata and lets
-connectors interpret it. Here the catalog is :data:`ddl._TABLES` and the
+connectors interpret it. Here the catalog is the session's DDL tables
+(:attr:`~apache_flink_spark.session.SessionState.tables`) and the
 storage is real files, so each shape picks the cheapest SAFE strategy:
 
   - **Metadata-only** (no data movement): RENAME TO, SET/RESET, and —
@@ -45,8 +46,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from apache_flink_spark.ddl import (
-    _TABLES,
-    WATERMARKS,
     DdlError,
     _map_type,
     _schema_ddl_cols,
@@ -55,6 +54,7 @@ from apache_flink_spark.ddl import (
     fs_writer,
     refresh_table_view,
 )
+from apache_flink_spark.session import session_state
 from apache_flink_spark.statement import split_top_level
 
 __all__ = ["try_handle_alter_statement", "show_create_table"]
@@ -117,12 +117,14 @@ _DROP_PART_RE = re.compile(
 )
 
 
-def _parse_part_spec(name: str, spec: str) -> list[tuple[str, str]]:
+def _parse_part_spec(
+    spark: SparkSession, name: str, spec: str
+) -> list[tuple[str, str]]:
     """``k='v', k2=3`` -> ordered (col, value) pairs matching the table's
     declared PARTITIONED BY order (reference partition-spec resolution)."""
     from apache_flink_spark.ddl import part_cols
 
-    declared = part_cols(name)
+    declared = part_cols(spark, name)
     if not declared:
         raise DdlError(f"table {name!r} is not partitioned")
     from apache_flink_spark.ddl import parse_kv_spec
@@ -179,13 +181,13 @@ def _list_partitions(path: str, declared: list[str]) -> list[str]:
     return out
 
 
-def _fs_spec(name: str):
+def _fs_spec(spark: SparkSession, name: str):
     """Spec for a filesystem DDL table, or None when ``name`` is not a
     DDL table at all (caller falls through to ``spark.sql`` — Spark
     handles ALTER on its own catalog tables)."""
-    if name not in _TABLES:
+    spec = session_state(spark).tables.get(name)
+    if spec is None:
         return None
-    spec = _TABLES[name]
     if spec[0] == "datagen":
         raise DdlError(
             f"{name!r} is a datagen source — ALTER applies to filesystem "
@@ -199,24 +201,25 @@ def _ok(spark: SparkSession):
     return spark.sql("SELECT 'OK' AS result")
 
 
-def _set_schema(name: str, cols: list[tuple[str, str]]) -> None:
-    fmt, path, _schema, opts = _TABLES[name]
-    _TABLES[name] = (fmt, path, ", ".join(f"{c} {t}" for c, t in cols), opts)
+def _set_schema(spark: SparkSession, name: str, cols: list[tuple[str, str]]):
+    tables = session_state(spark).tables
+    fmt, path, _schema, opts = tables[name]
+    tables[name] = (fmt, path, ", ".join(f"{c} {t}" for c, t in cols), opts)
 
 
 def _cow_rewrite(spark, name: str, select_exprs) -> None:
     """Distributed rewrite of the table files under the CURRENT declared
     schema, projecting ``select_exprs``, then atomic dir swap — the
-    row_level.py copy-on-write shape. Callers update _TABLES BEFORE this
+    row_level.py copy-on-write shape. Callers update the spec BEFORE this
     runs only if the writer schema should be the new one (it reads via the
     pre-change reader passed in select exprs)."""
-    fmt, path, _schema, _opts = _TABLES[name]
+    fmt, path, _schema, _opts = session_state(spark).tables[name]
     reader, _ = fs_reader(spark, name)
     df = reader.load(path).select(*select_exprs)
     staging = path.rstrip("/") + ".__altering__"
     backup = path.rstrip("/") + ".__prealter__"
     shutil.rmtree(staging, ignore_errors=True)
-    writer, _fmt, _p = fs_writer(df, name)
+    writer, _fmt, _p = fs_writer(spark, df, name)
     writer.mode("overwrite").save(staging)
     shutil.rmtree(backup, ignore_errors=True)
     os.rename(path, backup)
@@ -289,9 +292,10 @@ def describe_table(spark: SparkSession, name: str, like: str | None = None):
     / SqlShowColumns): columns name/type/null/key/extras/watermark — the
     reference's six-column layout, including the WATERMARK expression and
     partition-key marker Spark's own DESCRIBE cannot know about."""
-    if name not in _TABLES:
+    st = session_state(spark)
+    spec = st.tables.get(name)
+    if spec is None:
         return None  # Spark handles DESCRIBE for its own tables
-    spec = _TABLES[name]
     if spec[0] == "datagen":
         cols = list(spec[2])
         pkeys: list[str] = []
@@ -299,10 +303,10 @@ def describe_table(spark: SparkSession, name: str, like: str | None = None):
         cols = _schema_ddl_cols(spec[2])
         from apache_flink_spark.ddl import part_cols
 
-        pkeys = part_cols(name)
+        pkeys = part_cols(spark, name)
     wm_col, wm = (None, "")
-    if name in WATERMARKS:
-        c, delay = WATERMARKS[name]
+    if name in st.watermarks:
+        c, delay = st.watermarks[name]
         n, u = delay.split(None, 1)
         wm_col, wm = c, f"`{c}` - INTERVAL '{n}' {u.upper()}"
     rows = []
@@ -356,9 +360,10 @@ def show_create_table(spark: SparkSession, name: str):
             f"WITH (\n{with_body}\n)"
         )
         return spark.createDataFrame([(ddl,)], "result string")
-    if name not in _TABLES:
+    st = session_state(spark)
+    spec = st.tables.get(name)
+    if spec is None:
         return None  # not a DDL table — Spark may know it
-    spec = _TABLES[name]
     if spec[0] == "datagen":
         cols = [(c, t) for c, t in spec[2]]
         opts = dict(spec[1])
@@ -371,8 +376,8 @@ def show_create_table(spark: SparkSession, name: str):
         opts.setdefault("path", path)
         opts.setdefault("format", fmt)
     lines = [f"  {c} {_flink_type(t)}" for c, t in cols]
-    if name in WATERMARKS:
-        col, delay = WATERMARKS[name]
+    if name in st.watermarks:
+        col, delay = st.watermarks[name]
         n, u = delay.split(None, 1)
         lines.append(
             f"  WATERMARK FOR {col} AS {col} - INTERVAL '{n}' {u.upper()}"
@@ -404,6 +409,7 @@ _DROP_DIST_RE = re.compile(
 def try_handle_alter_statement(spark: SparkSession, sql: str):
     """Route one ALTER TABLE / SHOW CREATE TABLE statement; returns a
     result DataFrame or None when the statement is not one of ours."""
+    st = session_state(spark)
     m = _SHOW_CREATE_RE.match(sql)
     if m:
         return show_create_table(spark, m.group("name"))
@@ -456,19 +462,19 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
         # reference SqlShowPartitions: one ``partition`` row per
         # hive-style partition dir, optionally filtered by a spec prefix
         name = m.group("name")
-        spec = _fs_spec(name)
+        spec = _fs_spec(spark, name)
         if spec is None:
             return None
         from apache_flink_spark.ddl import part_cols
 
-        declared = part_cols(name)
+        declared = part_cols(spark, name)
         if not declared:
             raise DdlError(f"table {name!r} is not partitioned")
         rows = _list_partitions(spec[1], declared)
         if m.group("spec"):
             prefix = "/".join(
                 f"{c}={v}"
-                for c, v in _parse_part_spec(name, m.group("spec"))
+                for c, v in _parse_part_spec(spark, name, m.group("spec"))
             )
             rows = [r for r in rows if r.startswith(prefix)]
         return spark.createDataFrame(
@@ -479,16 +485,16 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
     if m:
         # SqlAddPartitions: register (create) the partition directory
         name = m.group("name")
-        spec = _fs_spec(name)
+        spec = _fs_spec(spark, name)
         if spec is None:
             return None
-        pairs = _parse_part_spec(name, m.group("spec"))
+        pairs = _parse_part_spec(spark, name, m.group("spec"))
         from apache_flink_spark.ddl import part_cols
 
-        if len(pairs) != len(part_cols(name)):
+        if len(pairs) != len(part_cols(spark, name)):
             raise DdlError(
                 "ADD PARTITION needs a FULL partition spec "
-                f"({part_cols(name)})"
+                f"({part_cols(spark, name)})"
             )
         d = _part_dir(spec[1], pairs)
         if os.path.exists(d) and not m.group("ine"):
@@ -500,10 +506,10 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
     if m:
         # SqlDropPartitions: remove the partition dir(s) + refresh
         name = m.group("name")
-        spec = _fs_spec(name)
+        spec = _fs_spec(spark, name)
         if spec is None:
             return None
-        pairs = _parse_part_spec(name, m.group("spec"))
+        pairs = _parse_part_spec(spark, name, m.group("spec"))
         d = _part_dir(spec[1], pairs)
         if not os.path.exists(d):
             if m.group("ie"):
@@ -517,20 +523,20 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
     m = _RENAME_TABLE_RE.match(sql)
     if m:
         name, to = m.group("name"), m.group("to")
-        if name not in _TABLES:
+        if name not in st.tables:
             if re.match(r"^\s*ALTER\s+TABLE\s+IF\s+EXISTS", sql, re.I):
                 return _ok(spark)
             return None  # Spark handles ALTER ... RENAME on its tables
-        if to in _TABLES:
+        if to in st.tables:
             raise DdlError(f"target table {to!r} already exists")
-        _TABLES[to] = _TABLES.pop(name)
-        if name in WATERMARKS:
-            WATERMARKS[to] = WATERMARKS.pop(name)
+        st.tables[to] = st.tables.pop(name)
+        if name in st.watermarks:
+            st.watermarks[to] = st.watermarks.pop(name)
         spark.catalog.dropTempView(name)
-        if _TABLES[to][0] == "datagen":
+        if st.tables[to][0] == "datagen":
             from apache_flink_spark.ddl import _datagen_df
 
-            _datagen_df(spark, _TABLES[to][2], _TABLES[to][1]) \
+            _datagen_df(spark, st.tables[to][2], st.tables[to][1]) \
                 .createOrReplaceTempView(to)
         else:
             refresh_table_view(spark, to)
@@ -539,9 +545,9 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
     m = _RENAME_COL_RE.match(sql)
     if m:
         name, col, to = m.group("name"), m.group("col"), m.group("to")
-        if _fs_spec(name) is None:
+        if _fs_spec(spark, name) is None:
             return None
-        cols = _schema_ddl_cols(_TABLES[name][2])
+        cols = _schema_ddl_cols(st.tables[name][2])
         names = [c for c, _t in cols]
         if col not in names:
             raise DdlError(f"column {col!r} not in table {name!r}")
@@ -549,7 +555,7 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
             raise DdlError(f"column {to!r} already exists in {name!r}")
         from apache_flink_spark.ddl import part_cols
 
-        if col in part_cols(name):
+        if col in part_cols(spark, name):
             raise DdlError(
                 f"cannot RENAME partition column {col!r} — the hive "
                 "directory layout is keyed by its name"
@@ -561,17 +567,17 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
             [F.col(c).alias(to if c == col else c) for c in names],
         )
         _set_schema(
-            name, [(to if c == col else c, t) for c, t in cols]
+            spark, name, [(to if c == col else c, t) for c, t in cols]
         )
-        if WATERMARKS.get(name, (None,))[0] == col:
-            WATERMARKS[name] = (to, WATERMARKS[name][1])
+        if st.watermarks.get(name, (None,))[0] == col:
+            st.watermarks[name] = (to, st.watermarks[name][1])
         refresh_table_view(spark, name)
         return _ok(spark)
 
     m = _SET_RE.match(sql)
     if m:
         name = m.group("name")
-        if _fs_spec(name) is None:
+        if _fs_spec(spark, name) is None:
             return None
         new = _split_options(m.group("opts"))
         if not new:
@@ -586,23 +592,23 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
                 "cannot SET 'partitioned-by' — the hive directory layout "
                 "is physical; declare partitioning at CREATE time"
             )
-        fmt, path, schema_ddl, opts = _TABLES[name]
+        fmt, path, schema_ddl, opts = st.tables[name]
         opts = {**opts, **new}
         fmt = opts.get("format", fmt).lower()
         path = opts.get("path", path)
-        _TABLES[name] = (fmt, path, schema_ddl, opts)
+        st.tables[name] = (fmt, path, schema_ddl, opts)
         refresh_table_view(spark, name)
         return _ok(spark)
 
     m = _RESET_RE.match(sql)
     if m:
         name = m.group("name")
-        if _fs_spec(name) is None:
+        if _fs_spec(spark, name) is None:
             return None
         keys = [k for k in re.findall(r"'([^']*)'", m.group("keys"))]
         if not keys:
             raise DdlError("ALTER TABLE ... RESET with no keys")
-        fmt, path, schema_ddl, opts = _TABLES[name]
+        fmt, path, schema_ddl, opts = st.tables[name]
         # validate EVERY key before touching the catalog entry — popping
         # from the live dict as we scan half-applies a failed statement
         # (r6 review finding #7); 'partitioned-by' is physical layout
@@ -611,14 +617,14 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
                 raise DdlError(f"cannot RESET required option {k!r}")
         dropped = {k.lower() for k in keys}
         opts = {k: v for k, v in opts.items() if k not in dropped}
-        _TABLES[name] = (fmt, path, schema_ddl, opts)
+        st.tables[name] = (fmt, path, schema_ddl, opts)
         refresh_table_view(spark, name)
         return _ok(spark)
 
     m = _ADD_RE.match(sql)
     if m:
         name = m.group("name")
-        spec = _fs_spec(name)
+        spec = _fs_spec(spark, name)
         if spec is None:
             return None
         fmt, _path, schema_ddl, _opts = spec
@@ -631,7 +637,7 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
             cols = _insert_at(cols, (c, t), pos)
             names.add(c)
         if fmt in _BY_NAME_FORMATS:
-            _set_schema(name, cols)  # old files read the new column as NULL
+            _set_schema(spark, name, cols)  # old files read it as NULL
         else:
             # positional format: rewrite so files match the new layout
             old = _schema_ddl_cols(schema_ddl)
@@ -641,14 +647,14 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
                 for c, t in cols
             ]
             _cow_rewrite(spark, name, exprs)
-            _set_schema(name, cols)
+            _set_schema(spark, name, cols)
         refresh_table_view(spark, name)
         return _ok(spark)
 
     m = _DROP_RE.match(sql)
     if m:
         name = m.group("name")
-        spec = _fs_spec(name)
+        spec = _fs_spec(spark, name)
         if spec is None:
             return None
         fmt, _path, schema_ddl, _opts = spec
@@ -665,39 +671,39 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
         kept = [(c, t) for c, t in cols if c not in drops]
         if not kept:
             raise DdlError("cannot DROP every column")
-        if WATERMARKS.get(name, (None,))[0] in drops:
+        if st.watermarks.get(name, (None,))[0] in drops:
             raise DdlError(
                 "cannot DROP the watermark column (reference: rowtime "
                 "attribute columns cannot be dropped)"
             )
         from apache_flink_spark.ddl import part_cols
 
-        hit = [c for c in drops if c in part_cols(name)]
+        hit = [c for c in drops if c in part_cols(spark, name)]
         if hit:
             raise DdlError(
                 f"cannot DROP partition column(s) {hit} — the hive "
                 "directory layout is keyed by them"
             )
         if fmt in _BY_NAME_FORMATS:
-            _set_schema(name, kept)  # reader simply stops projecting it
+            _set_schema(spark, name, kept)  # reader simply stops projecting it
         else:
             _cow_rewrite(spark, name, [F.col(c) for c, _t in kept])
-            _set_schema(name, kept)
+            _set_schema(spark, name, kept)
         refresh_table_view(spark, name)
         return _ok(spark)
 
     m = _MODIFY_RE.match(sql)
     if m:
         name = m.group("name")
-        if _fs_spec(name) is None:
+        if _fs_spec(spark, name) is None:
             return None
         mods = _parse_typed_cols(m.group("cols") or m.group("col"))
-        cols = _schema_ddl_cols(_TABLES[name][2])
+        cols = _schema_ddl_cols(st.tables[name][2])
         names = [c for c, _t in cols]
         by_name = dict(cols)
         from apache_flink_spark.ddl import part_cols
 
-        pkeys = set(part_cols(name))
+        pkeys = set(part_cols(spark, name))
         for c, t, pos in mods:
             if c not in by_name:
                 raise DdlError(f"column {c!r} not in table {name!r}")
@@ -720,14 +726,14 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
             spark, name,
             [F.col(c).cast(by_name[c]).alias(c) for c in names],
         )
-        _set_schema(name, [(c, by_name[c]) for c in names])
+        _set_schema(spark, name, [(c, by_name[c]) for c in names])
         refresh_table_view(spark, name)
         return _ok(spark)
 
     m = _COMPACT_RE.match(sql)
     if m:
         name = m.group("name")
-        spec = _fs_spec(name)
+        spec = _fs_spec(spark, name)
         if spec is None:
             return None
         fmt, path, _schema, _opts = spec
@@ -747,7 +753,7 @@ def try_handle_alter_statement(spark: SparkSession, sql: str):
     am = re.match(
         r"^\s*ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)", sql, re.I
     )
-    if am and am.group(1) in _TABLES:
+    if am and am.group(1) in st.tables:
         raise DdlError(
             f"unsupported ALTER TABLE clause: {sql.strip()[:80]!r} — "
             "supported: RENAME TO, RENAME col TO, SET, RESET, ADD, DROP, "

@@ -27,17 +27,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Cache of (session id, sf_dir) -> {name: DataFrame} so repeated queries()
-# calls don't re-infer parquet schemas.
-_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-# Which sf_dir's temp views are currently registered in each session. Temp
-# views are session-global, so switching sf_dir must re-point them — a cache
-# hit alone must NOT skip registration or spark.sql() would silently read the
-# previously active scale factor's data.
-_ACTIVE_VIEWS: dict[int, str] = {}
-
-
 # Columns stored as TIMESTAMP(NANOS) in parquet. How Spark reads them depends
 # on session build-time conf:
 #   - builder sessions with spark.sql.legacy.parquet.nanosAsLong=true read
@@ -75,7 +64,7 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Dat
     columns (the reference needs its vectorized ParquetVectorizedInputFormat
     for the same effect; here it is built-in).
     """
-    from apache_flink_spark.session import configure_session
+    from apache_flink_spark.session import configure_session, session_state
 
     # The caller's session may be vanilla (driver harness, user code); the
     # fixtures' TIMESTAMP(NANOS) column is unreadable without nanosAsLong and
@@ -83,14 +72,15 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Dat
     # reads never depend on get_spark() having built the session.
     configure_session(spark)
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    key = (id(spark), sf_dir)
-    if key in _CACHE:
-        if _ACTIVE_VIEWS.get(id(spark)) != sf_dir:
-            for name, df in _CACHE[key].items():
+    st = session_state(spark)
+    out = st.fixtures.get(sf_dir)
+    if out is not None:
+        if st.fixtures_dir != sf_dir:
+            for name, df in out.items():
                 df.createOrReplaceTempView(name)
-            _ACTIVE_VIEWS[id(spark)] = sf_dir
-        return _CACHE[key]
-    out: dict[str, DataFrame] = {}
+            st.fixtures_dir = sf_dir
+        return out
+    out = {}
     for name in TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
@@ -99,8 +89,8 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, Dat
         df = _normalize_nanos(df)
         df.createOrReplaceTempView(name)
         out[name] = df
-    _CACHE[key] = out
-    _ACTIVE_VIEWS[id(spark)] = sf_dir
+    st.fixtures[sf_dir] = out
+    st.fixtures_dir = sf_dir
     return out
 
 

@@ -45,21 +45,14 @@ import re
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["try_handle_catalog_statement", "CatalogSqlError", "_MODULES"]
+from apache_flink_spark.session import session_state
+
+__all__ = ["try_handle_catalog_statement", "CatalogSqlError"]
 
 
 class CatalogSqlError(ValueError):
     pass
 
-
-#: ModuleManager state: ordered {name: used_flag}; the reference loads
-#: CoreModule by default (ModuleManager.java ctor)
-_MODULES: dict[str, bool] = {"core": True}
-
-#: original CREATE VIEW statement text per view name — the reference
-#: keeps view DDL in CatalogView; Spark's temp views don't, so the
-#: facade records the statements it routes (SHOW CREATE VIEW replays)
-_VIEW_DDL: dict[str, str] = {}
 
 _CREATE_VIEW_RE = re.compile(
     r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?VIEW\s+"
@@ -91,15 +84,6 @@ _ALTER_VIEW_PROPS_RE = re.compile(
     re.I | re.S,
 )
 
-#: view name -> properties set via ALTER VIEW ... SET (the reference keeps
-#: these in CatalogView options; Spark temp views have no options slot)
-_VIEW_PROPS: dict[str, dict] = {}
-
-#: SqlRemoveJar — jars "removed" from the session's resource list. The JVM
-#: cannot unload a loaded jar (true in the reference's cluster too once a
-#: job shipped it); REMOVE JAR removes it from the visible SHOW JARS list,
-#: exactly the reference SQL-client semantics of editing the resource set.
-_REMOVED_JARS: set[str] = set()
 _REMOVE_JAR_RE = re.compile(
     r"^\s*REMOVE\s+JAR\s+'(?P<path>[^']+)'\s*$", re.I
 )
@@ -110,17 +94,18 @@ _DESC_FUNCTION_RE = re.compile(
 )
 
 
-def record_view_statement(sql: str) -> None:
+def record_view_statement(spark: SparkSession, sql: str) -> None:
     """Called by the facade once Spark ran a CREATE/DROP VIEW, so SHOW
     CREATE VIEW can replay the definition (SqlShowCreateView /
     ShowCreateUtil.buildShowCreateViewRow)."""
+    view_ddl = session_state(spark).view_ddl
     m = _CREATE_VIEW_RE.match(sql)
     if m:
-        _VIEW_DDL[m.group("name").lower()] = sql.strip()
+        view_ddl[m.group("name").lower()] = sql.strip()
         return
     m = _DROP_VIEW_RE.match(sql)
     if m:
-        _VIEW_DDL.pop(m.group("name").lower(), None)
+        view_ddl.pop(m.group("name").lower(), None)
 
 
 _SHOW_DBS_RE = re.compile(r"^\s*SHOW\s+DATABASES\s*$", re.I)
@@ -189,11 +174,12 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
     handled = try_handle_catalog_ddl(spark, sql)
     if handled is not None:
         return handled
+    st = session_state(spark)
 
     m = _SHOW_CREATE_VIEW_RE.match(sql)
     if m:
         name = m.group("name").lower()
-        if name not in _VIEW_DDL:
+        if name not in st.view_ddl:
             raise CatalogSqlError(
                 f"no recorded DDL for view {m.group('name')!r} — only "
                 "views created via SQL through this session's facade "
@@ -201,7 +187,7 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
                 "have no SQL to show)"
             )
         return spark.createDataFrame(
-            [(_VIEW_DDL[name],)], "result string"
+            [(st.view_ddl[name],)], "result string"
         )
 
     if _SHOW_DBS_RE.match(sql):
@@ -283,7 +269,7 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
 
     if _SHOW_JARS_RE.match(sql):
         rows = [r[0] for r in spark.sql("LIST JARS").collect()]
-        rows = [r for r in rows if r not in _REMOVED_JARS]
+        rows = [r for r in rows if r not in st.removed_jars]
         return _one_col(spark, "jars", rows)
 
     m = _REMOVE_JAR_RE.match(sql)
@@ -299,13 +285,13 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
             j for j in listed
             if j == path or j.rsplit("/", 1)[-1] == base
         ]
-        hits = [j for j in hits if j not in _REMOVED_JARS]
+        hits = [j for j in hits if j not in st.removed_jars]
         if not hits:
             raise CatalogSqlError(
                 f"jar {path!r} is not in the session resource list "
                 "(SHOW JARS lists current ones)"
             )
-        _REMOVED_JARS.update(hits)
+        st.removed_jars.update(hits)
         return spark.sql("SELECT 'OK' AS result")
 
     m = _ALTER_VIEW_RENAME_RE.match(sql)
@@ -328,14 +314,14 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
             return None  # Spark handles catalog views natively
         spark.table(name).createOrReplaceTempView(to)
         spark.catalog.dropTempView(name)
-        if name.lower() in _VIEW_DDL:
+        if name.lower() in st.view_ddl:
             # keep SHOW CREATE VIEW working under the new name
-            ddl = _VIEW_DDL.pop(name.lower())
-            _VIEW_DDL[to.lower()] = re.sub(
+            ddl = st.view_ddl.pop(name.lower())
+            st.view_ddl[to.lower()] = re.sub(
                 rf"\b{re.escape(name)}\b", to, ddl, count=1
             )
-        if name.lower() in _VIEW_PROPS:
-            _VIEW_PROPS[to.lower()] = _VIEW_PROPS.pop(name.lower())
+        if name.lower() in st.view_props:
+            st.view_props[to.lower()] = st.view_props.pop(name.lower())
         return spark.sql("SELECT 'OK' AS result")
 
     m = _ALTER_VIEW_AS_RE.match(sql)
@@ -348,7 +334,7 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
         if not tbl.isTemporary:
             return None  # Spark's native ALTER VIEW ... AS
         spark.sql(m.group("query")).createOrReplaceTempView(name)
-        _VIEW_DDL[name.lower()] = (
+        st.view_ddl[name.lower()] = (
             f"CREATE TEMPORARY VIEW {name} AS {m.group('query').strip()}"
         )
         return spark.sql("SELECT 'OK' AS result")
@@ -370,7 +356,7 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
             kv = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
             spark.sql(f"ALTER VIEW {name} SET TBLPROPERTIES ({kv})")
             return spark.sql("SELECT 'OK' AS result")
-        _VIEW_PROPS.setdefault(name.lower(), {}).update(props)
+        st.view_props.setdefault(name.lower(), {}).update(props)
         return spark.sql("SELECT 'OK' AS result")
 
     m = _DESC_FUNCTION_RE.match(sql)
@@ -383,18 +369,18 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
     if m:
         if m.group("full"):
             return spark.createDataFrame(
-                [(n, u) for n, u in _MODULES.items()],
+                [(n, u) for n, u in st.modules.items()],
                 "`module name` string, used boolean",
             )
         return spark.createDataFrame(
-            [(n,) for n, u in _MODULES.items() if u],
+            [(n,) for n, u in st.modules.items() if u],
             "`module name` string",
         )
 
     m = _LOAD_MODULE_RE.match(sql)
     if m:
         name = m.group("name").lower()
-        if name in _MODULES:
+        if name in st.modules:
             raise CatalogSqlError(
                 f"module {name!r} is already loaded (reference "
                 "ModuleManager.loadModule rejects duplicates)"
@@ -405,15 +391,15 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
                 "function lives in the 'core' module here; loading other "
                 "modules would silently resolve to the same function set"
             )
-        _MODULES[name] = True
+        st.modules[name] = True
         return spark.sql("SELECT 'OK' AS result")
 
     m = _UNLOAD_MODULE_RE.match(sql)
     if m:
         name = m.group("name").lower()
-        if name not in _MODULES:
+        if name not in st.modules:
             raise CatalogSqlError(f"module {name!r} is not loaded")
-        del _MODULES[name]
+        del st.modules[name]
         return spark.sql("SELECT 'OK' AS result")
 
     m = _USE_MODULES_RE.match(sql)
@@ -428,21 +414,20 @@ def try_handle_catalog_statement(spark: SparkSession, sql: str):
                 "USE MODULES needs at least one module name — a bare "
                 "separator would silently un-use every loaded module"
             )
-        missing = [n for n in names if n not in _MODULES]
+        missing = [n for n in names if n not in st.modules]
         if missing:
             raise CatalogSqlError(
                 f"USE MODULES: {missing} not loaded — loaded: "
-                f"{list(_MODULES)}"
+                f"{list(st.modules)}"
             )
         if len(set(names)) != len(names):
             raise CatalogSqlError("USE MODULES: duplicate module name")
         # used modules take the GIVEN order; unlisted loaded ones unuse
         reordered = {n: True for n in names}
-        for n, _u in _MODULES.items():
+        for n, _u in st.modules.items():
             if n not in reordered:
                 reordered[n] = False
-        _MODULES.clear()
-        _MODULES.update(reordered)
+        st.modules = reordered
         return spark.sql("SELECT 'OK' AS result")
 
     m = _ANALYZE_RE.match(sql)
@@ -480,9 +465,7 @@ def _describe_function(spark, name: str, extended: bool):
         ("is system function", str(is_system).lower()),
         ("is temporary", str(bool(f.isTemporary)).lower()),
     ]
-    from apache_flink_spark.function_ddl import _FUNCTIONS
-
-    ddl_entry = _FUNCTIONS.get(name.lower())
+    ddl_entry = session_state(spark).functions.get(name.lower())
     if not is_system:
         rows.append(("class name", ddl_entry[0] if ddl_entry
                      else (f.className or "")))

@@ -18,6 +18,8 @@ import json
 import os
 from typing import Optional
 
+from apache_flink_spark.session import session_state
+
 __all__ = ["save_catalog_store", "load_catalog_store", "CatalogStoreError"]
 
 FORMAT_VERSION = 1
@@ -30,10 +32,9 @@ class CatalogStoreError(ValueError):
 def save_catalog_store(tenv, path: str) -> int:
     """Write every DDL table + model descriptor to ``path`` (JSON).
     Returns the number of objects saved."""
-    from apache_flink_spark.ddl import _TABLES, WATERMARKS
-
+    st = session_state(tenv.spark)
     tables = {}
-    for name, spec in _TABLES.items():
+    for name, spec in st.tables.items():
         if spec[0] == "datagen":
             _, opts, cols = spec
             tables[name] = {
@@ -50,8 +51,8 @@ def save_catalog_store(tenv, path: str) -> int:
                 "schema": schema_ddl,
                 "options": dict(opts),
             }
-        if name in WATERMARKS:
-            tables[name]["watermark"] = list(WATERMARKS[name])
+        if name in st.watermarks:
+            tables[name]["watermark"] = list(st.watermarks[name])
 
     models = []
     for mname in tenv.model_catalog.list():
@@ -70,8 +71,6 @@ def save_catalog_store(tenv, path: str) -> int:
     # r7: secondary catalog DESCRIPTORS (the reference FileCatalogStore's
     # actual payload — CatalogDescriptor configurations) + the
     # catalog.db.table -> view mapping that re-binds their tables.
-    from apache_flink_spark.catalogs import _CAT_TABLES, _CATALOGS
-
     catalogs = {
         cname: {
             "type": c.get("type", "generic_in_memory"),
@@ -84,10 +83,10 @@ def save_catalog_store(tenv, path: str) -> int:
             },
             "current_db": c["current_db"],
         }
-        for cname, c in _CATALOGS.items()
+        for cname, c in st.catalogs.items()
     }
     cat_tables = [
-        [cat, db, tbl, view] for (cat, db, tbl), view in _CAT_TABLES.items()
+        [cat, db, tbl, view] for (cat, db, tbl), view in st.cat_tables.items()
     ]
 
     # r7: DISTRIBUTED BY tables (native bucketed catalog tables) — their
@@ -140,12 +139,7 @@ def load_catalog_store(tenv, path: str) -> int:
     """Replay a catalog store into ``tenv``'s session: re-register every
     table view and model. Returns the number of objects restored. Loud
     on version mismatch or a table whose path no longer exists."""
-    from apache_flink_spark.ddl import (
-        _TABLES,
-        WATERMARKS,
-        _datagen_df,
-        fs_reader,
-    )
+    from apache_flink_spark.ddl import _datagen_df, fs_reader
     from apache_flink_spark.models import CatalogModel
 
     try:
@@ -162,11 +156,12 @@ def load_catalog_store(tenv, path: str) -> int:
             f"{FORMAT_VERSION} — refusing a silent misread"
         )
 
+    st = session_state(tenv.spark)
     n = 0
     for name, t in doc.get("tables", {}).items():
         if t["connector"] == "datagen":
             cols = [tuple(c) for c in t["columns"]]
-            _TABLES[name] = ("datagen", dict(t["options"]), cols)
+            st.tables[name] = ("datagen", dict(t["options"]), cols)
             _datagen_df(tenv.spark, cols, t["options"]).createOrReplaceTempView(
                 name
             )
@@ -176,13 +171,13 @@ def load_catalog_store(tenv, path: str) -> int:
                     f"table {name!r}: declared path {t['path']!r} no "
                     "longer exists"
                 )
-            _TABLES[name] = (
+            st.tables[name] = (
                 t["format"], t["path"], t["schema"], dict(t["options"])
             )
             reader, tpath = fs_reader(tenv.spark, name)
             reader.load(tpath).createOrReplaceTempView(name)
         if "watermark" in t:
-            WATERMARKS[name] = tuple(t["watermark"])
+            st.watermarks[name] = tuple(t["watermark"])
         n += 1
     for m in doc.get("models", []):
         tenv.model_catalog.create(
@@ -197,10 +192,8 @@ def load_catalog_store(tenv, path: str) -> int:
             if_not_exists=True,
         )
         n += 1
-    from apache_flink_spark.catalogs import _CAT_TABLES, _CATALOGS
-
     for cname, c in doc.get("catalogs", {}).items():
-        _CATALOGS[cname] = {
+        st.catalogs[cname] = {
             "type": c.get("type", "generic_in_memory"),
             "comment": c.get("comment"),
             "properties": dict(c.get("properties", {})),
@@ -215,7 +208,7 @@ def load_catalog_store(tenv, path: str) -> int:
     for cat, db, tbl, view in doc.get("catalog_tables", []):
         # the view itself was re-registered above via its mangled DDL
         # table entry; this restores the catalog-path binding
-        _CAT_TABLES[(cat, db, tbl)] = view
+        st.cat_tables[(cat, db, tbl)] = view
     from apache_flink_spark.ddl import _DISTRIBUTED
 
     for name, d in doc.get("distributed_tables", {}).items():

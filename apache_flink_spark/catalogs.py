@@ -35,6 +35,7 @@ import re
 from pyspark.sql import SparkSession
 
 from apache_flink_spark.ddl import _split_options
+from apache_flink_spark.session import SessionState, session_state
 from apache_flink_spark.statement import in_literal, literal_spans
 
 __all__ = [
@@ -49,16 +50,6 @@ class CatalogError(ValueError):
     pass
 
 
-#: secondary catalogs: name -> {"comment", "properties", "dbs":
-#: {db: {"comment", "properties"}}, "current_db"}
-_CATALOGS: dict[str, dict] = {}
-
-#: (catalog, db, table) -> mangled temp-view name
-_CAT_TABLES: dict[tuple[str, str, str], str] = {}
-
-#: current catalog: None = the built-in Spark session catalog
-_CURRENT: list[str | None] = [None]
-
 _BUILTIN = "spark_catalog"
 #: the reference's built-in names, accepted as aliases of the Spark ones
 _REF_BUILTIN = "default_catalog"
@@ -66,28 +57,29 @@ _REF_BUILTIN_DB = "default_database"
 
 
 def current_catalog(spark: SparkSession) -> str:
-    return _CURRENT[0] or spark.catalog.currentCatalog()
+    st = session_state(spark)
+    return st.current_catalog or spark.catalog.currentCatalog()
 
 
 def _mangle(cat: str, db: str, tbl: str) -> str:
     return f"__cat_{cat}__{db}__{tbl}"
 
 
-def _get_cat(name: str) -> dict:
-    if name not in _CATALOGS:
+def _get_cat(st: SessionState, name: str) -> dict:
+    if name not in st.catalogs:
         raise CatalogError(
             f"catalog {name!r} does not exist (SHOW CATALOGS lists "
             "registered ones)"
         )
-    return _CATALOGS[name]
+    return st.catalogs[name]
 
 
-def _is_hive(name: str | None) -> bool:
-    return name in _CATALOGS and _CATALOGS[name].get("type") == "hive"
+def _is_hive(st: SessionState, name: str | None) -> bool:
+    return name in st.catalogs and st.catalogs[name].get("type") == "hive"
 
 
-def _any_hive() -> bool:
-    return any(c.get("type") == "hive" for c in _CATALOGS.values())
+def _any_hive(st: SessionState) -> bool:
+    return any(c.get("type") == "hive" for c in st.catalogs.values())
 
 
 def _sync_hive_dbs(spark: SparkSession, c: dict) -> None:
@@ -100,13 +92,6 @@ def _sync_hive_dbs(spark: SparkSession, c: dict) -> None:
                                  "properties": {}})
         for d in spark.catalog.listDatabases()
     }
-
-
-def reset_for_tests() -> None:
-    _CATALOGS.clear()
-    _CAT_TABLES.clear()
-    _PENDING.clear()
-    _CURRENT[0] = None
 
 
 # ---------------------------------------------------------------- grammar
@@ -261,12 +246,6 @@ def _closes_derived_table(sql: str, close_idx: int, spans) -> bool:
     return False
 
 
-#: registry keys added by a CREATE rewrite whose DDL has not yet been
-#: verified to have materialized the view — checked (and cleared) on the
-#: next statement, so a FAILED create cannot leave a phantom table
-_PENDING: list[tuple[str, str, str]] = []
-
-
 def _gc_phantom_entries(spark: SparkSession) -> None:
     """Drop registry entries whose backing view never materialized — a
     CREATE TABLE registers its mapping before the DDL executes (the text
@@ -274,28 +253,30 @@ def _gc_phantom_entries(spark: SparkSession) -> None:
     leave a phantom table in SHOW TABLES and the rewrite (r7 review).
     Only entries still PENDING verification are checked — one catalog
     lookup per recent CREATE, not per registered table."""
-    while _PENDING:
-        key = _PENDING.pop()
-        view = _CAT_TABLES.get(key)
+    st = session_state(spark)
+    while st.pending:
+        key = st.pending.pop()
+        view = st.cat_tables.get(key)
         if view is not None and not spark.catalog.tableExists(view):
-            del _CAT_TABLES[key]
+            del st.cat_tables[key]
 
 
 def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
     """Rewrite catalog-qualified (and, when a secondary catalog is
     current, unqualified) table references onto the mangled temp views.
     A pass-through when no secondary catalog exists."""
-    if _PENDING:
+    st = session_state(spark)
+    if st.pending:
         _gc_phantom_entries(spark)
     # CREATE TABLE targeting a secondary catalog: register + rename first
     # so the DDL route sees the mangled name.
     cm = _CREATE_TABLE_NAME_RE.match(sql)
     if cm and "." not in (cm.group("name") or ""):
         cat, db = cm.group("cat"), cm.group("db")
-        if cat is None and _CURRENT[0] is not None:
-            cat = _CURRENT[0]
-            db = _CATALOGS[cat]["current_db"]
-        if cat is not None and _is_hive(cat):
+        if cat is None and st.current_catalog is not None:
+            cat = st.current_catalog
+            db = st.catalogs[cat]["current_db"]
+        if cat is not None and _is_hive(st, cat):
             # hive catalog: the table lands in the metastore natively —
             # qualify with the database, never mangle (with no explicit
             # catalog the session's current db already points there)
@@ -305,17 +286,17 @@ def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
                     + f"{db}.{cm.group('name')}"
                     + cm.group("rest")
                 )
-        elif cat is not None and cat in _CATALOGS:
-            c = _CATALOGS[cat]
+        elif cat is not None and cat in st.catalogs:
+            c = st.catalogs[cat]
             if db not in c["dbs"]:
                 raise CatalogError(
                     f"database {db!r} does not exist in catalog {cat!r}"
                 )
             view = _mangle(cat, db, cm.group("name"))
             key = (cat, db, cm.group("name"))
-            _CAT_TABLES[key] = view
-            if key not in _PENDING:
-                _PENDING.append(key)
+            st.cat_tables[key] = view
+            if key not in st.pending:
+                st.pending.append(key)
             sql = cm.group("head") + view + cm.group("rest")
     if _REF_BUILTIN in sql:
         # the reference's built-in naming maps to plain Spark resolution
@@ -326,7 +307,7 @@ def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
             else m.group(1),
             sql,
         )
-    if not _CAT_TABLES and _CURRENT[0] is None and not _any_hive():
+    if not st.cat_tables and st.current_catalog is None and not _any_hive(st):
         return sql
     spans = literal_spans(sql)
 
@@ -334,21 +315,21 @@ def rewrite_catalog_identifiers(spark: SparkSession, sql: str) -> str:
         if in_literal(spans, m.start()):
             return m.group(0)
         key = (m.group(1), m.group(2), m.group(3))
-        if _is_hive(key[0]):
+        if _is_hive(st, key[0]):
             # hive catalog IS the session catalog under another name
             return f"{_BUILTIN}.{key[1]}.{key[2]}"
-        return _CAT_TABLES.get(key, m.group(0))
+        return st.cat_tables.get(key, m.group(0))
 
     out = re.sub(
         r"\b(\w+)\.(\w+)\.(\w+)\b",
         _sub_qualified,
         sql,
     )
-    if _CURRENT[0] is not None:
-        cat = _CURRENT[0]
-        db = _CATALOGS[cat]["current_db"]
+    if st.current_catalog is not None:
+        cat = st.current_catalog
+        db = st.catalogs[cat]["current_db"]
         local = {
-            t: v for (c, d, t), v in _CAT_TABLES.items()
+            t: v for (c, d, t), v in st.cat_tables.items()
             if c == cat and d == db
         }
         if local:
@@ -417,10 +398,11 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
     """Route one catalog/database DDL statement; returns a DataFrame or
     None to fall through (built-in catalog behavior stays in
     catalog_sql.py / Spark)."""
+    st = session_state(spark)
     m = _CREATE_CATALOG_RE.match(sql)
     if m:
         name = m.group("name")
-        if name in _CATALOGS or name in (_BUILTIN, _REF_BUILTIN):
+        if name in st.catalogs or name in (_BUILTIN, _REF_BUILTIN):
             if m.group("ine"):
                 return _ok(spark)
             raise CatalogError(f"catalog {name!r} already exists")
@@ -450,7 +432,7 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
                     "apache_flink_spark.io.hive_session(warehouse_dir)"
                 )
             default_db = opts.get("default-database", "default")
-            _CATALOGS[name] = {
+            st.catalogs[name] = {
                 "type": "hive",
                 "comment": m.group("comment"),
                 "properties": {
@@ -459,16 +441,16 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
                 "dbs": {},
                 "current_db": default_db,
             }
-            _sync_hive_dbs(spark, _CATALOGS[name])
-            if default_db not in _CATALOGS[name]["dbs"]:
-                del _CATALOGS[name]
+            _sync_hive_dbs(spark, st.catalogs[name])
+            if default_db not in st.catalogs[name]["dbs"]:
+                del st.catalogs[name]
                 raise CatalogError(
                     f"hive catalog default-database {default_db!r} does "
                     "not exist in the metastore"
                 )
             return _ok(spark)
         default_db = opts.get("default-database", "default")
-        _CATALOGS[name] = {
+        st.catalogs[name] = {
             "type": "generic_in_memory",
             "comment": m.group("comment"),
             "properties": {
@@ -484,23 +466,23 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
         name = m.group("name")
         if name in (_BUILTIN, _REF_BUILTIN):
             raise CatalogError(f"cannot drop the built-in catalog {name!r}")
-        if name not in _CATALOGS:
+        if name not in st.catalogs:
             if m.group("ie"):
                 return _ok(spark)
             raise CatalogError(f"catalog {name!r} does not exist")
-        if _CURRENT[0] == name:
+        if st.current_catalog == name:
             raise CatalogError(
                 f"cannot drop the current catalog {name!r} — USE CATALOG "
                 "another one first (reference CatalogManager.unregisterCatalog)"
             )
-        for key in [k for k in _CAT_TABLES if k[0] == name]:
-            spark.catalog.dropTempView(_CAT_TABLES.pop(key))
-        del _CATALOGS[name]
+        for key in [k for k in st.cat_tables if k[0] == name]:
+            spark.catalog.dropTempView(st.cat_tables.pop(key))
+        del st.catalogs[name]
         return _ok(spark)
 
     m = _ALTER_CAT_SET_RE.match(sql)
     if m:
-        c = _get_cat(m.group("name"))
+        c = _get_cat(st, m.group("name"))
         opts = _split_options(m.group("opts"))
         if "type" in opts:
             raise CatalogError(
@@ -512,7 +494,7 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
 
     m = _ALTER_CAT_RESET_RE.match(sql)
     if m:
-        c = _get_cat(m.group("name"))
+        c = _get_cat(st, m.group("name"))
         keys = [
             k.strip().strip("'").lower()
             for k in m.group("keys").split(",")
@@ -526,7 +508,7 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
 
     m = _ALTER_CAT_COMMENT_RE.match(sql)
     if m:
-        _get_cat(m.group("name"))["comment"] = m.group("comment")
+        _get_cat(st, m.group("name"))["comment"] = m.group("comment")
         return _ok(spark)
 
     m = _DESC_CATALOG_RE.match(sql)
@@ -538,7 +520,7 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
             rows = [("name", name), ("type", "generic_in_memory"),
                     ("comment", None)]
             return _info(spark, rows)
-        c = _get_cat(name)
+        c = _get_cat(st, name)
         rows = [
             ("name", name),
             ("type", c.get("type", "generic_in_memory")),
@@ -555,29 +537,29 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
     if m:
         name = m.group("name")
         if name in (_BUILTIN, _REF_BUILTIN):
-            _CURRENT[0] = None
+            st.current_catalog = None
             return _ok(spark)
-        if name not in _CATALOGS:
+        if name not in st.catalogs:
             # a genuine Spark catalog plugin (spark.sql.catalog.<name>)
             # keeps its pre-facade behavior (r7 review): pass through and
             # let Spark raise for truly unknown names.
             spark.catalog.setCurrentCatalog(name)
-            _CURRENT[0] = None
+            st.current_catalog = None
             return _ok(spark)
-        _CURRENT[0] = name
-        if _is_hive(name):
+        st.current_catalog = name
+        if _is_hive(st, name):
             # hive catalog IS the session catalog: unqualified names
             # resolve natively once the session database is switched
-            _sync_hive_dbs(spark, _CATALOGS[name])
+            _sync_hive_dbs(spark, st.catalogs[name])
             spark.catalog.setCurrentDatabase(
-                _CATALOGS[name]["current_db"]
+                st.catalogs[name]["current_db"]
             )
         return _ok(spark)
 
     m = _SHOW_CATALOGS_RE.match(sql)
     if m:
         rows = [r[0] for r in spark.sql("SHOW CATALOGS").collect()]
-        rows += list(_CATALOGS)
+        rows += list(st.catalogs)
         return spark.createDataFrame(
             [(v,) for v in sorted(rows) if _like(v, m)],
             "`catalog name` string",
@@ -590,7 +572,7 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
         if name in (_BUILTIN, _REF_BUILTIN):
             ddl = f"CREATE CATALOG `{name}` WITH (\n  'type' = 'generic_in_memory'\n)"
             return spark.createDataFrame([(ddl,)], "result string")
-        c = _get_cat(name)
+        c = _get_cat(st, name)
         opts = {
             "type": c.get("type", "generic_in_memory"), **c["properties"]
         }
@@ -610,16 +592,16 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
 
     m = _CREATE_DB_RE.match(sql)
     if m:
-        cat = m.group("cat") or _CURRENT[0]
-        if cat is None or cat not in _CATALOGS:
+        cat = m.group("cat") or st.current_catalog
+        if cat is None or cat not in st.catalogs:
             return None  # built-in catalog: Spark handles CREATE DATABASE
-        if _is_hive(cat):
+        if _is_hive(st, cat):
             # hive catalog: the metastore owns databases — delegate
             ine = "IF NOT EXISTS " if m.group("ine") else ""
             spark.sql(f"CREATE DATABASE {ine}{m.group('name')}")
-            _sync_hive_dbs(spark, _CATALOGS[cat])
+            _sync_hive_dbs(spark, st.catalogs[cat])
             return _ok(spark)
-        dbs = _CATALOGS[cat]["dbs"]
+        dbs = st.catalogs[cat]["dbs"]
         name = m.group("name")
         if name in dbs:
             if m.group("ine"):
@@ -635,26 +617,26 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
 
     m = _DROP_DB_RE.match(sql)
     if m:
-        cat = m.group("cat") or _CURRENT[0]
-        if cat is None or cat not in _CATALOGS:
+        cat = m.group("cat") or st.current_catalog
+        if cat is None or cat not in st.catalogs:
             return None
-        if _is_hive(cat):
+        if _is_hive(st, cat):
             ie = "IF EXISTS " if m.group("ie") else ""
             mode = (m.group("mode") or "").upper()
             spark.sql(
                 f"DROP DATABASE {ie}{m.group('name')}"
                 + (" CASCADE" if mode == "CASCADE" else "")
             )
-            _sync_hive_dbs(spark, _CATALOGS[cat])
+            _sync_hive_dbs(spark, st.catalogs[cat])
             return _ok(spark)
-        c, name = _CATALOGS[cat], m.group("name")
+        c, name = st.catalogs[cat], m.group("name")
         if name not in c["dbs"]:
             if m.group("ie"):
                 return _ok(spark)
             raise CatalogError(
                 f"database {name!r} does not exist in catalog {cat!r}"
             )
-        tables = [k for k in _CAT_TABLES if k[0] == cat and k[1] == name]
+        tables = [k for k in st.cat_tables if k[0] == cat and k[1] == name]
         if tables and (m.group("mode") or "RESTRICT").upper() != "CASCADE":
             raise CatalogError(
                 f"database {name!r} is not empty ({len(tables)} tables) — "
@@ -665,15 +647,15 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
                 f"cannot drop the current database {name!r}"
             )
         for key in tables:
-            spark.catalog.dropTempView(_CAT_TABLES.pop(key))
+            spark.catalog.dropTempView(st.cat_tables.pop(key))
         del c["dbs"][name]
         return _ok(spark)
 
     m = _ALTER_DB_RE.match(sql)
     if m:
-        cat = m.group("cat") or _CURRENT[0]
+        cat = m.group("cat") or st.current_catalog
         opts = _split_options(m.group("opts"))
-        if cat is None or cat not in _CATALOGS:
+        if cat is None or cat not in st.catalogs:
             # SqlAlterDatabase on the built-in catalog: Spark's native
             # syntax is SET DBPROPERTIES
             if m.group("cat"):
@@ -683,7 +665,7 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
                 f"ALTER DATABASE {m.group('name')} SET DBPROPERTIES ({props})"
             )
             return _ok(spark)
-        c, name = _CATALOGS[cat], m.group("name")
+        c, name = st.catalogs[cat], m.group("name")
         if name not in c["dbs"]:
             raise CatalogError(
                 f"database {name!r} does not exist in catalog {cat!r}"
@@ -693,9 +675,9 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
 
     m = _DESC_DB_RE.match(sql)
     if m:
-        cat = m.group("cat") or _CURRENT[0]
+        cat = m.group("cat") or st.current_catalog
         name = m.group("name")
-        if cat is None or cat not in _CATALOGS:
+        if cat is None or cat not in st.catalogs:
             # built-in: project Spark's catalog metadata into the
             # reference's info name/info value shape
             try:
@@ -706,7 +688,7 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
             if m.group("ext"):
                 rows.append(("location", db.locationUri))
             return _info(spark, rows)
-        c = _CATALOGS[cat]
+        c = st.catalogs[cat]
         if name not in c["dbs"]:
             raise CatalogError(
                 f"database {name!r} does not exist in catalog {cat!r}"
@@ -721,17 +703,17 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
         return _info(spark, rows)
 
     m = _SHOW_TABLES_RE.match(sql)
-    if m and m.group("cat") and m.group("cat") in _CATALOGS:
+    if m and m.group("cat") and m.group("cat") in st.catalogs:
         # catalog-qualified listing works from ANY current catalog
         # (SqlShowTables' [catalog.]database preposition)
-        if _is_hive(m.group("cat")):
-            _sync_hive_dbs(spark, _CATALOGS[m.group("cat")])
-        if m.group("db") not in _CATALOGS[m.group("cat")]["dbs"]:
+        if _is_hive(st, m.group("cat")):
+            _sync_hive_dbs(spark, st.catalogs[m.group("cat")])
+        if m.group("db") not in st.catalogs[m.group("cat")]["dbs"]:
             raise CatalogError(
                 f"database {m.group('db')!r} does not exist in catalog "
                 f"{m.group('cat')!r}"
             )
-        if _is_hive(m.group("cat")):
+        if _is_hive(st, m.group("cat")):
             names = sorted(
                 tb.name
                 for tb in spark.catalog.listTables(m.group("db"))
@@ -739,7 +721,7 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
             )
         else:
             names = sorted(
-                t for (cc, dd, t) in _CAT_TABLES
+                t for (cc, dd, t) in st.cat_tables
                 if cc == m.group("cat") and dd == m.group("db")
                 and _like(t, m)
             )
@@ -753,17 +735,18 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
         # qualified name arrives here already mangled — resolve either form
         key = None
         name = m.group("name")
-        if _CURRENT[0] is not None and _is_hive(_CURRENT[0]) and not m.group("cat"):
+        if _is_hive(st, st.current_catalog) and not m.group("cat"):
             return None  # hive catalog: Spark-native drop in the set db
         if m.group("cat"):
             ddb = m.group("db")
             key = (m.group("cat"), ddb, name)
-        elif name in set(_CAT_TABLES.values()):
-            key = next(k for k, v in _CAT_TABLES.items() if v == name)
-        elif _CURRENT[0] is not None:
-            key = (_CURRENT[0], _CATALOGS[_CURRENT[0]]["current_db"], name)
-        if key is None or key not in _CAT_TABLES:
-            if key is not None and key[0] in _CATALOGS:
+        elif name in set(st.cat_tables.values()):
+            key = next(k for k, v in st.cat_tables.items() if v == name)
+        elif st.current_catalog is not None:
+            cur = st.current_catalog
+            key = (cur, st.catalogs[cur]["current_db"], name)
+        if key is None or key not in st.cat_tables:
+            if key is not None and key[0] in st.catalogs:
                 if m.group("ie"):
                     return _ok(spark)
                 # current-catalog semantics: an unqualified DROP while a
@@ -775,18 +758,18 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
                     f"{key[0]!r} (database {key[1]!r})"
                 )
             return None  # built-in context: Spark-native table
-        spark.catalog.dropTempView(_CAT_TABLES.pop(key))
+        spark.catalog.dropTempView(st.cat_tables.pop(key))
         return _ok(spark)
 
     m = _SHOW_DBS_RE.match(sql)
     if m:
-        cat2 = m.group("cat") or _CURRENT[0]
+        cat2 = m.group("cat") or st.current_catalog
         if cat2 is not None and cat2 not in (
             _BUILTIN, _REF_BUILTIN,
-        ) and cat2 in _CATALOGS:
-            if _is_hive(cat2):
-                _sync_hive_dbs(spark, _CATALOGS[cat2])
-            names = sorted(_CATALOGS[cat2]["dbs"])
+        ) and cat2 in st.catalogs:
+            if _is_hive(st, cat2):
+                _sync_hive_dbs(spark, st.catalogs[cat2])
+            names = sorted(st.catalogs[cat2]["dbs"])
         elif cat2 is None or cat2 in (_BUILTIN, _REF_BUILTIN):
             if m.group("like") is None and m.group("cat") is None:
                 return None  # plain builtin listing: catalog_sql's route
@@ -801,22 +784,22 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
         )
 
     # the remaining routes only apply while a secondary catalog is current
-    if _CURRENT[0] is None:
+    if st.current_catalog is None:
         return None
-    cat = _CURRENT[0]
-    c = _CATALOGS[cat]
+    cat = st.current_catalog
+    c = st.catalogs[cat]
 
     m = _USE_DB_RE.match(sql)
     if m and m.group("name").upper() != "CATALOG":
         name = m.group("name")
-        if _is_hive(cat):
+        if _is_hive(st, cat):
             _sync_hive_dbs(spark, c)
         if name not in c["dbs"]:
             raise CatalogError(
                 f"database {name!r} does not exist in catalog {cat!r}"
             )
         c["current_db"] = name
-        if _is_hive(cat):
+        if _is_hive(st, cat):
             spark.catalog.setCurrentDatabase(name)
         return _ok(spark)
 
@@ -829,23 +812,23 @@ def try_handle_catalog_ddl(spark: SparkSession, sql: str):
     m = _SHOW_TABLES_RE.match(sql)
     if m:
         scat = m.group("cat") or cat
-        if scat not in _CATALOGS:
+        if scat not in st.catalogs:
             return None  # qualified toward the built-in: Spark/catalog_sql
-        db = m.group("db") or _CATALOGS[scat]["current_db"]
-        if _is_hive(scat):
-            _sync_hive_dbs(spark, _CATALOGS[scat])
-        if db not in _CATALOGS[scat]["dbs"]:
+        db = m.group("db") or st.catalogs[scat]["current_db"]
+        if _is_hive(st, scat):
+            _sync_hive_dbs(spark, st.catalogs[scat])
+        if db not in st.catalogs[scat]["dbs"]:
             raise CatalogError(
                 f"database {db!r} does not exist in catalog {scat!r}"
             )
-        if _is_hive(scat):
+        if _is_hive(st, scat):
             names = sorted(
                 tb.name for tb in spark.catalog.listTables(db)
                 if not tb.isTemporary and _like(tb.name, m)
             )
         else:
             names = sorted(
-                t for (cc, dd, t) in _CAT_TABLES
+                t for (cc, dd, t) in st.cat_tables
                 if cc == scat and dd == db and _like(t, m)
             )
         return spark.createDataFrame(

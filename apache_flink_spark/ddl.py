@@ -10,11 +10,12 @@ USING/OPTIONS, so :func:`execute_flink_ddl` compiles the Flink form:
     the path, registered as a temp view (Catalyst still prunes/pushes into
     the scan — the view is lazy, not materialized);
   - ``connector=datagen`` -> a bounded ``spark.range`` sequence column;
-  - ``WATERMARK FOR c AS c - INTERVAL 'n' u`` -> recorded in
-    :data:`WATERMARKS`; :func:`stream_ddl_table` replays the same DDL table
-    as a file stream with ``withWatermark`` applied — the exact split the
-    reference hides behind one DDL (batch scan vs streaming scan of the
-    same declared table);
+  - ``WATERMARK FOR c AS c - INTERVAL 'n' u`` -> recorded in the
+    session's :attr:`~apache_flink_spark.session.SessionState.watermarks`;
+    :func:`stream_ddl_table` replays the same DDL table as a file stream
+    with ``withWatermark`` applied — the exact split the reference hides
+    behind one DDL (batch scan vs streaming scan of the same declared
+    table);
   - ``PRIMARY KEY ... NOT ENFORCED`` -> accepted and ignored (Spark, like
     the reference, does not enforce it);
   - anything else (kafka, jdbc, hive connectors; computed columns) raises
@@ -33,24 +34,12 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from apache_flink_spark.session import session_state
 from apache_flink_spark.statement import split_top_level
 
 
 class DdlError(ValueError):
     pass
-
-
-#: table name -> (event-time column, delay expression e.g. "5 seconds")
-WATERMARKS: dict[str, tuple[str, str]] = {}
-
-#: table name -> (format, path, schema_ddl, declared_options) for
-#: filesystem tables; ("datagen", options, cols) for datagen sources.
-#: Consumers (INSERT, streaming replay, OPTIONS hints, row-level DML,
-#: compaction) rebuild readers/writers through fs_reader/fs_writer so the
-#: DECLARED connector options (csv delimiter/header, ...) are always
-#: honored — an ad-hoc spark.read at defaults silently re-parses csv
-#: wrong (r6 review finding).
-_TABLES: dict[str, tuple] = {}
 
 
 def _fs_read_opts(opts: dict, fmt: str) -> dict:
@@ -65,7 +54,7 @@ def fs_reader(spark: SparkSession, name: str, overrides: dict | None = None):
     """Batch reader for a filesystem DDL table, honoring its declared
     options merged with per-statement ``overrides`` (OPTIONS hint keys,
     e.g. 'csv.field-delimiter'). Returns (reader, path)."""
-    fmt, path, schema_ddl, opts = _TABLES[name]
+    fmt, path, schema_ddl, opts = session_state(spark).tables[name]
     merged = {**opts, **(overrides or {})}
     fmt = merged.get("format", fmt).lower()
     path = merged.get("path", path)
@@ -75,10 +64,10 @@ def fs_reader(spark: SparkSession, name: str, overrides: dict | None = None):
     return reader, path
 
 
-def fs_writer(df, name: str):
+def fs_writer(spark: SparkSession, df, name: str):
     """Writer for a filesystem DDL table honoring its declared options
     and PARTITIONED BY layout. Returns (writer, fmt, path)."""
-    fmt, path, _schema, opts = _TABLES[name]
+    fmt, path, _schema, opts = session_state(spark).tables[name]
     writer = df.write.format(fmt)
     for k, v in _fs_read_opts(opts, fmt).items():
         writer = writer.option(k, v)
@@ -230,13 +219,13 @@ def _execute_create_distributed(
         "parts": parts,
     }
     if watermark:
-        WATERMARKS[name] = watermark
+        session_state(spark).watermarks[name] = watermark
     return True
 
 
-def part_cols(name: str) -> list[str]:
+def part_cols(spark: SparkSession, name: str) -> list[str]:
     """Declared PARTITIONED BY columns of a DDL table ([] if none)."""
-    spec = _TABLES[name]
+    spec = session_state(spark).tables[name]
     if spec[0] == "datagen":
         return []
     pb = spec[3].get(_PART_KEY, "")
@@ -402,8 +391,9 @@ def _execute_create_like(spark: SparkSession, m) -> bool:
       - GENERATED/METADATA: outside the supported DDL subset
         (no computed/metadata columns exist) — error loudly.
     """
+    st = session_state(spark)
     name, src = m.group("name"), m.group("src")
-    if src not in _TABLES:
+    if src not in st.tables:
         # r6 ADVICE: Spark supports CREATE TABLE ... LIKE on its own catalog
         # tables — when the source is not a DDL-declared table, fall through
         # to spark.sql instead of breaking previously-valid statements.
@@ -435,7 +425,7 @@ def _execute_create_like(spark: SparkSession, m) -> bool:
     new_opts = _split_options(m.group("opts") or "")
     _reject_reserved_opts(new_opts)
 
-    spec = _TABLES[src]
+    spec = st.tables[src]
     if spec[0] == "datagen":
         src_cols = list(spec[2])
         src_opts = dict(spec[1])
@@ -478,8 +468,8 @@ def _execute_create_like(spark: SparkSession, m) -> bool:
         opts[_PART_KEY] = src_pb
 
     watermark = None
-    if strat["WATERMARKS"] != "EXCLUDING" and src in WATERMARKS:
-        watermark = WATERMARKS[src]
+    if strat["WATERMARKS"] != "EXCLUDING" and src in st.watermarks:
+        watermark = st.watermarks[src]
     if extra_wm is not None:
         if watermark is not None and strat["WATERMARKS"] != "OVERWRITING":
             raise DdlError(
@@ -499,12 +489,12 @@ def _execute_create_like(spark: SparkSession, m) -> bool:
             raise DdlError(f"unsupported filesystem format {fmt!r}")
         if not path.startswith(("s3://", "hdfs://")) and not os.path.exists(path):
             os.makedirs(path, exist_ok=True)
-        _TABLES[name] = (fmt, path, schema_ddl, opts)
+        st.tables[name] = (fmt, path, schema_ddl, opts)
         reader, _ = fs_reader(spark, name)
         df = reader.load(path)
     elif connector == "datagen":
         df = _datagen_df(spark, cols, opts)
-        _TABLES[name] = ("datagen", opts, cols)
+        st.tables[name] = ("datagen", opts, cols)
     else:
         raise DdlError(
             f"unsupported connector {connector!r} in LIKE result — "
@@ -512,9 +502,9 @@ def _execute_create_like(spark: SparkSession, m) -> bool:
         )
     df.createOrReplaceTempView(name)
     if watermark:
-        WATERMARKS[name] = watermark
-    elif name in WATERMARKS:
-        del WATERMARKS[name]
+        st.watermarks[name] = watermark
+    elif name in st.watermarks:
+        del st.watermarks[name]
     return True
 
 
@@ -625,6 +615,7 @@ def _execute_create_as(spark: SparkSession, m, replace: str = "") -> bool:
     replaces an existing table or creates a fresh one; "replace" requires
     it to exist. Either way the swap is write-to-staging -> atomic rename,
     so readers never observe a half-replaced table."""
+    st = session_state(spark)
     name = m.group("name")
     opts = _split_options(m.group("opts"))
     _reject_reserved_opts(opts)
@@ -645,12 +636,12 @@ def _execute_create_as(spark: SparkSession, m, replace: str = "") -> bool:
         raise DdlError("filesystem connector requires a 'path' option")
     if fmt not in ("parquet", "csv", "json", "orc"):
         raise DdlError(f"unsupported filesystem format {fmt!r}")
-    if replace == "replace" and name not in _TABLES:
+    if replace == "replace" and name not in st.tables:
         raise DdlError(
             f"REPLACE TABLE {name!r}: table does not exist — use CREATE "
             "OR REPLACE TABLE (reference SqlReplaceTableAs validation)"
         )
-    if name in _TABLES and not replace:
+    if name in st.tables and not replace:
         if re.match(
             r"^\s*CREATE\s+(?:TEMPORARY\s+)?TABLE\s+IF\s+NOT\s+EXISTS",
             m.string, re.I,
@@ -688,10 +679,10 @@ def _execute_create_as(spark: SparkSession, m, replace: str = "") -> bool:
                 f"CTAS PARTITIONED BY columns {bad} are not query columns"
             )
         opts[_PART_KEY] = ",".join(parts)
-    prior = _TABLES.get(name)
-    _TABLES[name] = (fmt, path, schema_ddl, opts)
+    prior = st.tables.get(name)
+    st.tables[name] = (fmt, path, schema_ddl, opts)
     try:
-        writer, _fmt, _p = fs_writer(out, name)
+        writer, _fmt, _p = fs_writer(spark, out, name)
         if replace and os.path.isdir(path) and os.listdir(path):
             # RTAS over live data: staging write -> atomic swap, so a
             # failed query never leaves a half-replaced table
@@ -720,9 +711,9 @@ def _execute_create_as(spark: SparkSession, m, replace: str = "") -> bool:
     except Exception:
         # failed CTAS/RTAS must not leave a wrong catalog entry
         if prior is not None:
-            _TABLES[name] = prior
+            st.tables[name] = prior
         else:
-            _TABLES.pop(name, None)
+            st.tables.pop(name, None)
         raise
     return True
 
@@ -884,6 +875,7 @@ def execute_flink_ddl(spark: SparkSession, sql: str) -> bool:
     CREATE TABLE ... LIKE / CREATE TABLE ... AS SELECT); returns False
     when the statement is not a Flink connector DDL (caller should fall
     through to ``spark.sql``)."""
+    st = session_state(spark)
     am = _CREATE_AS_RE.match(sql)
     if am is not None and "'connector'" in sql.replace(" ", "").replace(
         '"', "'"
@@ -970,12 +962,12 @@ def execute_flink_ddl(spark: SparkSession, sql: str) -> bool:
         # writer produces files).
         if not path.startswith(("s3://", "hdfs://")) and not os.path.exists(path):
             os.makedirs(path, exist_ok=True)
-        _TABLES[name] = (fmt, path, schema_ddl, opts)
+        st.tables[name] = (fmt, path, schema_ddl, opts)
         reader, _ = fs_reader(spark, name)
         df = reader.load(path)
     elif connector == "datagen":
         df = _datagen_df(spark, cols, opts)
-        _TABLES[name] = ("datagen", opts, cols)
+        st.tables[name] = ("datagen", opts, cols)
     else:
         raise DdlError(
             f"unsupported connector {connector!r} — supported: filesystem "
@@ -984,7 +976,7 @@ def execute_flink_ddl(spark: SparkSession, sql: str) -> bool:
 
     df.createOrReplaceTempView(name)
     if watermark:
-        WATERMARKS[name] = watermark
+        st.watermarks[name] = watermark
     return True
 
 
@@ -1008,11 +1000,12 @@ def execute_flink_insert(spark: SparkSession, sql: str):
     re-registered so subsequent reads see the new rows. Returns None when
     the statement is not an insert into a DDL table (caller falls through
     to ``spark.sql``)."""
+    st = session_state(spark)
     m = _INSERT_RE.match(sql)
-    if m is None or m.group("name") not in _TABLES:
+    if m is None or m.group("name") not in st.tables:
         return None
     name = m.group("name")
-    if _TABLES[name][0] == "datagen":
+    if st.tables[name][0] == "datagen":
         raise DdlError(f"datagen table {name!r} is a source — INSERT unsupported")
     # VALUES rows / TABLE refs / CTEs are queries in their own right
     # (reference SqlInsert accepts any query source, incl. VALUES — r7)
@@ -1020,13 +1013,13 @@ def execute_flink_insert(spark: SparkSession, sql: str):
     # POSITIONAL column mapping with casts to the declared schema (the
     # reference's SqlInsert semantics; parquet reads back BY NAME, so an
     # expression-named select column would otherwise round-trip as NULL)
-    declared = _schema_ddl_cols(_TABLES[name][2])
+    declared = _schema_ddl_cols(st.tables[name][2])
     static: dict[str, str] = {}
     if m.group("static"):
         # static partition spec (reference SqlInsert partition clause):
         # the SELECT provides the remaining columns positionally; the
         # spec's literals fill the named partition columns
-        pcols = set(part_cols(name))
+        pcols = set(part_cols(spark, name))
         try:
             static = parse_kv_spec(m.group("static"))
         except ValueError as e:
@@ -1094,7 +1087,7 @@ def execute_flink_insert(spark: SparkSession, sql: str):
         # of the table pays for each of them.
         out = out.coalesce(1)
     mode = "overwrite" if m.group("mode").upper() == "OVERWRITE" else "append"
-    writer, _fmt, path = fs_writer(out, name)
+    writer, _fmt, path = fs_writer(spark, out, name)
     writer.mode(mode).save(path)
     refresh_table_view(spark, name)
     return spark.sql("SELECT 'OK' AS result")
@@ -1104,15 +1097,16 @@ def stream_ddl_table(spark: SparkSession, name: str) -> DataFrame:
     """Streaming scan of a DDL-declared filesystem table, with its declared
     WATERMARK applied — the reference's streaming-mode read of the same
     catalog table."""
-    if name not in _TABLES or _TABLES[name][0] == "datagen":
+    st = session_state(spark)
+    if name not in st.tables or st.tables[name][0] == "datagen":
         raise DdlError(f"{name!r} was not declared via filesystem DDL")
-    fmt, path, schema_ddl, opts = _TABLES[name]
+    fmt, path, schema_ddl, opts = st.tables[name]
     reader = spark.readStream.format(fmt).schema(schema_ddl)
     for k, v in _fs_read_opts(opts, fmt).items():
         reader = reader.option(k, v)
     df = reader.load(path)
-    if name in WATERMARKS:
-        col, delay = WATERMARKS[name]
+    if name in st.watermarks:
+        col, delay = st.watermarks[name]
         # Watermarks need a TIMESTAMP column; a BIGINT event-time column is
         # this engine's epoch-nanos convention (the fixtures' TIMESTAMP(NANOS)
         # read under nanosAsLong) — normalize exactly like catalog/stream_table.

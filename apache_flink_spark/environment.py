@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from apache_flink_spark import statement
 from apache_flink_spark.catalog import load_tables
 from apache_flink_spark.functions.registry import register_all
-from apache_flink_spark.session import get_spark
+from apache_flink_spark.session import get_spark, session_state
 
 
 class TableEnvironment:
@@ -154,15 +154,12 @@ class TableEnvironment:
 
     def list_modules(self) -> list[str]:
         """pyflink list_modules:537 — USED modules in resolution order."""
-        from apache_flink_spark.catalog_sql import _MODULES
-
-        return [n for n, used in _MODULES.items() if used]
+        modules = session_state(self.spark).modules
+        return [n for n, used in modules.items() if used]
 
     def list_full_modules(self) -> list[tuple[str, bool]]:
         """pyflink list_full_modules:548 — (name, used) pairs."""
-        from apache_flink_spark.catalog_sql import _MODULES
-
-        return list(_MODULES.items())
+        return list(session_state(self.spark).modules.items())
 
     def get_current_catalog(self) -> str:
         from apache_flink_spark.catalogs import current_catalog

@@ -43,16 +43,14 @@ import re
 
 from pyspark.sql import SparkSession
 
-__all__ = ["try_handle_function_statement", "FunctionDdlError", "_FUNCTIONS"]
+from apache_flink_spark.session import session_state
+
+__all__ = ["try_handle_function_statement", "FunctionDdlError"]
 
 
 class FunctionDdlError(ValueError):
     pass
 
-
-#: name -> (identifier, language) for SHOW-style introspection and
-#: IF [NOT] EXISTS semantics
-_FUNCTIONS: dict[str, tuple[str, str]] = {}
 
 _CREATE_RE = re.compile(
     r"^\s*CREATE\s+(?:TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+"
@@ -117,15 +115,16 @@ def _register(spark: SparkSession, name: str, ident: str, lang: str) -> None:
             raise FunctionDdlError(
                 f"cannot register JVM function class {ident!r}: {e}"
             ) from None
-    _FUNCTIONS[name.lower()] = (ident, lang)
+    session_state(spark).functions[name.lower()] = (ident, lang)
 
 
 def try_handle_function_statement(spark: SparkSession, sql: str):
     """Route one statement; None when it is not function DDL."""
+    functions = session_state(spark).functions
     m = _CREATE_RE.match(sql)
     if m:
         name = m.group("name")
-        if name.lower() in _FUNCTIONS:
+        if name.lower() in functions:
             if m.group("ine"):
                 return _ok(spark)
             raise FunctionDdlError(f"function {name!r} already exists")
@@ -140,25 +139,25 @@ def try_handle_function_statement(spark: SparkSession, sql: str):
     m = _DROP_RE.match(sql)
     if m:
         name = m.group("name")
-        if name.lower() not in _FUNCTIONS:
+        if name.lower() not in functions:
             if m.group("ie"):
                 return _ok(spark)
             return None  # not ours: Spark's own DROP FUNCTION semantics
         spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS `{name}`")
-        del _FUNCTIONS[name.lower()]
+        del functions[name.lower()]
         return _ok(spark)
 
     m = _ALTER_RE.match(sql)
     if m:
         name = m.group("name")
-        if name.lower() not in _FUNCTIONS:
+        if name.lower() not in functions:
             if m.group("ie"):
                 return _ok(spark)
             raise FunctionDdlError(
                 f"function {name!r} does not exist — ALTER FUNCTION "
                 "re-points an existing definition"
             )
-        lang = (m.group("lang") or _FUNCTIONS[name.lower()][1]).upper()
+        lang = (m.group("lang") or functions[name.lower()][1]).upper()
         _register(spark, name, m.group("ident"), lang)
         return _ok(spark)
 

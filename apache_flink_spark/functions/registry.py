@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from apache_flink_spark.session import session_state
+
 # Flink name -> (typed parameter list, return type, body expression).
 _SQL_FUNCTIONS = {
     # Null-safe boolean predicates (BuiltInFunctionDefinitions IS_TRUE
@@ -131,21 +133,16 @@ _SQL_FUNCTIONS = {
 }
 
 
-# Sessions already carrying the function surface — registering ~30 SQL
-# functions costs ~30 round-trips, so repeated TableEnvironment construction
-# on the same session must not re-pay it.
-_REGISTERED: set[int] = set()
-
-
-def register_all(spark: SparkSession, force: bool = False) -> None:
+def register_all(spark: SparkSession) -> None:
     """Install the Flink-named SQL function surface into the session.
-    Idempotent (CREATE OR REPLACE) and cached per session; called by
+    Idempotent (CREATE OR REPLACE) and done once per session; called by
     TableEnvironment.__init__."""
-    if not force and id(spark) in _REGISTERED:
+    st = session_state(spark)
+    if st.functions_registered:
         return
     for name, (params, ret, body) in _SQL_FUNCTIONS.items():
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{params} "
             f"RETURNS {ret} RETURN {body}"
         )
-    _REGISTERED.add(id(spark))
+    st.functions_registered = True

@@ -144,9 +144,10 @@ def _compact_files(ctx: ProcedureContext, path: str, target_mb: int = 128):
     # this path would otherwise hold the pre-compaction file index and
     # throw FileNotFound), and re-register any DDL table on this path
     ctx.spark.catalog.refreshByPath(path)
-    from apache_flink_spark.ddl import _TABLES, refresh_table_view
+    from apache_flink_spark.ddl import refresh_table_view
+    from apache_flink_spark.session import session_state
 
-    for tname, spec in list(_TABLES.items()):
+    for tname, spec in list(session_state(ctx.spark).tables.items()):
         if spec[0] != "datagen" and os.path.normpath(
             spec[1]
         ) == os.path.normpath(path):

@@ -37,6 +37,7 @@ from __future__ import annotations
 import re
 from typing import Optional
 
+from apache_flink_spark.session import session_state
 from apache_flink_spark.statement import closing_paren, in_literal, literal_spans
 
 __all__ = ["rewrite_flink_hints", "HintError"]
@@ -111,15 +112,13 @@ def _parse_options(args: str) -> dict[str, str]:
 def _apply_dynamic_options(spark, table: str, options: dict) -> str:
     """Re-register a DDL-declared table with per-statement option
     overrides; returns the statement-scoped view name to substitute."""
-    from apache_flink_spark.ddl import _TABLES
-
-    if table not in _TABLES:
+    spec = session_state(spark).tables.get(table)
+    if spec is None:
         raise HintError(
             f"OPTIONS hint on {table!r}: dynamic table options require a "
             "table declared via the connector DDL (reference: the table's "
             "factory must accept dynamic options)"
         )
-    spec = _TABLES[table]
     view = f"__hint_opts_{table}_{abs(hash(tuple(sorted(options.items())))) % 10**8}"
     if spec[0] == "datagen":
         _, base_opts, cols = spec
@@ -176,13 +175,12 @@ def rewrite_flink_hints(spark, sql: str) -> str:
                     raise HintError(
                         "OPTIONS hint must directly follow a table reference"
                     )
-                from apache_flink_spark.ddl import _TABLES
-
-                if ref.group(1) not in _TABLES:
+                tables = session_state(spark).tables
+                if ref.group(1) not in tables:
                     # maybe '<table> [AS] <alias> /*+ OPTIONS */' — the
                     # trailing token is the alias; resolve the table
                     am = _TABLE_ALIAS_RE.search(sql, 0, start)
-                    if am and am.group(1) in _TABLES and \
+                    if am and am.group(1) in tables and \
                             am.group(1).upper() != "FROM" and \
                             am.group(2).upper() != "AS":
                         ref = am

@@ -28,6 +28,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from apache_flink_spark.session import session_state
 from apache_flink_spark.statement import split_top_level
 
 __all__ = ["try_handle_row_level_statement", "RowLevelError"]
@@ -64,22 +65,21 @@ def _split_assignments(sets: str) -> list[tuple[str, str]]:
     return out
 
 
-def _table_spec(name: str):
+def _table_spec(spark, name: str):
     """Spec for a filesystem DDL table, or None when ``name`` is not a
     DDL-declared table at all — the statement then falls through to
     spark.sql, which natively handles DELETE/UPDATE/TRUNCATE on its own
     managed tables (r6 ADVICE: intercepting those broke valid Spark SQL)."""
-    from apache_flink_spark.ddl import _TABLES
-
-    if name not in _TABLES:
+    spec = session_state(spark).tables.get(name)
+    if spec is None:
         return None
-    if _TABLES[name][0] == "datagen":
+    if spec[0] == "datagen":
         raise RowLevelError(
             f"row-level DML needs a filesystem DDL table; {name!r} is not "
             "one (reference: the connector must implement "
             "SupportsRowLevelDelete/Update — datagen sources do not)"
         )
-    fmt, path, schema_ddl, _opts = _TABLES[name]
+    fmt, path, schema_ddl, _opts = spec
     return fmt, path, schema_ddl
 
 
@@ -93,7 +93,7 @@ def _rewrite(spark, name: str, df, fmt: str, path: str, schema_ddl: str):
     staging = path.rstrip("/") + ".__rowlevel__"
     backup = path.rstrip("/") + ".__prerowlevel__"
     shutil.rmtree(staging, ignore_errors=True)
-    writer, _fmt, _path = fs_writer(df, name)
+    writer, _fmt, _path = fs_writer(spark, df, name)
     writer.mode("overwrite").save(staging)
     shutil.rmtree(backup, ignore_errors=True)
     os.rename(path, backup)
@@ -108,7 +108,7 @@ def try_handle_row_level_statement(spark, sql: str):
     m = _TRUNCATE_RE.match(sql)
     if m:
         name = m.group("name")
-        spec = _table_spec(name)
+        spec = _table_spec(spark, name)
         if spec is None:
             return None
         fmt, path, schema_ddl = spec
@@ -123,7 +123,7 @@ def try_handle_row_level_statement(spark, sql: str):
     m = _DELETE_RE.match(sql)
     if m:
         name = m.group("name")
-        spec = _table_spec(name)
+        spec = _table_spec(spark, name)
         if spec is None:
             return None
         fmt, path, schema_ddl = spec
@@ -142,7 +142,7 @@ def try_handle_row_level_statement(spark, sql: str):
     m = _UPDATE_RE.match(sql)
     if m:
         name = m.group("name")
-        spec = _table_spec(name)
+        spec = _table_spec(spark, name)
         if spec is None:
             return None
         fmt, path, schema_ddl = spec

@@ -5,14 +5,18 @@ The reference engine configures its runtime through ``TableConfig`` /
 .../TableConfig.java); here the equivalent knobs are Spark confs. Defaults are
 chosen for correctness-vs-oracle (UTC timestamps) and for scale (AQE on,
 adaptive skew handling) — the same settings hold on a real cluster; only
-``shuffle.partitions`` / memory sizing change with cluster size.
+``shuffle.partitions`` / memory sizing change with cluster size. What the
+engine records about one session's objects is its :class:`SessionState`.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults that matter at 100 TB as much as at sf0.001:
 #  - AQE re-plans joins + coalesces/splits shuffle partitions at runtime,
@@ -130,3 +134,75 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@dataclass
+class SessionState:
+    """What the engine records about the objects one SparkSession owns,
+    so ``spark.newSession()`` isolates them as Spark isolates its own."""
+
+    #: table name -> (format, path, schema_ddl, declared_options) for
+    #: filesystem tables; ("datagen", options, cols) for datagen sources.
+    #: Consumers (INSERT, streaming replay, OPTIONS hints, row-level DML,
+    #: compaction) rebuild readers/writers through ddl.fs_reader/fs_writer
+    #: so the DECLARED connector options (csv delimiter/header, ...) are
+    #: always honored — an ad-hoc spark.read at defaults silently re-parses
+    #: csv wrong (r6 review finding).
+    tables: dict[str, tuple] = field(default_factory=dict)
+    #: table name -> (event-time column, delay expression e.g. "5 seconds")
+    watermarks: dict[str, tuple[str, str]] = field(default_factory=dict)
+    #: secondary catalogs: name -> {"comment", "properties", "dbs":
+    #: {db: {"comment", "properties"}}, "current_db"}
+    catalogs: dict[str, dict] = field(default_factory=dict)
+    #: (catalog, db, table) -> mangled temp-view name
+    cat_tables: dict[tuple[str, str, str], str] = field(default_factory=dict)
+    #: current catalog: None = the built-in Spark session catalog
+    current_catalog: str | None = None
+    #: cat_tables keys added by a CREATE rewrite whose DDL has not yet been
+    #: verified to have materialized the view — checked (and cleared) on
+    #: the next statement, so a FAILED create cannot leave a phantom table
+    pending: list[tuple[str, str, str]] = field(default_factory=list)
+    #: ModuleManager state: ordered {name: used_flag}; the reference loads
+    #: CoreModule by default (ModuleManager.java ctor)
+    modules: dict[str, bool] = field(default_factory=lambda: {"core": True})
+    #: original CREATE VIEW statement text per view name — the reference
+    #: keeps view DDL in CatalogView; Spark's temp views don't, so the
+    #: facade records the statements it routes (SHOW CREATE VIEW replays)
+    view_ddl: dict[str, str] = field(default_factory=dict)
+    #: view name -> properties set via ALTER VIEW ... SET (the reference
+    #: keeps these in CatalogView options; Spark temp views have no slot)
+    view_props: dict[str, dict] = field(default_factory=dict)
+    #: SqlRemoveJar — jars "removed" from the session's resource list. The
+    #: JVM cannot unload a loaded jar (true in the reference's cluster too
+    #: once a job shipped it); REMOVE JAR removes it from the visible SHOW
+    #: JARS list, exactly the reference SQL-client semantics of editing
+    #: the resource set.
+    removed_jars: set[str] = field(default_factory=set)
+    #: function DDL: name -> (identifier, language) for SHOW-style
+    #: introspection and IF [NOT] EXISTS semantics
+    functions: dict[str, tuple[str, str]] = field(default_factory=dict)
+    #: sf_dir -> {name: DataFrame}, so repeated load_tables() calls don't
+    #: re-infer parquet schemas. The DataFrames hold the session, so a
+    #: session that loaded fixtures lives until they are dropped.
+    fixtures: dict[str, dict[str, DataFrame]] = field(default_factory=dict)
+    #: which sf_dir the fixture temp views point at. Switching sf_dir must
+    #: re-point them — a fixtures hit alone must NOT skip registration or
+    #: spark.sql() would silently read the previous scale factor's data.
+    fixtures_dir: str | None = None
+    #: the Flink-named SQL functions are installed — registering ~30 SQL
+    #: functions costs ~30 round-trips, so repeated TableEnvironment
+    #: construction on the same session must not re-pay it
+    functions_registered: bool = False
+
+
+_STATES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_STATES_LOCK = threading.Lock()
+
+
+def session_state(spark: SparkSession) -> SessionState:
+    """``spark``'s :class:`SessionState`, created on first use."""
+    state = _STATES.get(spark)
+    if state is None:
+        with _STATES_LOCK:
+            state = _STATES.setdefault(spark, SessionState())
+    return state

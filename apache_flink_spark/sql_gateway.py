@@ -47,6 +47,8 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Any, Callable, Iterator, Optional
 
+from apache_flink_spark.session import session_state
+
 __all__ = [
     "SessionHandle",
     "OperationHandle",
@@ -338,9 +340,17 @@ class SqlGatewayService:
     """In-process analog of the reference's ``SqlGatewayServiceImpl``.
 
     One service per process; every :meth:`open_session` call gets an
-    isolated ``SparkSession.newSession()`` (own temp views + conf) wrapped
-    in the engine's :class:`TableEnvironment`. Statements run on a bounded
-    thread pool; results page through the driver one fetch at a time.
+    isolated ``SparkSession.newSession()`` wrapped in the engine's
+    :class:`TableEnvironment`. A session isolates its conf, its temporary
+    tables and views with their DDL, options and watermarks, its
+    secondary catalogs, current catalog and database, modules, functions
+    and jars (Spark's per-session state plus the engine's
+    :class:`~apache_flink_spark.session.SessionState`). Shared across
+    sessions: the SparkContext and executors, the ``spark_catalog``
+    metastore with its native tables, the files under any table path,
+    and models, procedures and PTFs registered from Python. Statements
+    run on a bounded thread pool; results page through the driver one
+    fetch at a time.
     """
 
     def __init__(
@@ -392,6 +402,8 @@ class SqlGatewayService:
             if not op.status.is_terminal:
                 op.cancel_requested.set()
                 _kill_jobs(sess, op)
+        # the fixture DataFrames hold the session: drop them so it can go
+        session_state(sess.tenv.spark).fixtures.clear()
 
     def heartbeat(self, handle: SessionHandle) -> None:
         self._session(handle).touch()

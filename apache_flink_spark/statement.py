@@ -4,8 +4,9 @@ The reference parses a statement once into one ``SqlNode`` that becomes
 one ``Operation`` (TableEnvironmentImpl.executeSql -> ParserImpl.parse).
 Here a statement is
 
-1. normalised once: leading whitespace and ``--`` / ``/* */`` comments,
-   and a trailing ``;`` outside literals, are stripped (:func:`classify`);
+1. normalised once: leading and trailing whitespace and ``--`` /
+   ``/* */`` comments, and a trailing ``;``, outside literals, are
+   stripped (:func:`classify`);
 2. classified once: its leading keywords, with ``OR REPLACE``,
    ``TEMPORARY`` and ``SYSTEM`` skipped, are looked up in :data:`ROUTES`,
    longest prefix first, which names exactly one route;
@@ -26,6 +27,8 @@ import importlib
 import math
 import re
 from typing import NamedTuple
+
+from apache_flink_spark.session import session_state
 
 # -- scanning -----------------------------------------------------------------
 
@@ -155,7 +158,10 @@ _CONFIG_VERBS = frozenset(
     {"SET", "RESET", "CREATE", "DROP", "ALTER", "USE", "ADD", "LOAD"}
 )
 
-_LEADING_RE = re.compile(r"(?:\s|--[^\n]*|/\*.*?(?:\*/|$))*", re.S)
+# a /*+ hint */ is syntax, not a comment
+_LITERAL_OR_COMMENT_RE = re.compile(
+    rf"{QUOTED}|--[^\n]*|/\*(?!\+).*?(?:\*/|$)", re.S
+)
 _TOKEN_RE = re.compile(r"\s*('(?:[^']|'')*'?|[A-Za-z_]\w*|\S)")
 
 
@@ -192,13 +198,18 @@ def _head(text: str) -> tuple[str, ...]:
     return tuple(head)
 
 
+def _mask(m: re.Match) -> str:
+    """A comment becomes blanks, a literal opaque text of its length."""
+    return (" " if m.group()[0] in "-/" else "x") * len(m.group())
+
+
 def classify(query: str) -> Statement:
     """Normalise ``query`` and give it exactly one route."""
-    text = query[_LEADING_RE.match(query).end():].rstrip()
-    while text.endswith(";") and not in_literal(
-        literal_spans(text), len(text) - 1
-    ):
-        text = text[:-1].rstrip()
+    # literals and comments are read in one pass, left to right: a quote
+    # in a comment opens no literal, a '--' in a literal starts no comment
+    code = _LITERAL_OR_COMMENT_RE.sub(_mask, query)
+    start = len(code) - len(code.lstrip())
+    text = query[start:len(code.rstrip("; \t\r\n\f\v"))]
     head = _head(text)
     route = "query"
     for n in range(len(head), 0, -1):
@@ -238,7 +249,9 @@ def _catalog_identifiers(tenv, sql, route, words):
 
     # secondary catalogs map cat.db.tbl (and, in a secondary current
     # catalog, unqualified) names onto their views
-    if not catalogs._CATALOGS and "DEFAULT_CATALOG" not in words:
+    if not session_state(tenv.spark).catalogs and (
+        "DEFAULT_CATALOG" not in words
+    ):
         return sql
     return catalogs.rewrite_catalog_identifiers(tenv.spark, sql)
 
@@ -436,10 +449,10 @@ def _explain(tenv, stmt):
     else:
         # EXPLAIN must never execute the write: plan the SELECT of a
         # DDL-declared sink, and let Spark's EXPLAIN plan any other insert
-        from apache_flink_spark.ddl import _INSERT_RE, _TABLES
+        from apache_flink_spark.ddl import _INSERT_RE
 
         im = _INSERT_RE.match(query)
-        if im and im.group("name") in _TABLES:
+        if im and im.group("name") in session_state(tenv.spark).tables:
             plan = tenv.explain_sql(im.group("select"), extended=extended)
         else:
             kw = "EXPLAIN EXTENDED " if extended else "EXPLAIN "
@@ -570,7 +583,7 @@ def _view(tenv, stmt):
     """Spark keeps no SQL for temp views: once Spark accepts the view,
     record the statement as written for SHOW CREATE VIEW."""
     out = tenv.spark.sql(stmt.sql)
-    _call("catalog_sql", "record_view_statement", stmt.text)
+    _call("catalog_sql", "record_view_statement", tenv.spark, stmt.text)
     return out
 
 

@@ -327,15 +327,12 @@ class Table:
         sink. A DDL-declared connector table goes through its declared
         writer (format/options/partition layout); a Spark catalog table
         through insertInto. Returns the written row count DataFrame."""
-        from apache_flink_spark.ddl import (
-            _TABLES,
-            fs_writer,
-            refresh_table_view,
-        )
+        from apache_flink_spark.ddl import fs_writer, refresh_table_view
+        from apache_flink_spark.session import session_state
 
         spark = self._df.sparkSession
-        if table_path in _TABLES:
-            writer, _fmt, path = fs_writer(self._df, table_path)
+        if table_path in session_state(spark).tables:
+            writer, _fmt, path = fs_writer(spark, self._df, table_path)
             writer.mode("overwrite" if overwrite else "append").save(path)
             refresh_table_view(spark, table_path)
         else:

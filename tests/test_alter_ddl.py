@@ -8,13 +8,9 @@ import os
 
 import pytest
 
-from apache_flink_spark.ddl import (
-    _TABLES,
-    WATERMARKS,
-    DdlError,
-    _schema_ddl_cols,
-)
+from apache_flink_spark.ddl import DdlError, _schema_ddl_cols
 from apache_flink_spark.environment import TableEnvironment
+from apache_flink_spark.session import session_state
 
 
 @pytest.fixture()
@@ -70,7 +66,8 @@ def test_add_column_parquet_metadata_only(te, tmp_path):
 def test_add_column_first_and_after(te, tmp_path):
     _mk(te, tmp_path, "at_pos")
     te.sql("ALTER TABLE at_pos ADD (z INT FIRST, y INT AFTER id)")
-    cols = [c for c, _ in _schema_ddl_cols(_TABLES["at_pos"][2])]
+    st = session_state(te.spark)
+    cols = [c for c, _ in _schema_ddl_cols(st.tables["at_pos"][2])]
     assert cols == ["z", "id", "y", "v"]
 
 
@@ -106,9 +103,10 @@ def test_modify_type_cow_cast(te, tmp_path):
 def test_rename_table_moves_view_and_watermark(te, tmp_path):
     _mk(te, tmp_path, "at_ren1", wm=True)
     te.sql("ALTER TABLE at_ren1 RENAME TO at_ren2")
-    assert "at_ren1" not in _TABLES and "at_ren2" in _TABLES
-    assert WATERMARKS["at_ren2"] == ("ts", "5 second")
-    assert "at_ren1" not in WATERMARKS
+    st = session_state(te.spark)
+    assert "at_ren1" not in st.tables and "at_ren2" in st.tables
+    assert st.watermarks["at_ren2"] == ("ts", "5 second")
+    assert "at_ren1" not in st.watermarks
     te.sql("SELECT * FROM at_ren2").collect()
     with pytest.raises(Exception):
         te.sql("SELECT * FROM at_ren1").collect()
@@ -119,7 +117,8 @@ def test_set_and_reset_options_csv_delimiter(te, tmp_path):
     _fill(te, "at_csv")
     # switch the declared delimiter; the rewrite honors it end-to-end
     te.sql("ALTER TABLE at_csv SET ('csv.field-delimiter' = ';')")
-    assert _TABLES["at_csv"][3]["csv.field-delimiter"] == ";"
+    st = session_state(te.spark)
+    assert st.tables["at_csv"][3]["csv.field-delimiter"] == ";"
     te.sql("INSERT OVERWRITE at_csv SELECT 7, 'x'")
     raw = ""
     for f in os.listdir(path):
@@ -130,7 +129,7 @@ def test_set_and_reset_options_csv_delimiter(te, tmp_path):
         "SELECT v FROM at_csv WHERE id = 7"
     ).collect()[0].v == "x"
     te.sql("ALTER TABLE at_csv RESET ('csv.field-delimiter')")
-    assert "csv.field-delimiter" not in _TABLES["at_csv"][3]
+    assert "csv.field-delimiter" not in st.tables["at_csv"][3]
     with pytest.raises(DdlError):
         te.sql("ALTER TABLE at_csv RESET ('path')")
 
@@ -184,9 +183,10 @@ def test_show_create_table_roundtrip(te, tmp_path):
     assert "'connector' = 'filesystem'" in ddl
     # the emitted DDL re-executes against a fresh name
     te.sql(ddl.replace("at_sct", "at_sct2", 1))
-    assert "at_sct2" in _TABLES
-    assert _TABLES["at_sct2"][2] == _TABLES["at_sct"][2]
-    assert WATERMARKS["at_sct2"] == WATERMARKS["at_sct"]
+    st = session_state(te.spark)
+    assert "at_sct2" in st.tables
+    assert st.tables["at_sct2"][2] == st.tables["at_sct"][2]
+    assert st.watermarks["at_sct2"] == st.watermarks["at_sct"]
 
 
 def test_create_like_including_all(te, tmp_path):
@@ -197,8 +197,9 @@ def test_create_like_including_all(te, tmp_path):
     assert te.sql(
         "SELECT count(*) AS n FROM lk_dst"
     ).collect()[0].n == 1
-    assert WATERMARKS["lk_dst"] == WATERMARKS["lk_src"]
-    assert _TABLES["lk_dst"][1] == _TABLES["lk_src"][1]
+    st = session_state(te.spark)
+    assert st.watermarks["lk_dst"] == st.watermarks["lk_src"]
+    assert st.tables["lk_dst"][1] == st.tables["lk_src"][1]
 
 
 def test_create_like_overwriting_options_new_path(te, tmp_path):
@@ -211,7 +212,8 @@ def test_create_like_overwriting_options_new_path(te, tmp_path):
         LIKE lk2_src (OVERWRITING OPTIONS)
         """
     )
-    assert _TABLES["lk2_dst"][1] == new_path
+    st = session_state(te.spark)
+    assert st.tables["lk2_dst"][1] == new_path
     assert te.sql("SELECT count(*) AS n FROM lk2_dst").collect()[0].n == 0
     te.sql("INSERT INTO lk2_dst SELECT 9, 'z'")
     assert te.sql("SELECT count(*) AS n FROM lk2_dst").collect()[0].n == 1
@@ -229,7 +231,8 @@ def test_create_like_extra_columns_and_excluding_watermarks(te, tmp_path):
         LIKE lk3_src (EXCLUDING WATERMARKS, OVERWRITING OPTIONS)
         """
     )
-    assert "lk3_dst" not in WATERMARKS
+    st = session_state(te.spark)
+    assert "lk3_dst" not in st.watermarks
     assert te.sql("SELECT * FROM lk3_dst").columns == [
         "id", "v", "ts", "score"
     ]
@@ -268,7 +271,8 @@ def test_ctas_filesystem(te, tmp_path):
         ) AS SELECT id AS k, id * 2 AS dbl FROM range(5)
         """
     )
-    assert _TABLES["ctas_t"][2] == "k bigint, dbl bigint"
+    st = session_state(te.spark)
+    assert st.tables["ctas_t"][2] == "k bigint, dbl bigint"
     rows = te.sql("SELECT k, dbl FROM ctas_t ORDER BY k").collect()
     assert [(r.k, r.dbl) for r in rows] == [(i, 2 * i) for i in range(5)]
     # re-create errors; IF NOT EXISTS is a no-op skip
@@ -291,7 +295,8 @@ def test_ctas_rejects_unaliased_expression_columns(te, tmp_path):
             f"CREATE TABLE ctas_bad WITH ('connector'='filesystem',"
             f"'path'='{path}') AS SELECT id + 1 FROM range(3)"
         )
-    assert "ctas_bad" not in _TABLES
+    st = session_state(te.spark)
+    assert "ctas_bad" not in st.tables
 
 
 def _mk_part(te, tmp_path, name):
@@ -423,7 +428,7 @@ def test_partition_column_guards_and_show_create_partitioned(te, tmp_path):
     te.sql(ddl.replace("pt4", "pt5", 1))
     from apache_flink_spark.ddl import part_cols
 
-    assert part_cols("pt5") == ["region", "day"]
+    assert part_cols(te.spark, "pt5") == ["region", "day"]
 
 
 def test_ctas_partitioned(te, tmp_path):
@@ -440,7 +445,7 @@ def test_ctas_partitioned(te, tmp_path):
     )
     from apache_flink_spark.ddl import part_cols
 
-    assert part_cols("ctas_p") == ["grp"]
+    assert part_cols(te.spark, "ctas_p") == ["grp"]
     assert sorted(
         e for e in os.listdir(path) if e.startswith("grp=")
     ) == ["grp=e", "grp=o"]
@@ -510,7 +515,8 @@ def test_reset_is_atomic_on_error(te, tmp_path):
     te.sql("ALTER TABLE rst SET ('csv.field-delimiter' = ';')")
     with pytest.raises(DdlError, match="required option"):
         te.sql("ALTER TABLE rst RESET ('csv.field-delimiter', 'path')")
-    assert _TABLES["rst"][3].get("csv.field-delimiter") == ";"
+    st = session_state(te.spark)
+    assert st.tables["rst"][3].get("csv.field-delimiter") == ";"
     with pytest.raises(DdlError, match="required option"):
         te.sql("ALTER TABLE rst RESET ('partitioned-by')")
     with pytest.raises(DdlError, match="partitioned-by"):
@@ -529,7 +535,7 @@ def test_create_like_partitions_strategies(te, tmp_path):
         f"CREATE TABLE pl_inc WITH ('path' = '{p2}') "
         "LIKE pl_src (OVERWRITING OPTIONS)"
     )
-    assert part_cols("pl_inc") == ["region", "day"]
+    assert part_cols(te.spark, "pl_inc") == ["region", "day"]
     # EXCLUDING OPTIONS must NOT silently drop the partition layout
     p3 = os.path.join(str(tmp_path), "pl_excopt")
     te.sql(
@@ -537,13 +543,13 @@ def test_create_like_partitions_strategies(te, tmp_path):
         f"'path' = '{p3}', 'format' = 'parquet') "
         "LIKE pl_src (EXCLUDING OPTIONS)"
     )
-    assert part_cols("pl_excopt") == ["region", "day"]
+    assert part_cols(te.spark, "pl_excopt") == ["region", "day"]
     p4 = os.path.join(str(tmp_path), "pl_exc")
     te.sql(
         f"CREATE TABLE pl_exc WITH ('path' = '{p4}') "
         "LIKE pl_src (OVERWRITING OPTIONS, EXCLUDING PARTITIONS)"
     )
-    assert part_cols("pl_exc") == []
+    assert part_cols(te.spark, "pl_exc") == []
     with pytest.raises(DdlError, match="OVERWRITING PARTITIONS"):
         te.sql(
             f"CREATE TABLE pl_bad WITH ('path' = '{p4}x') "

@@ -17,15 +17,10 @@ def test_hot_bucket_pairs_are_capped(spark, tmp_path):
     )
     docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
 
-    from apache_flink_spark import catalog
-
-    catalog._CACHE.clear()
-    catalog._ACTIVE_VIEWS.clear()
-    try:
-        pairs = QUERIES["dedup_minhash_lsh"](spark, str(tmp_path)).collect()
-    finally:
-        catalog._CACHE.clear()
-        catalog._ACTIVE_VIEWS.clear()
+    # a fresh session: its fixture tables are this test's documents
+    pairs = QUERIES["dedup_minhash_lsh"](
+        spark.newSession(), str(tmp_path)
+    ).collect()
     cap = _BUCKET_CAP
     assert len(pairs) == cap * (cap - 1) // 2
     # The kept members are the cap SMALLEST doc_ids — deterministic rule.

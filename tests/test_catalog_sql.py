@@ -8,8 +8,14 @@ from __future__ import annotations
 
 import pytest
 
-from apache_flink_spark.catalog_sql import _MODULES, CatalogSqlError
+from apache_flink_spark.catalog_sql import CatalogSqlError
 from apache_flink_spark.environment import TableEnvironment
+
+
+@pytest.fixture()
+def spark(spark):
+    """A fresh session per test: module state is per session."""
+    return spark.newSession()
 
 
 @pytest.fixture()
@@ -18,10 +24,7 @@ def te(spark):
     spark.createDataFrame(
         [(1, "a"), (2, None), (2, "c")], "k int, s string"
     ).createOrReplaceTempView("cat_t")
-    yield env
-    # module state is session-global; restore the default for other tests
-    _MODULES.clear()
-    _MODULES["core"] = True
+    return env
 
 
 def test_show_catalogs_and_current(te):

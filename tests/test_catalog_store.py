@@ -80,37 +80,31 @@ def test_secondary_catalogs_persist(spark, tmp_path):
         load_catalog_store,
         save_catalog_store,
     )
-    from apache_flink_spark.catalogs import reset_for_tests
     from apache_flink_spark.environment import TableEnvironment
 
-    reset_for_tests()
-    te = TableEnvironment(spark=spark)
-    try:
-        te.sql(
-            "CREATE CATALOG stored_cat COMMENT 'persisted' "
-            "WITH ('type' = 'generic_in_memory', 'default-database' = 'd')"
-        )
-        te.sql(
-            f"CREATE TABLE stored_cat.d.t (k BIGINT) WITH ("
-            f"'connector' = 'filesystem', 'path' = '{tmp_path}/sc_t', "
-            "'format' = 'parquet')"
-        )
-        te.sql("INSERT INTO stored_cat.d.t SELECT 42")
-        store = str(tmp_path / "store.json")
-        save_catalog_store(te, store)
+    te = TableEnvironment(spark=spark.newSession())
+    te.sql(
+        "CREATE CATALOG stored_cat COMMENT 'persisted' "
+        "WITH ('type' = 'generic_in_memory', 'default-database' = 'd')"
+    )
+    te.sql(
+        f"CREATE TABLE stored_cat.d.t (k BIGINT) WITH ("
+        f"'connector' = 'filesystem', 'path' = '{tmp_path}/sc_t', "
+        "'format' = 'parquet')"
+    )
+    te.sql("INSERT INTO stored_cat.d.t SELECT 42")
+    store = str(tmp_path / "store.json")
+    save_catalog_store(te, store)
 
-        reset_for_tests()
-        te2 = TableEnvironment(spark=spark)
-        load_catalog_store(te2, store)
-        cats = [r[0] for r in te2.sql("SHOW CATALOGS").collect()]
-        assert "stored_cat" in cats
-        info = dict(te2.sql("DESCRIBE CATALOG stored_cat").collect())
-        assert info["comment"] == "persisted"
-        assert (
-            te2.sql("SELECT k FROM stored_cat.d.t").collect()[0].k == 42
-        )
-    finally:
-        reset_for_tests()
+    te2 = TableEnvironment(spark=spark.newSession())
+    load_catalog_store(te2, store)
+    cats = [r[0] for r in te2.sql("SHOW CATALOGS").collect()]
+    assert "stored_cat" in cats
+    info = dict(te2.sql("DESCRIBE CATALOG stored_cat").collect())
+    assert info["comment"] == "persisted"
+    assert (
+        te2.sql("SELECT k FROM stored_cat.d.t").collect()[0].k == 42
+    )
 
 
 def test_distributed_tables_persist(spark, tmp_path):

@@ -5,15 +5,19 @@ from __future__ import annotations
 
 import pytest
 
-from apache_flink_spark.catalogs import CatalogError, reset_for_tests
+from apache_flink_spark.catalogs import CatalogError
 from apache_flink_spark.environment import TableEnvironment
 
 
 @pytest.fixture()
+def spark(spark):
+    """A fresh session per test: catalogs are per session."""
+    return spark.newSession()
+
+
+@pytest.fixture()
 def te(spark):
-    reset_for_tests()
-    yield TableEnvironment(spark=spark)
-    reset_for_tests()
+    return TableEnvironment(spark=spark)
 
 
 def _mk_catalog(te, name="memcat"):

@@ -6,12 +6,12 @@ from __future__ import annotations
 import pytest
 
 from apache_flink_spark.ddl import (
-    WATERMARKS,
     DdlError,
     execute_flink_ddl,
     stream_ddl_table,
 )
 from apache_flink_spark.environment import TableEnvironment
+from apache_flink_spark.session import session_state
 
 
 def test_filesystem_parquet_table(spark):
@@ -55,7 +55,7 @@ def test_watermark_clause_recorded_and_applied(spark):
         )
         """
     )
-    assert WATERMARKS["ddl_events"] == ("ts", "5 seconds")
+    assert session_state(spark).watermarks["ddl_events"] == ("ts", "5 seconds")
     # Batch view resolves; streaming replay carries the watermark.
     assert te.sql("SELECT count(*) AS n FROM ddl_events").collect()[0].n > 0
     st = stream_ddl_table(spark, "ddl_events")

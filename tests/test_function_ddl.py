@@ -11,15 +11,13 @@ import textwrap
 import pytest
 
 from apache_flink_spark.environment import TableEnvironment
-from apache_flink_spark.function_ddl import _FUNCTIONS, FunctionDdlError
+from apache_flink_spark.function_ddl import FunctionDdlError
 
 
 @pytest.fixture()
 def te(spark):
-    yield TableEnvironment(spark=spark)
-    for name in list(_FUNCTIONS):
-        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS `{name}`")
-        _FUNCTIONS.pop(name, None)
+    # a fresh session: the functions a test creates go with it
+    return TableEnvironment(spark=spark.newSession())
 
 
 @pytest.fixture()

@@ -109,14 +109,11 @@ print("HIVE_CATALOG_OK")
 def test_hive_catalog_requires_hive_session(spark):
     """In an in-memory-catalog session the hive type must fail LOUDLY with
     the hive_session hint, not half-register."""
-    from apache_flink_spark.catalogs import (
-        CatalogError,
-        _CATALOGS,
-        try_handle_catalog_ddl,
-    )
+    from apache_flink_spark.catalogs import CatalogError, try_handle_catalog_ddl
+    from apache_flink_spark.session import session_state
 
     with pytest.raises(CatalogError, match="hive_session"):
         try_handle_catalog_ddl(
             spark, "CREATE CATALOG h2 WITH ('type'='hive')"
         )
-    assert "h2" not in _CATALOGS
+    assert "h2" not in session_state(spark).catalogs

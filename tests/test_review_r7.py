@@ -136,78 +136,66 @@ def test_drop_distribution_keeps_partitioning(te, spark):
         spark.sql("DROP TABLE IF EXISTS rr_pdist")
 
 
-def test_catalog_use_passthrough_and_drop_semantics(te, spark, tmp_path):
+def test_catalog_use_passthrough_and_drop_semantics(spark, tmp_path):
     """r7 review: USE CATALOG for unknown names reaches Spark (its error,
     not CatalogError); unqualified DROP TABLE in a secondary catalog must
     not fall through to the built-in catalog's table."""
-    from apache_flink_spark.catalogs import CatalogError, reset_for_tests
+    from apache_flink_spark.catalogs import CatalogError
 
-    reset_for_tests()
+    te = TableEnvironment(spark=spark.newSession())
+    with pytest.raises(Exception) as exc:
+        te.sql("USE CATALOG no_such_plugin")
+    assert not isinstance(exc.value, CatalogError)
+    te.sql("CREATE CATALOG rr_cat WITH ('type' = 'generic_in_memory')")
+    te.sql("USE CATALOG rr_cat")
+    spark.sql("DROP TABLE IF EXISTS rr_builtin")
+    spark.sql("CREATE TABLE rr_builtin (x INT) USING parquet")
     try:
-        with pytest.raises(Exception) as exc:
-            te.sql("USE CATALOG no_such_plugin")
-        assert not isinstance(exc.value, CatalogError)
-        te.sql("CREATE CATALOG rr_cat WITH ('type' = 'generic_in_memory')")
-        te.sql("USE CATALOG rr_cat")
-        spark.sql("DROP TABLE IF EXISTS rr_builtin")
-        spark.sql("CREATE TABLE rr_builtin (x INT) USING parquet")
-        try:
-            with pytest.raises(CatalogError, match="does not exist in"):
-                te.sql("DROP TABLE rr_builtin")
-            # still there
-            te.sql("USE CATALOG spark_catalog")
-            assert spark.catalog.tableExists("rr_builtin")
-        finally:
-            spark.sql("DROP TABLE IF EXISTS rr_builtin")
+        with pytest.raises(CatalogError, match="does not exist in"):
+            te.sql("DROP TABLE rr_builtin")
+        # still there
+        te.sql("USE CATALOG spark_catalog")
+        assert spark.catalog.tableExists("rr_builtin")
     finally:
-        reset_for_tests()
+        spark.sql("DROP TABLE IF EXISTS rr_builtin")
 
 
-def test_failed_create_leaves_no_phantom_table(te, spark):
+def test_failed_create_leaves_no_phantom_table(spark):
     """r7 review: a failed CREATE TABLE in a secondary catalog must not
     leave a phantom registry entry."""
-    from apache_flink_spark.catalogs import reset_for_tests
     from apache_flink_spark.ddl import DdlError
 
-    reset_for_tests()
-    try:
-        te.sql("CREATE CATALOG rr_ph WITH ('type' = 'generic_in_memory')")
-        te.sql("USE CATALOG rr_ph")
-        with pytest.raises(DdlError):
-            # filesystem connector without 'path' fails after registration
-            te.sql(
-                "CREATE TABLE ghost (k BIGINT) WITH "
-                "('connector' = 'filesystem', 'format' = 'parquet')"
-            )
-        assert te.sql("SHOW TABLES").count() == 0
-    finally:
-        reset_for_tests()
+    te = TableEnvironment(spark=spark.newSession())
+    te.sql("CREATE CATALOG rr_ph WITH ('type' = 'generic_in_memory')")
+    te.sql("USE CATALOG rr_ph")
+    with pytest.raises(DdlError):
+        # filesystem connector without 'path' fails after registration
+        te.sql(
+            "CREATE TABLE ghost (k BIGINT) WITH "
+            "('connector' = 'filesystem', 'format' = 'parquet')"
+        )
+    assert te.sql("SHOW TABLES").count() == 0
 
 
-def test_unqualified_rewrite_only_in_table_position(te, spark, tmp_path):
+def test_unqualified_rewrite_only_in_table_position(spark, tmp_path):
     """r7 review: a column/alias sharing a registered table's name must
     not be rewritten."""
-    from apache_flink_spark.catalogs import reset_for_tests
-
-    reset_for_tests()
-    try:
-        te.sql("CREATE CATALOG rr_tp WITH ('type' = 'generic_in_memory')")
-        te.sql("USE CATALOG rr_tp")
-        te.sql(
-            f"CREATE TABLE price (v BIGINT) WITH ('connector' = "
-            f"'filesystem', 'path' = '{tmp_path}/price', "
-            "'format' = 'parquet')"
-        )
-        te.sql("INSERT INTO price SELECT 5")
-        spark.createDataFrame(
-            [(7,)], "price bigint"
-        ).createOrReplaceTempView("quotes")
-        # column named `price` selected from a DIFFERENT table
-        assert te.sql("SELECT price FROM quotes").collect()[0].price == 7
-        # table position still resolves to the catalog table
-        assert te.sql("SELECT v FROM price").collect()[0].v == 5
-    finally:
-        reset_for_tests()
+    te = TableEnvironment(spark=spark.newSession())
+    te.sql("CREATE CATALOG rr_tp WITH ('type' = 'generic_in_memory')")
+    te.sql("USE CATALOG rr_tp")
+    te.sql(
+        f"CREATE TABLE price (v BIGINT) WITH ('connector' = "
+        f"'filesystem', 'path' = '{tmp_path}/price', "
+        "'format' = 'parquet')"
+    )
+    te.sql("INSERT INTO price SELECT 5")
+    te.spark.createDataFrame(
+        [(7,)], "price bigint"
+    ).createOrReplaceTempView("quotes")
+    # column named `price` selected from a DIFFERENT table
+    assert te.sql("SELECT price FROM quotes").collect()[0].price == 7
+    # table position still resolves to the catalog table
+    assert te.sql("SELECT v FROM price").collect()[0].v == 5
 
 
 def test_ctas_distributed_replace_is_staged(te, spark, sf_dir):
@@ -267,7 +255,7 @@ def test_ctas_distributed_replace_is_staged(te, spark, sf_dir):
 def test_show_tables_builtin_ilike_and_bad_db(te, spark):
     """r7 review #4/#8: SHOW TABLES ILIKE works in the built-in catalog;
     a nonexistent database in a qualified listing errors loudly."""
-    from apache_flink_spark.catalogs import CatalogError, reset_for_tests
+    from apache_flink_spark.catalogs import CatalogError
 
     # Spark lower-cases temp-view names in the catalog — ILIKE still has
     # to match case-insensitively against the PATTERN's case
@@ -283,13 +271,10 @@ def test_show_tables_builtin_ilike_and_bad_db(te, spark):
         ]
     finally:
         spark.catalog.dropTempView("ilikeprobe")
-    reset_for_tests()
-    try:
-        te.sql("CREATE CATALOG rr_st WITH ('type' = 'generic_in_memory')")
-        with pytest.raises(CatalogError, match="does not exist in catalog"):
-            te.sql("SHOW TABLES FROM rr_st.no_such_db")
-    finally:
-        reset_for_tests()
+    te = TableEnvironment(spark=spark.newSession())
+    te.sql("CREATE CATALOG rr_st WITH ('type' = 'generic_in_memory')")
+    with pytest.raises(CatalogError, match="does not exist in catalog"):
+        te.sql("SHOW TABLES FROM rr_st.no_such_db")
 
 
 def test_cep_until_gates_or_where(spark):

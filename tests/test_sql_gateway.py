@@ -7,12 +7,17 @@ errors surfacing at fetch). Oracle: direct spark.sql on the same session.
 
 from __future__ import annotations
 
+import gc
 import json
+import sys
+import threading
 import time
 import urllib.request
+import weakref
 
 import pytest
 
+from apache_flink_spark.session import session_state
 from apache_flink_spark.sql_gateway import (
     GatewayError,
     OperationStatus,
@@ -127,6 +132,109 @@ def test_session_isolation_temp_views(service):
     finally:
         service.close_session(s1)
         service.close_session(s2)
+
+
+def test_session_isolation_ddl_table_writes(service, tmp_path):
+    # the same table name in two sessions, over two paths
+    s1, s2 = service.open_session(), service.open_session()
+    try:
+        for h, sub in ((s1, "a"), (s2, "b")):
+            service.configure_session(
+                h,
+                "CREATE TABLE gw_iso_t (x INT) WITH ('connector' = "
+                f"'filesystem', 'path' = '{tmp_path / sub}', "
+                "'format' = 'parquet')",
+            )
+        _run(service, s1, "INSERT INTO gw_iso_t VALUES (1), (2)")
+        assert list((tmp_path / "a").glob("*.parquet"))
+        assert not list((tmp_path / "b").glob("*.parquet"))
+        assert _run(service, s1, "SELECT count(*) FROM gw_iso_t") == [(2,)]
+        assert _run(service, s2, "SELECT count(*) FROM gw_iso_t") == [(0,)]
+    finally:
+        service.close_session(s1)
+        service.close_session(s2)
+
+
+def test_session_isolation_view_ddl(service):
+    s1, s2 = service.open_session(), service.open_session()
+    try:
+        ddl = {
+            h: f"CREATE TEMPORARY VIEW gw_vv AS SELECT {x} AS x"
+            for h, x in ((s1, 1), (s2, 2))
+        }
+        for h, stmt in ddl.items():
+            service.configure_session(h, stmt)
+        for h, stmt in ddl.items():
+            assert _run(service, h, "SHOW CREATE VIEW gw_vv") == [(stmt,)]
+    finally:
+        service.close_session(s1)
+        service.close_session(s2)
+
+
+def test_session_isolation_current_catalog(service):
+    s1, s2 = service.open_session(), service.open_session()
+    try:
+        service.configure_session(
+            s1, "CREATE CATALOG gw_c1 WITH ('type' = 'generic_in_memory')"
+        )
+        service.configure_session(s1, "USE CATALOG gw_c1")
+        assert _run(service, s1, "SHOW CURRENT CATALOG") == [("gw_c1",)]
+        assert _run(service, s2, "SHOW CURRENT CATALOG") == [
+            ("spark_catalog",)
+        ]
+    finally:
+        service.close_session(s1)
+        service.close_session(s2)
+
+
+def test_every_fresh_session_resolves_flink_functions(spark):
+    # sessions opened and dropped in turn: a new one may take a dropped
+    # one's address, and must still get its own functions
+    svc = SqlGatewayService(spark=spark)
+    try:
+        for _ in range(30):
+            h = svc.open_session()
+            assert _run(svc, h, "SELECT is_true(TRUE)") == [(True,)]
+            svc.close_session(h)
+    finally:
+        svc.close()
+
+
+def test_session_state_is_created_once_under_contention(spark):
+    # more threads than cores race to create a new session's state
+    fresh, n = spark.newSession(), 16
+    barrier, got = threading.Barrier(n), []
+
+    def grab():
+        barrier.wait(timeout=10)
+        got.append(session_state(fresh))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=grab) for _ in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=10)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(got) == n and all(st is got[0] for st in got)
+
+
+def test_closed_session_is_released(service):
+    # its fixture tables hold the session; closing it must let it go.
+    # pyspark's RDD.toDF holds the newest session, so two are opened and
+    # the first is checked.
+    refs = []
+    for _ in range(2):
+        h = service.open_session()
+        refs.append(weakref.ref(service._session(h).tenv.spark))
+        assert _run(service, h, "SELECT count(*) FROM nation") == [(25,)]
+        service.close_session(h)
+    gc.collect()
+    assert refs[0]() is None
 
 
 def test_configure_session_rejects_queries(service, session):

@@ -65,6 +65,14 @@ def test_normalisation_strips_leading_comments_and_trailing_semicolon():
     assert classify("SELECT 'a;'").text == "SELECT 'a;'"
     assert classify("SELECT 'a;").text == "SELECT 'a;"
     assert classify("SELECT 1;;").text == "SELECT 1"
+    # trailing comments go too, outside literals
+    for query in ("SHOW JOBS -- all", "SHOW JOBS;  -- all", "SHOW JOBS /* c */"):
+        assert classify(query).text == "SHOW JOBS"
+    assert classify("SET 'k' = 'v' -- c").text == "SET 'k' = 'v'"
+    assert classify("SELECT '--x'").text == "SELECT '--x'"
+    assert classify("SELECT 1 /* it's */ -- x").text == "SELECT 1"
+    hinted = "SELECT * FROM t /*+ OPTIONS('a'='b') */"
+    assert classify(hinted + " -- c").text == hinted
 
 
 def test_configures_reads_the_leading_verb():
@@ -130,6 +138,10 @@ def _rows(df):
         ("-- c\nSHOW MODELS", "SHOW MODELS"),
         ("/* c */ SHOW CURRENT CATALOG", "SHOW CURRENT CATALOG"),
         ("-- c\nSHOW CREATE TABLE stmt_ddl", "SHOW CREATE TABLE stmt_ddl"),
+        ("SHOW JOBS -- all", "SHOW JOBS"),
+        ("SHOW JOBS;  -- all", "SHOW JOBS"),
+        ("SHOW MODELS /* c */", "SHOW MODELS"),
+        ("SET 'stmt.c.key' = 'v' -- c", "SET 'stmt.c.key' = 'v'"),
     ],
 )
 def test_decorated_statement_returns_what_the_bare_one_does(

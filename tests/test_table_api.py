@@ -466,26 +466,20 @@ def test_r7_join_lateral_inner_vs_left_outer(spark):
 def test_r7_tenv_conveniences(spark, sf_dir):
     """pyflink table_environment.py surface: sql_query/execute_sql/
     list_catalogs/list_modules/get_current_*/use_*/from_elements."""
-    from apache_flink_spark.catalogs import reset_for_tests
-
-    te = _tenv(spark, sf_dir)
-    reset_for_tests()
-    try:
-        t = te.sql_query("SELECT 1 AS one")
-        assert t.to_df().collect()[0].one == 1
-        assert te.execute_sql("SELECT 2 AS two").collect()[0].two == 2
-        assert "spark_catalog" in te.list_catalogs()
-        assert te.list_modules() == ["core"]
-        assert te.list_full_modules() == [("core", True)]
-        assert te.get_current_catalog() == "spark_catalog"
-        te.sql("CREATE CATALOG conv_cat WITH ('type' = 'generic_in_memory')")
-        te.use_catalog("conv_cat")
-        assert te.get_current_catalog() == "conv_cat"
-        assert te.get_current_database() == "default"
-        te.use_catalog("spark_catalog")
-        assert te.from_elements([(1, "a")], "x int, s string").count() == 1
-    finally:
-        reset_for_tests()
+    te = _tenv(spark.newSession(), sf_dir)
+    t = te.sql_query("SELECT 1 AS one")
+    assert t.to_df().collect()[0].one == 1
+    assert te.execute_sql("SELECT 2 AS two").collect()[0].two == 2
+    assert "spark_catalog" in te.list_catalogs()
+    assert te.list_modules() == ["core"]
+    assert te.list_full_modules() == [("core", True)]
+    assert te.get_current_catalog() == "spark_catalog"
+    te.sql("CREATE CATALOG conv_cat WITH ('type' = 'generic_in_memory')")
+    te.use_catalog("conv_cat")
+    assert te.get_current_catalog() == "conv_cat"
+    assert te.get_current_database() == "default"
+    te.use_catalog("spark_catalog")
+    assert te.from_elements([(1, "a")], "x int, s string").count() == 1
 
 
 def test_r7_over_following(spark):

@@ -3,7 +3,7 @@
 The driver harness passes its OWN SparkSession; r1 failed 0/50 because
 ``catalog.load_tables`` assumed ``get_spark()`` had pre-set
 ``spark.sql.legacy.parquet.nanosAsLong``. These tests strip the engine confs
-from the shared session (emulating a vanilla ``builder.getOrCreate()`` — a
+from a fresh session (emulating a vanilla ``builder.getOrCreate()`` — a
 second JVM per test would be prohibitively slow) and verify the registry
 re-applies them on entry. scripts/vanilla_smoke.py does the full
 separate-process sweep.
@@ -29,23 +29,12 @@ _ENGINE_CONFS = (
 
 @pytest.fixture()
 def vanilla(spark):
-    """Strip engine confs + catalog cache so the next query sees a session
-    that looks freshly built by an external harness."""
-    saved = {}
+    """A fresh session with the engine confs stripped, so the next query
+    sees a session that looks freshly built by an external harness."""
+    session = spark.newSession()
     for k in _ENGINE_CONFS:
-        try:
-            saved[k] = spark.conf.get(k)
-            spark.conf.unset(k)
-        except Exception:
-            saved[k] = None
-    catalog._CACHE.clear()
-    catalog._ACTIVE_VIEWS.clear()
-    yield spark
-    for k, v in saved.items():
-        if v is not None:
-            spark.conf.set(k, v)
-    catalog._CACHE.clear()
-    catalog._ACTIVE_VIEWS.clear()
+        session.conf.unset(k)
+    return session
 
 
 @pytest.mark.parametrize(
