@@ -7,6 +7,11 @@ chosen for correctness-vs-oracle (UTC timestamps) and for scale (AQE on,
 adaptive skew handling) — the same settings hold on a real cluster; only
 ``shuffle.partitions`` / memory sizing change with cluster size. What the
 engine records about one session's objects is its :class:`SessionState`.
+
+A local session built by :func:`get_spark` runs its Python workers under the
+engine's daemon, :mod:`apache_flink_spark.worker_daemon`, which spares every
+Python task a re-read of each zip directory on ``sys.path``. The daemon conf
+is static, so :func:`configure_session` cannot give it to a caller's session.
 """
 
 from __future__ import annotations
@@ -109,6 +114,7 @@ def get_spark(
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
+    extra_conf = dict(extra_conf or {})
 
     builder = SparkSession.builder.appName(app_name).master(master)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -129,7 +135,21 @@ def get_spark(
     wh = os.environ.get("SPARK_GRAFT_WAREHOUSE_DIR")
     if wh:
         builder = builder.config("spark.sql.warehouse.dir", wh)
-    for k, v in (extra_conf or {}).items():
+    # Python workers of a local master see the driver's filesystem, so they
+    # can run the engine's daemon and import the package from where the
+    # driver did. On a cluster, a daemon that cannot import would break
+    # every Python UDF, so there the workers keep pyspark's own.
+    if master == "local" or master.startswith("local["):
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        caller_path = extra_conf.pop("spark.executorEnv.PYTHONPATH", "")
+        builder = builder.config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (pkg_parent, caller_path) if p),
+        )
+        builder = builder.config(
+            "spark.python.daemon.module", "apache_flink_spark.worker_daemon"
+        )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
